@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every catalog query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -15,18 +15,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft-bench", cores = cpus)
     Engine.tuneLogging()
 
     val failed = scala.collection.mutable.ListBuffer[String]()
@@ -42,7 +31,7 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           true
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failed += name
           false
@@ -64,7 +53,7 @@ object Bench {
       () => SparkEntry.queries("e1_knn_brute")(spark, warmSf)
     ).foreach { q =>
       try q().write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
 
     // best-of-N per query (SPARK_GRAFT_REPS, default 3): this host shows
@@ -125,7 +114,7 @@ object Bench {
         java.nio.file.Files.move(tmp, target,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] could not write $f: ${e.getMessage}")
       }
     }

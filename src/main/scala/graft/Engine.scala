@@ -68,9 +68,17 @@ object Engine {
 
 /** Uniform batch access to the driver-generated parquet tables.
   *
-  * At 100 TB these reads are the scan edge: keep them bare `spark.read.parquet`
-  * so Catalyst's parquet source handles column pruning + predicate pushdown +
-  * partition pruning; never materialize or cache a full table here.
+  * Each table's schema is inferred once per (SparkContext, dataset dir,
+  * table) through [[SessionMemo]], whose contract is that a dataset dir is
+  * immutable for the life of a SparkContext; every later load reads through
+  * `spark.read.schema(memoized).parquet(path)`, so building a query starts
+  * no schema-inference job. Only the schema is shared: each call returns a
+  * fresh relation (own attribute ids, so a self-join of two loads resolves
+  * unambiguously) and lists its files anew.
+  *
+  * At 100 TB these reads are the scan edge: Catalyst's parquet source
+  * handles column pruning + predicate pushdown + partition pruning; never
+  * materialize or cache a full table here.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -79,11 +87,16 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // If events.parquet stores timestamp[ns], read it as int64 nanos
-    // (exact) regardless of which session built us — the driver's
-    // Verify/Bench sessions don't go through Engine.session. (A µs file
-    // is unaffected by this flag; tsToMicros below handles both.)
+    // (exact) regardless of which session built us — a caller's session
+    // need not go through Engine.session. Both the inference and every
+    // read of the memoized schema need the flag. (A µs file is unaffected
+    // by this flag; tsToMicros below handles both.)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val schema = SessionMemo.memo(spark, sfDir, s"schema:$name") {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** `events.ts` normalized to int64 epoch-MICROS, whatever the parquet

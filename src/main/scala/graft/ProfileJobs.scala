@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1): run catalog queries
   * through the noop sink and report, per query, the structural costs the
@@ -63,7 +64,7 @@ object ProfileJobs {
     // one warmup (JIT/codegen/parquet footers)
     try SparkEntry.queries("e1_knn_brute")(spark, "/root/testdata/sf0.001")
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     names.foreach { n =>
       val walls = (1 to reps).map { _ =>

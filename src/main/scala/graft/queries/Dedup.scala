@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -29,28 +29,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * replays the full training chains from the parquet data; only the Spark
   * side shares the one deterministic result.
   */
-/** The session-scoped (SparkContext, dataset dir, tag) memo behind the
-  * fixture caches ([[Models]], [[Dedup]]). Entries checkpointed under a
-  * stopped context are unusable, so any lookup from a NEW context first
-  * drops every foreign entry — a JVM cycling sessions (test suites)
-  * cannot accumulate dead fixtures. */
-private[queries] object SessionMemo {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  def memo[T <: AnyRef](s: SparkSession, d: String, tag: String)(build: => T): T = {
-    val ctx = s.sparkContext.applicationId + "@" + s.sparkContext.startTime
-    val key = ctx + ":" + d + ":" + tag
-    val hit = cache.get(key)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      cache.keySet.removeIf(k => !k.startsWith(ctx))
-      val built = build
-      cache.put(key, built)
-      built
-    }
-  }
-}
-
 object Models {
 
   /** Fused coarse + raw-PQ fixture in the gate-default geometry:

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.Relational._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window

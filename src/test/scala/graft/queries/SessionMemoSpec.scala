@@ -1,13 +1,17 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The session-fixture contract ([[SessionMemo]], via [[Dedup]] /
   * [[Models]]): build ONCE per (SparkContext, dataset dir, tag), and keep
   * datasets strictly isolated — a fixture trained on one scale factor must
   * never be served for another, or every downstream gate silently computes
   * against the wrong corpus. This spec pins both halves with the live
-  * dedup fixtures on two real dataset dirs in one session.
+  * dedup fixtures on two real dataset dirs in one session, and the table
+  * schemas [[Tables.load]] memoizes under the same contract: the memoized
+  * schema is the one a fresh read infers, a repeated load starts no Spark
+  * job, and each load is still a fresh relation.
   */
 class SessionMemoSpec extends SparkSpec {
 
@@ -54,5 +58,76 @@ class SessionMemoSpec extends SparkSpec {
     val compIds = comp.select("id").collect().map(_.getLong(0)).toSet
     assert(compIds.subsetOf(canonIds),
       "component labels reference ids outside the dataset's canonical docs")
+  }
+
+  /** Jobs started while `body` runs. Listener events arrive on a bus
+    * thread, so a marker job is run after `body` and the count is read
+    * once the marker's start has been delivered: the bus keeps order, so
+    * every job `body` started has been seen by then. */
+  private def jobsDuring(body: => Unit): Int = {
+    val marker = "session-memo-marker-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "the marker job's start never reached the listener")
+      seen.size - 1
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Tables.load serves the schema a fresh read infers, for every table at both scales") {
+    for (d <- Seq(small, big); t <- Tables.names) {
+      val loaded = Tables.load(spark, d, t).schema
+      assert(loaded == spark.read.parquet(s"$d/$t.parquet").schema,
+        s"$d/$t: memoized schema differs from a fresh inference")
+      // twice: the second load reads through the memoized schema
+      assert(Tables.load(spark, d, t).schema == loaded, s"$d/$t: second load changed schema")
+    }
+    // events.ts is the drift-prone column: the memoized read must decode
+    // the same values a fresh inferring read does
+    val ev = Tables.load(spark, small, "events")
+    assert(ev.schema("ts") == spark.read.parquet(s"$small/events.parquet").schema("ts"))
+    assert(ev.exceptAll(spark.read.parquet(s"$small/events.parquet")).isEmpty,
+      "memoized-schema read of events decodes rows a fresh read does not")
+  }
+
+  test("a repeated Tables.load starts no Spark job; a bare inferring read does") {
+    val path = s"$small/orders.parquet"
+    // the counter must see what the memo removes: inference is a job
+    assert(jobsDuring(spark.read.parquet(path)) >= 1,
+      "a bare spark.read.parquet started no job — the counter cannot see inference")
+    // first touch infers (the memo may be cold); every load after it must not
+    for (t <- Tables.names) Tables.load(spark, small, t)
+    val n = jobsDuring {
+      for (t <- Tables.names) Tables.load(spark, small, t)
+      Tables.events(spark, small)
+    }
+    assert(n == 0, s"repeated loads started $n Spark jobs")
+  }
+
+  test("two loads of one table are distinct relations: a self-join resolves") {
+    import org.apache.spark.sql.functions.{col, sum}
+    def ids(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert((ids(Tables.load(spark, small, "events")) & ids(Tables.load(spark, small, "events"))).isEmpty,
+      "two loads share attribute ids — the memo must hold the schema, not the relation")
+    val expected = Tables.events(spark, small).where(col("user_id").isNotNull)
+      .groupBy("user_id").count()
+      .agg(sum(col("count") * col("count"))).head().getLong(0)
+    for ((a, b) <- Seq(
+        (Tables.events(spark, small), Tables.events(spark, small)),
+        (Tables.load(spark, small, "events"), Tables.load(spark, small, "events")))) {
+      val joined = a.join(b, a("user_id") === b("user_id")).count()
+      assert(joined == expected, s"self-join gave $joined rows, expected $expected")
+    }
   }
 }
