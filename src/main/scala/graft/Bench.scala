@@ -14,7 +14,7 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.defaultCores
     val spark = Engine.session("graft-bench", cores = cpus)
     Engine.tuneLogging()
 

@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory with the engine's standard tuning.
   *
-  * Local testing runs `local[32]` in one JVM, but every knob here is chosen
+  * Local runs use `local[cores]` in one JVM, but every knob here is chosen
   * for the 1000-executor / 100 TB deployment shape and merely scaled down:
   *   - AQE on: runtime coalescing + skew-join splitting replaces hand-tuned
   *     partition counts at any scale.
-  *   - shuffle.partitions=32 locally (= cores); on a real cluster this is
+  *   - shuffle.partitions = cores locally; on a real cluster this is
   *     overridden per-deploy (2-3x total cores) and AQE coalesces down.
   *   - autoBroadcastJoinThreshold left at default (10 MB): dimension tables
   *     (region/nation/customer/supplier/part at TPC-H-ish ratios) broadcast;
@@ -28,7 +28,11 @@ object Engine {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
-  def session(appName: String = "graft", cores: String = "32"): SparkSession = {
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every core of this host. */
+  def defaultCores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  def session(appName: String = "graft", cores: String = defaultCores): SparkSession = {
     val b = SparkSession
       .builder()
       .appName(appName)

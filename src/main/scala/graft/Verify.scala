@@ -28,7 +28,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Engine.session("graft-verify", cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Engine.session("graft-verify")
     Engine.tuneLogging()
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (driver leaves this unset → full catalog).

@@ -1,339 +1,72 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import graft.Commit
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
-/** Parquet-backed store for trained ANN models — the deployment contract
-  * behind every search operator here: TRAIN ONCE (on a hash-sample at
-  * 100 TB), STORE the model as plain tables, and let every search session
-  * read + broadcast it instead of retraining. The in-session twin of this
-  * contract is [[graft.queries.Models]]'s checkpoint cache; this store is
-  * what outlives the session.
+/** Parquet-backed store for trained ANN models: train once, store the
+  * model as plain tables, and let every search session read and broadcast
+  * it instead of retraining. [[graft.queries.Models]]'s checkpoint cache is
+  * the in-session twin; this store is what outlives the session.
   *
-  * A model is just tables, so the store is just parquet — no registry,
-  * no serialization format, engine-portable by construction:
-  *   - `v<N>/centroids` (cluster, c): the coarse quantizer — k rows.
-  *   - `v<N>/assigned`  (vec_id, v, dxx, cluster, sq): the corpus
-  *     assignment; at scale this is "the index" — (cell, codes) stored
-  *     once per vector — and dwarfs everything else.
-  *   - `v<N>/codes`     (vec_id, sub, code, sq): PQ codes (raw or residual).
-  *   - `v<N>/books`     (sub, cluster, c): PQ codebooks — m·k rows.
-  *   - `meta`           one row of geometry (m, k, coarseK, dims) plus the
-  *     VERSION POINTER — which v<N> directory is the committed model.
+  * Layout: each saved model is a self-contained, immutable directory
+  * `dir/v<N>` holding
+  *   - `assigned`  (vec_id, v, dxx, cluster, sq): the corpus assignment;
+  *   - `centroids` (cluster, c): the coarse quantizer, k rows;
+  *   - `codes`     (vec_id, sub, code, sq): PQ codes;
+  *   - `books`     (sub, cluster, c): PQ codebooks, m·k rows;
+  *   - `meta`      one row of geometry (m, k, coarse_k, dims).
+  * Readers serve the highest `v<N>`. Doubles round-trip parquet bit-exactly
+  * and every serving fold orders by (cluster, sub), so a loaded model
+  * reproduces the training run's search rows exactly.
   *
-  * Doubles round-trip parquet bit-exactly and every serving fold orders
-  * by (cluster, sub) packs — never by storage order — so a loaded model
-  * reproduces the training run's search results row-for-row
-  * (`ModelStoreSpec` pins this end-to-end through [[Similarity
-  * .ivfPqSearchFrom]]).
+  * Commit: a save writes all five tables under `dir/.stage-<uuid>` and
+  * then renames that directory to `v<N>`, N = 1 + the highest version at
+  * commit time, with [[graft.Commit.renameExclusive]]; a taken N moves on
+  * to N+1. A failed save deletes its stage and leaves no `v<N>`, so a
+  * reader sees a whole old model or a whole new one, and two concurrent
+  * saves land as two whole versions.
   *
-  * Crash and concurrency contract (single writer, any readers):
-  *   - Data tables are IMMUTABLE once committed: every save writes to a
-  *     FRESH v<N> directory and never touches a committed one, so a
-  *     reader — whether it resolved before the save started or reads
-  *     mid-save — always serves a COMPLETE model, old or new, never a
-  *     mix. This closes the window the round-9 commit-marker left open
-  *     (same-geometry in-place overwrite could expose partial tables to
-  *     a concurrent reader).
-  *   - `meta` is the COMMIT MARKER and the pointer swap in one write: it
-  *     lands serially, only after every data write has been joined and
-  *     found successful. The new meta is written to a hidden temp path
-  *     and SWAPPED in with two FS metadata ops — the OLD meta is STASHED
-  *     aside (rename to `.meta.bak.v<N>`), then the temp renamed in —
-  *     never rebuilt in place over a whole Spark write job. The only
-  *     window where `meta` is absent is between those two renames, and
-  *     in that window the stash IS the old committed meta: [[readMeta]]
-  *     falls back to the newest stash when meta is missing (serving the
-  *     old complete model — exactly the documented reader grace) and
-  *     additionally retries briefly when version directories exist but
-  *     neither meta nor stash does. A save that dies mid-write leaves a
-  *     garbage v<N> directory and the OLD meta (or its stash) still
-  *     pointing at the old complete model; version numbers allocate PAST
-  *     any existing v<N> directory (one FS listing, no Spark job), so a
-  *     new save never overwrites the garbage — it supersedes it, and GC
-  *     sweeps it.
-  *   - After a successful swap, GC (best effort, FS-only) keeps the new
-  *     version plus the PREVIOUSLY COMMITTED predecessor — the version
-  *     pointer re-read INSIDE the swap section immediately before the
-  *     install (job-free via the `_version_<N>` sidecar), not a value
-  *     captured at save start: a sibling save may commit during this
-  *     save's long data-write phase, and its just-committed version must
-  *     take the grace slot, not a stale predecessor. Committed-by-pointer
-  *     counts as complete even on deployments whose committer emits no
-  *     _SUCCESS markers; the fallback (legacy stores with no readable
-  *     pointer) is the latest predecessor whose four parts all carry
-  *     _SUCCESS (or, when this save itself produced no markers, whose
-  *     parts are all non-empty). Crash garbage never consumes the grace
-  *     slot. The kept predecessor lets a reader that resolved just
-  *     before the swap finish its scan. A reader must re-resolve
-  *     (re-call [[loadCoarsePq]]) rather than hold table handles across
-  *     two retrains; that one-version grace is the documented window.
-  *   - Writers are FENCED apart: each save atomically claims its
-  *     freshly allocated v<N> directory by creating a `.writer` marker
-  *     with overwrite=false, and a claim collision re-allocates HIGHER —
-  *     two racing saves land as two DISTINCT committed versions (last
-  *     swap wins the pointer; both data sets are complete), never as
-  *     interleaved writes into one path. GC only sweeps versions BELOW
-  *     the one it just committed (a higher dir is a re-allocated
-  *     concurrent writer or future-swept garbage) and never one with a
-  *     LIVE in-JVM claim (a lower-versioned sibling still writing looks
-  *     like crash garbage on disk; the claim registry tells them apart).
-  *     The allocation + claim and the pointer swap + GC sections are
-  *     additionally serialized within one JVM, so two in-process saves
-  *     always claim distinct versions and both commit. Writers in
-  *     separate processes get BEST-EFFORT loud
-  *     failure instead: claim collision throws, a swept in-flight dir is
-  *     caught by a pre-swap existence check AND a post-install
-  *     re-verification that rolls the pointer back to the stashed old
-  *     meta and throws — so a cross-process GC sweep racing this save
-  *     loses the save, never installs a pointer to deleted data. The
-  *     rollback never deletes at the shared meta path: it first CLAIMS
-  *     the installed meta with an atomic rename onto a writer-private
-  *     quarantine path (`.meta.rollback.<token>`), inspects ownership
-  *     THERE (the per-writer `_owner_<token>` marker, with the
-  *     `_version_<N>` sidecar as second factor) where no concurrent
-  *     install can supersede it, and only deletes the quarantined copy
-  *     once it is provably this save's own — a sibling process that
-  *     committed its meta in any window is handed its meta straight back
-  *     (or left untouched), never un-committed. A writer that dies
-  *     mid-rollback can leave an inert `.meta.rollback.<token>`
-  *     directory behind; readers never resolve through it and it is
-  *     safe to remove. The
-  *     residual exposure is a sweep landing AFTER the re-verification,
-  *     i.e. a process deleting data the pointer already serves — which
-  *     is the victim's GC keeping a different grace version; with more
-  *     than two uncoordinated retrainers, coordinate externally. The
-  *     pointer itself remains last-writer-wins — concurrent saves cannot
-  *     corrupt, but WHICH model ends up committed is a race.
+  * GC: after a commit, every `v<N>` below the two highest is deleted. A
+  * reader holding the previous model's tables survives one retrain; it
+  * must re-call [[loadCoarsePq]] to survive two. Stage directories and a
+  * legacy flat store (tables and `meta` directly under `dir`, still
+  * readable) are never deleted. Stores written by the earlier pointer
+  * layout (`dir/meta` naming a `v<N>` without its own `meta`) are not read.
   *
-  * Filesystem requirements: the fencing and the pointer swap rely on
-  * `create(overwrite=false)` being atomic-exclusive and `rename` being
-  * an atomic metadata operation — true on HDFS, FALSE on object stores
-  * (S3A's create is check-then-put, its rename a non-atomic O(data)
-  * copy). On LOCAL FS the rename is atomic but Hadoop's
-  * RawLocalFileSystem implements exclusive create as exists-then-create,
-  * so the `.writer` fence is best-effort ACROSS PROCESSES there (a
-  * sub-millisecond window in which two processes can both claim one
-  * version). In-JVM writers never hit that window: version allocation +
-  * claim run under the same `swapLock` as the pointer swap, so two
-  * in-process saves are always fenced onto distinct versions. Where
-  * cross-process prevention is impossible, a double-claim is first
-  * CONTAINED and then DETECTED: every writer stages its data under a
-  * writer-unique `.stage.<token>` directory inside the claimed version
-  * dir — two claimants of one version number can never write the same
-  * data paths — and each claim stamps the writer's owner token (pid +
-  * nonce) into the `.writer` marker. The save re-reads the token
-  * immediately before the pointer swap: a foreign token means another
-  * process claimed this version after us, and the save ABORTS loudly
-  * (removing only its own stage) with the old pointer still committed,
-  * while the fence-winning claimant promotes its UNSHARED staged tables
-  * into place and commits them clean — fail-loud for the loser, an
-  * uncorrupted commit for the survivor. (A claimant that dies mid-write
-  * leaves its inert stage dir inside the survivor's version directory;
-  * it shadows no data path and GC removes it with the version.) A fence
-  * marker that cannot be re-read is retried once; a persistent read
-  * failure aborts where the claim itself was non-atomic (local FS,
-  * object stores) but only warns on filesystems whose exclusive create
-  * is truly atomic — there the claim already proved single ownership
-  * and a false abort would be the only risk. [[saveCoarsePq]]
-  * detects object-store schemes and logs a loud warning; run the store
-  * on HDFS when cross-process concurrent writers are possible.
+  * Filesystem requirement: `rename` must be atomic (HDFS, local FS). On
+  * object stores a rename is a copy, so a reader can see a partial version.
   */
 object ModelStore {
 
   private val parts = Seq("assigned", "centroids", "codes", "books")
 
-  /** The committed meta row (m, k, coarse_k, dims, version), if any.
-    * `version = 0` marks a legacy (pre-versioning) store whose tables
-    * live directly under `dir`.
-    *
-    * When `meta` is absent but a `.meta.bak.v<N>` stash exists, the
-    * newest stash is read instead: during the two-rename swap window the
-    * stash IS the old committed meta (the documented one-version reader
-    * grace), and after a crash between the two renames it is the only
-    * surviving pointer to the still-intact old model. A missing or
-    * unreadable meta with NO stash is retried briefly (when `retry`) IF
-    * version directories exist under `dir` — the fingerprint of an
-    * install in flight rather than of an empty store. An empty or
-    * version-less store returns None at once. */
-  private def readMeta(
-      spark: SparkSession, dir: String,
-      retry: Boolean = true): Option[(Int, Int, Int, Int, Long)] = {
-    val metaPath = new Path(s"$dir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasVersionDirs: Boolean =
-      fs.exists(new Path(dir)) && fs.listStatus(new Path(dir))
-        .exists(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-    def latestStash: Option[Path] =
-      if (!fs.exists(new Path(dir))) None
-      else fs.listStatus(new Path(dir)).map(_.getPath)
-        .filter(_.getName.matches("\\.meta\\.bak\\.v\\d+"))
-        .sortBy(_.getName.stripPrefix(".meta.bak.v").toLong).lastOption
-    def readFrom(p: Path): Option[(Int, Int, Int, Int, Long)] = {
-      val df = spark.read.parquet(p.toString)
-      val versioned = df.columns.contains("version")
-      val row = df.select(col("m"), col("k"), col("coarse_k"), col("dims"),
-        (if (versioned) col("version") else lit(0L)).as("version"))
-        .collect().head
-      Some((row.getInt(0), row.getInt(1), row.getInt(2), row.getInt(3), row.getLong(4)))
-    }
-    val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-    def attempt(): Option[(Int, Int, Int, Int, Long)] = {
-      val out =
-        try {
-          if (fs.exists(metaPath)) Right(readFrom(metaPath))
-          else latestStash match {
-            case Some(stash) => Right(readFrom(stash))
-            case None => Right(None)
-          }
-        } catch { case scala.util.control.NonFatal(t) => Left(t) }
-      out match {
-        case Right(Some(meta)) => Some(meta)
-        case Right(None) if !retry || !hasVersionDirs => None
-        case other => // swap window (meta absent beside v dirs) or torn read
-          if (!retry || System.nanoTime() >= deadline)
-            other.fold(throw _, identity)
-          else { Thread.sleep(50); attempt() }
-      }
-    }
-    attempt()
-  }
-
-  /** The committed version pointer via the `_version_<N>` sidecar marker
-    * inside the meta directory — one FS listing, no Spark job. The
-    * sidecar is written beside the parquet meta on the temp path and
-    * travels with the install rename, so it can never disagree with the
-    * parquet pointer it sits next to. Metas written before the sidecar
-    * existed fall back to the parquet read (one Spark job, once — the
-    * next save writes the sidecar), as does a store whose meta is absent
-    * but whose `.meta.bak` stash survives a mid-swap crash: the stash
-    * pointer is what readers are serving, so GC's grace must honor it. */
-  private def readVersionPointer(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, dir: String): Option[Long] = {
-    val metaPath = new Path(s"$dir/meta")
-    val sidecar =
-      if (!fs.exists(metaPath)) None
-      else fs.listStatus(metaPath)
-        .map(_.getPath.getName).find(_.matches("_version_\\d+"))
-        .map(_.stripPrefix("_version_").toLong)
-    sidecar.orElse(readMeta(spark, dir, retry = false).map(_._5))
-  }
-
-  /** Atomically claim a version directory for this writer by creating
-    * its `.writer` marker with overwrite=false, stamped with the
-    * writer's owner token. A second writer that raced to the same
-    * version number fails loudly here — never by silently interleaving
-    * writes into the same paths. [[saveCoarsePq]] retries allocation on
-    * this failure, so two racing saves land as two DISTINCT versions
-    * instead of one corrupted one. On local FS, where exists-then-create
-    * lets two processes both "win" this claim, the token is the
-    * detection fallback: [[saveCoarsePq]] re-reads it before the pointer
-    * swap and aborts on a mismatch (see the object doc). */
-  private[operators] def claimVersion(
-      fs: org.apache.hadoop.fs.FileSystem, base: String, token: String = ""): Unit = {
-    try {
-      val out = fs.create(new Path(s"$base/.writer"), false)
-      try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    catch {
-      // ONLY an already-exists outcome is a claim collision. Any other
-      // IOException (transient FS error, permissions, quota) propagates
-      // with its real cause — mapping it to "concurrent writer" would
-      // misdiagnose the failure, burn all of [[allocateVersion]]'s
-      // re-allocation attempts, and litter a .writer-only dir per attempt.
-      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
-                _: java.nio.file.FileAlreadyExistsException) =>
-        throw new IllegalStateException(
-          s"version directory $base is already claimed by a concurrent writer", e)
-    }
-  }
-
-  /** Allocate the next version number PAST every existing v<N> directory
-    * (one FS listing, no Spark job — committed versions and crashed-save
-    * garbage alike are superseded, never overwritten) and claim it. A
-    * claim collision means another writer allocated the same number from
-    * the same listing; re-list and go higher, so concurrent saves are
-    * fenced apart onto distinct versions rather than interleaved. */
-  private def allocateVersion(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, token: String): Long = {
-    val root = new Path(dir)
-    var lastFailure: Throwable = null
-    (1 to 16).foreach { _ =>
-      val next = (if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.matches("v\\d+"))
-          .map(_.drop(1).toLong).foldLeft(0L)(math.max)
-      else 0L) + 1L
-      try { claimVersion(fs, s"$dir/v$next", token); return next }
-      catch { case e: IllegalStateException => lastFailure = e }
-    }
-    throw new IllegalStateException(
-      s"could not claim a model version under $dir after 16 attempts", lastFailure)
-  }
-
-  /** Serializes version allocation + claim AND the pointer swap + GC for
-    * writers inside one JVM, making the claim race-free and the two-FS-op
-    * meta install effectively atomic against in-process concurrency (the
-    * common "two sessions, one driver" case) — without it, two in-process
-    * threads on local FS could race RawLocalFileSystem's exists-then-
-    * create exactly like two processes. Only FS metadata ops ever run
-    * under it (never a Spark job), so the hold is microseconds. Writers
-    * in separate processes fall back to the loud-failure guarantees:
-    * claim collisions throw, a double-claim aborts at the fence re-read,
-    * and a lost rename race throws rather than leaving a torn pointer. */
-  private val swapLock = new Object
-
-  /** Version directories with a save IN FLIGHT in this JVM. GC must not
-    * mistake them for crash garbage: an in-flight dir is incomplete by
-    * definition, and on-disk state alone cannot distinguish "writer died"
-    * from "writer still writing" — this registry can, for the writers it
-    * can see. A cross-process in-flight writer is instead protected by
-    * the pre-swap existence check: if its directory was swept, its save
-    * fails LOUDLY rather than committing a pointer to deleted data. */
-  private val liveClaims = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val commitAttempts = 16
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Schemes whose rename is a non-atomic copy and whose exclusive-create
-    * is check-then-put — the store's fencing/swap guarantees do not hold
-    * there (see the object doc's filesystem requirements). */
   private val objectStoreSchemes =
     Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss", "oss", "cos", "swift")
 
-  /** Deterministic race-injection seams for SPECS ONLY (no-ops in
-    * production): a cross-process interleaving — another process's GC
-    * sweeping this writer's directory mid-save — cannot be staged from
-    * one JVM without a hook, so the spec plays the other process here.
-    *   - [[midSaveTestHook]]: after the version claim, before the data
-    *     writes (base path) — where a sibling save can be interleaved.
-    *   - [[preSwapTestHook]]: after the temp meta write, before the swap
-    *     section — where the pre-swap existence check must catch a sweep.
-    *   - [[postInstallTestHook]]: after the pointer rename, before the
-    *     post-install re-verification — where the rollback must engage.
-    *   - [[postQuarantineTestHook]]: inside the rollback, after the
-    *     installed meta was claimed onto the quarantine path — where a
-    *     sibling install landing at the shared path must survive. */
-  private[operators] var midSaveTestHook: String => Unit = _ => ()
-  private[operators] var preSwapTestHook: String => Unit = _ => ()
-  private[operators] var postInstallTestHook: String => Unit = _ => ()
-  private[operators] var postQuarantineTestHook: String => Unit = _ => ()
+  /** Committed version numbers under `root`, ascending: one listing. */
+  private def versions(fs: FileSystem, root: Path): Seq[Long] =
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).map(_.drop(1).toLong).sorted
+
+  /** Rename `stage` to the first free `v<N>` from `first` on; returns N. */
+  private[operators] def commit(fs: FileSystem, root: Path, stage: Path, first: Long): Long =
+    (first until first + commitAttempts)
+      .find(n => Commit.renameExclusive(fs, stage, new Path(root, s"v$n")))
+      .getOrElse(throw new IllegalStateException(
+        s"could not commit a model version under $root: v$first to " +
+          s"v${first + commitAttempts - 1} are all taken"))
 
   /** Persist a trained coarse+PQ model (the [[Similarity.coarsePqModels]]
-    * quadruple) under `dir` as a fresh immutable version, then swap the
-    * meta pointer. The four data tables land on independent paths inside
-    * the new version directory, so their write JOBS run concurrently
-    * (one driver thread each — Spark schedules concurrent jobs fine);
-    * serializing them would stack four small-job latencies for no
-    * isolation gain. All four outcomes are collected before rethrowing
-    * (no fail-fast `Future.sequence`): by the time the first failure
-    * surfaces, no sibling write of the same paths is still in flight, so
-    * a caller's retry cannot race it. The Spark actions run under
-    * `blocking` so the default pool grows past its cores-sized floor
-    * instead of serializing the writes. Only after every data write has
-    * succeeded is `meta` overwritten — commit marker and version-pointer
-    * swap in one serial write; see the object doc for the full contract. */
+    * quadruple) under `dir` as a new version. The five tables are written
+    * by concurrent jobs; every write finishes before any failure is
+    * rethrown, so a caller's retry never races a write still in flight. */
   def saveCoarsePq(
       dir: String, assigned: DataFrame, centroids: DataFrame,
       codes: DataFrame, books: DataFrame,
@@ -347,325 +80,52 @@ object ModelStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val scheme = Option(fs.getUri.getScheme).map(_.toLowerCase).getOrElse("file")
     if (objectStoreSchemes(scheme))
-      log.warn(s"ModelStore at $dir sits on '$scheme://', an object store " +
-        "whose rename is a non-atomic copy and whose create(overwrite=false) " +
-        "is check-then-put; the store's writer fencing and pointer-swap " +
-        "atomicity assume HDFS-like semantics (local FS, HDFS). Single-writer " +
-        "saves still commit correctly, but concurrent writers are NOT fenced " +
-        "here — coordinate retraining externally.")
-    // per-save owner token: claims and installs carry it so cross-process
-    // double-claims (possible on local FS, see the object doc) and
-    // meta-ownership at rollback time are identified by WRITER, never by
-    // version number alone
-    val token = s"${ProcessHandle.current().pid()}-${java.util.UUID.randomUUID()}"
-    // allocation + claim under swapLock: in-process sibling claims are
-    // thereby fully serialized (no two threads can race the local-FS
-    // exists-then-create), leaving only cross-process claimants to the
-    // detect-and-abort fence below. Metadata ops only — microsecond hold.
-    val next = swapLock.synchronized { allocateVersion(fs, dir, token) }
-    val base = s"$dir/v$next"
-    // every DATA write lands under a writer-unique stage dir inside the
-    // claimed version dir: even if a local-FS double-claim puts two
-    // processes on this version number, they can never write the same
-    // data paths — the fence winner promotes its own staged tables (four
-    // FS renames at swap time, no data rewritten), the loser aborts and
-    // removes only its own stage
-    val stageBase = s"$base/.stage.$token"
-    liveClaims.add(base) // shield this in-flight dir from a sibling's GC
-    midSaveTestHook(base)
+      log.warn(s"ModelStore at $dir sits on '$scheme://', an object store whose " +
+        "rename is a non-atomic copy: a reader may see a partially copied version")
+    val stage = new Path(root, s".stage-${java.util.UUID.randomUUID()}")
+    val meta = Seq((m, k, coarseK, dims)).toDF("m", "k", "coarse_k", "dims")
     try {
-    // the outcome is materialized with a catch-ALL, not scala.util.Try:
-    // Try only catches NonFatal, so e.g. an InterruptedException would
-    // fail its Future, make Future.sequence fail fast, and rethrow from
-    // Await while sibling writes are still in flight — the exact retry
-    // race the quiesce-before-rethrow contract rules out. Every write
-    // future here always SUCCEEDS (with Option[Throwable]), so the
-    // sequence can only return after all four writes have quiesced.
-    val writes = Seq(assigned, centroids, codes, books).zip(parts)
-      .map { case (df, name) =>
-        Future(blocking {
-          try { df.write.mode("overwrite").parquet(s"$stageBase/$name"); None }
-          catch { case t: Throwable => Some(t) }
-        })
-      }
-    val outcomes = Await.result(Future.sequence(writes), Duration.Inf)
-    outcomes.flatten.foreach(t => throw t) // all writes quiesced; surface any failure
-    // pointer swap: build the new meta on a hidden temp path (a full
-    // parquet write job), then install it with two FS metadata ops —
-    // stash-old (rename to .meta.bak.v<N>) + rename-temp. A concurrent
-    // readMeta that lands in the gap BETWEEN those two ops reads the
-    // stash — the old committed meta, i.e. the documented reader grace;
-    // mode("overwrite") straight onto $dir/meta would instead leave meta
-    // missing/partial for the duration of a whole write job
-    val tmpMeta = new Path(s"$dir/.meta.tmp.v$next")
-    Seq((m, k, coarseK, dims, next)).toDF("m", "k", "coarse_k", "dims", "version")
-      .write.mode("overwrite").parquet(tmpMeta.toString)
-    // job-free pointer sidecar for the NEXT save's grace lookup; written
-    // on the temp path so it installs atomically with the meta. The owner
-    // token travels the same way: it makes the post-install rollback's
-    // ownership check exact (per-writer), where the version-numbered
-    // sidecar alone could be shared by a local-FS double-claim.
-    fs.create(new Path(tmpMeta, s"_version_$next"), true).close()
-    fs.create(new Path(tmpMeta, s"_owner_$token"), true).close()
-    preSwapTestHook(base)
-    swapLock.synchronized {
-    // pre-swap guard for CROSS-PROCESS writer races (in-JVM siblings are
-    // already shielded by liveClaims): if some other process's GC swept
-    // this writer's directory mid-save, fail loudly here — never commit a
-    // pointer to deleted data. The staged paths are what this writer
-    // wrote, so they are what the sweep check reads.
-    if (!parts.forall(p => fs.exists(new Path(s"$stageBase/$p")))) {
-      try fs.delete(tmpMeta, true) catch { case scala.util.control.NonFatal(_) => () }
-      throw new IllegalStateException(
-        s"in-flight version directory $base was swept by a concurrent " +
-          "writer's GC before the pointer swap; aborting instead of " +
-          "committing a dangling pointer")
-    }
-    // double-claim detection (the local-FS fence gap, object doc): the
-    // claim is exclusive-create on HDFS but exists-then-create on
-    // RawLocalFileSystem, so re-read the fence token here — where
-    // prevention may have failed, detect. A foreign token means another
-    // process claimed THIS version number after us; committing would race
-    // its promotion, so abort with the old pointer intact. A READ FAILURE
-    // is not a foreign token: retry once, and if it persists abort only
-    // where the claim itself was non-atomic — on exclusive-create
-    // filesystems the claim already proved single ownership, so an
-    // unreadable marker there is a warning, not a lost save.
-    def readFence(): Either[Throwable, String] =
-      try {
-        val in = fs.open(new Path(s"$base/.writer"))
-        try Right(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-        finally in.close()
-      } catch { case scala.util.control.NonFatal(t) => Left(t) }
-    val fence = readFence() match {
-      case Left(_) => Thread.sleep(50); readFence()
-      case ok => ok
-    }
-    def abortClaim(): Unit = {
-      try fs.delete(tmpMeta, true) catch { case scala.util.control.NonFatal(_) => () }
-      // our stage is writer-unique: removing it cannot touch the
-      // surviving claimant's data, and leaves the shared dir clean for it
-      try fs.delete(new Path(stageBase), true) catch { case scala.util.control.NonFatal(_) => () }
-    }
-    fence match {
-      case Right(t) if t == token => () // our fence held
-      case Right(_) =>
-        abortClaim()
-        throw new IllegalStateException(
-          s"version directory $base was double-claimed by a concurrent " +
-            "writer in another process (fence token mismatch — the local-FS " +
-            "exists-then-create window, see the ModelStore filesystem notes); " +
-            "aborting this save and leaving the surviving claimant's data " +
-            "untouched under its own stage")
-      case Left(err) if scheme != "file" && !objectStoreSchemes(scheme) =>
-        log.warn(s"fence marker $base/.writer could not be re-read before " +
-          s"the pointer swap ($err); proceeding — create(overwrite=false) " +
-          "is atomic-exclusive on this filesystem, so the claim itself " +
-          "already proved single ownership")
-      case Left(err) =>
-        abortClaim()
-        throw new IllegalStateException(
-          s"fence marker $base/.writer could not be re-read before the " +
-            "pointer swap (twice); on this filesystem the claim is not " +
-            s"exclusive, so ownership of $base cannot be verified — " +
-            "aborting the save with the old pointer intact", err)
-    }
-    // promote the staged tables into the version directory — FS renames
-    // only, inside the swap section, after the fence proved this writer
-    // is the version's sole owner
-    parts.foreach { p =>
-      val ok =
-        try fs.rename(new Path(s"$stageBase/$p"), new Path(s"$base/$p"))
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!ok) {
-        try fs.delete(tmpMeta, true) catch { case scala.util.control.NonFatal(_) => () }
-        throw new java.io.IOException(
-          s"failed to promote staged table $stageBase/$p into $base")
-      }
-    }
-    try fs.delete(new Path(stageBase), true) catch { case scala.util.control.NonFatal(_) => () }
-    // the grace predecessor is the version the pointer names RIGHT NOW,
-    // inside the swap section — not a value captured at save start: a
-    // sibling save may have committed during this save's data writes,
-    // and GC keeping a stale predecessor would sweep that just-committed
-    // version out from under its readers (job-free via the sidecar)
-    val gracePred = readVersionPointer(spark, fs, dir).filter(_ > 0L)
-    val metaPath = new Path(s"$dir/meta")
-    val bakMeta = new Path(s"$dir/.meta.bak.v$next")
-    val hadOld = fs.exists(metaPath)
-    if (hadOld && !fs.rename(metaPath, bakMeta))
-      throw new java.io.IOException(s"failed to stash $metaPath as $bakMeta")
-    if (!fs.rename(tmpMeta, metaPath)) {
-      // restore the stash so the old pointer stays served, then fail loud
-      if (hadOld) fs.rename(bakMeta, metaPath)
-      throw new java.io.IOException(s"failed to install $tmpMeta as $metaPath")
-    }
-    postInstallTestHook(base)
-    // post-install re-verification: the pre-swap check is check-then-act
-    // across processes — a concurrent writer's GC can sweep $base between
-    // that check and the rename. Re-verify AFTER the pointer landed; if
-    // the data vanished, roll the pointer back to the stashed old meta
-    // and fail loudly rather than leave a dangling pointer installed.
-    // (A sweep after THIS check means the other process deleted a version
-    // its own pointer-read saw as superseded — see the object doc's
-    // residual-exposure note.)
-    if (!parts.forall(p => fs.exists(new Path(s"$base/$p")))) {
-      // roll back WITHOUT ever deleting at the shared meta path. A naive
-      // check-ownership-then-delete is check-then-act across processes: a
-      // sibling could install its meta between the check and the delete
-      // and silently lose its commit. Instead the installed meta is first
-      // CLAIMED by an atomic rename onto a writer-private quarantine
-      // path; ownership is inspected THERE, where no concurrent install
-      // can supersede it, and deletion only ever targets the quarantined
-      // copy once it is provably ours. (HDFS writers never share a
-      // version, so they never reach this path concurrently; this is the
-      // local-FS ≤2-uncoordinated-writers hardening.)
-      val quarantine = new Path(s"$dir/.meta.rollback.$token")
-      val grabbed =
-        try fs.rename(metaPath, quarantine)
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!grabbed) {
-        // the installed meta is already gone: a sibling's pointer swap is
-        // mid-flight (its stash rename claimed the shared path) — its
-        // install will land on its own; touch nothing and lose this save
-        throw new IllegalStateException(
-          s"in-flight version directory $base was swept by a concurrent " +
-            "writer's GC after the pointer install, and a sibling " +
-            "process's pointer swap claimed this save's meta in the same " +
-            "window; left the sibling's swap undisturbed and aborted the save")
-      }
-      postQuarantineTestHook(base)
-      val ours =
-        try fs.exists(new Path(quarantine, s"_owner_$token")) &&
-          fs.exists(new Path(quarantine, s"_version_$next"))
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!ours) {
-        // the grab caught a sibling's just-committed meta: hand it back
-        // untouched. The restore targets an absent shared path (our grab
-        // emptied it), so it cannot clobber anything.
-        if (!(try fs.rename(quarantine, metaPath)
-              catch { case scala.util.control.NonFatal(_) => false }))
-          throw new IllegalStateException(
-            s"version directory $base was swept after the pointer install " +
-              "and a sibling's committed meta could not be restored from " +
-              s"the quarantine — restore $quarantine to $metaPath manually")
-        throw new IllegalStateException(
-          s"in-flight version directory $base was swept by a concurrent " +
-            "writer's GC after the pointer install, and a sibling process " +
-            "committed over this save's pointer in the same window; " +
-            "restored the sibling's committed meta and aborted the save")
-      }
-      // provably ours: the shared path is already clear (the grab moved
-      // our meta out), so deleting the quarantined copy can harm no one
-      try fs.delete(quarantine, true) catch { case scala.util.control.NonFatal(_) => () }
-      if (fs.exists(metaPath)) {
-        // a sibling committed at the shared path between the grab and
-        // this restore: its meta is newer than our stashed predecessor —
-        // leave its commit in place and drop the now-stale stash
-        if (hadOld) {
-          try fs.delete(bakMeta, true) catch { case scala.util.control.NonFatal(_) => () }
+      // catch-all rather than Try (which passes fatal errors through): each
+      // future always succeeds, so the sequence completes only once every
+      // write has quiesced
+      val writes = (Seq(assigned, centroids, codes, books, meta) zip (parts :+ "meta"))
+        .map { case (df, name) =>
+          Future(blocking {
+            try { df.write.parquet(s"$stage/$name"); None }
+            catch { case t: Throwable => Some(t) }
+          })
         }
-        throw new IllegalStateException(
-          s"in-flight version directory $base was swept by a concurrent " +
-            "writer's GC after the pointer install; a sibling process " +
-            "committed a new meta before the rollback could restore the " +
-            "predecessor — left the sibling's commit in place and aborted " +
-            "the save")
-      }
-      if (hadOld && !fs.rename(bakMeta, metaPath))
-        throw new IllegalStateException(
-          s"version directory $base was swept after the pointer install " +
-            s"AND the stashed old meta could not be restored — $dir needs " +
-            "manual repair (restore .meta.bak, or re-save)")
-      throw new IllegalStateException(
-        s"in-flight version directory $base was swept by a concurrent " +
-          "writer's GC after the pointer install; " +
-          (if (hadOld)
-             "rolled the pointer back to the previous committed model"
-           else
-             "removed the dangling pointer — the store has no committed " +
-               "model, as before the save") +
-          " and aborted the save")
+      Await.result(Future.sequence(writes), Duration.Inf).flatten.foreach(t => throw t)
+      commit(fs, root, stage, versions(fs, root).lastOption.getOrElse(0L) + 1)
+    } catch { case t: Throwable =>
+      try fs.delete(stage, true) catch { case NonFatal(_) => () }
+      throw t
     }
-    // unconditional, not gated on hadOld: a save that crashed mid-swap
-    // can leave a stash at THIS version number (its data dir gone, so
-    // allocation re-used the number); our meta is installed, so any
-    // same-numbered stash is stale — and the sweep below only covers
-    // v < next, which would let it linger shadowed until a later save
-    fs.delete(bakMeta, true)
-    // best-effort GC, FS-only: keep the just-committed version plus ONE
-    // grace predecessor for readers that resolved before the swap. The
-    // grace slot goes to the version the pointer named just before this
-    // install — committed is complete by construction, no markers needed
-    // — falling back (legacy stores with no recorded pointer) to the
-    // latest predecessor whose four parts all carry _SUCCESS, or, when
-    // this deployment's committer emits no markers at all (the
-    // just-written version has none), whose four parts are all
-    // non-empty. Everything else — older versions and incomplete crash
-    // garbage — is swept.
-    try {
-      def hasMarkers(v: Long): Boolean =
-        parts.forall(p => fs.exists(new Path(s"$dir/v$v/$p/_SUCCESS")))
-      def nonEmptyParts(v: Long): Boolean =
-        parts.forall { p =>
-          val d = new Path(s"$dir/v$v/$p")
-          fs.exists(d) && fs.listStatus(d).exists { s =>
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          }
-        }
-      val markersEmitted = hasMarkers(next)
-      // sweep candidates are versions BELOW the one just committed (a
-      // higher dir belongs to a concurrent writer that re-allocated past
-      // us, or to garbage the NEXT save will sit above and sweep) minus
-      // any in-flight sibling this JVM can see in liveClaims (a lower
-      // version whose writer simply hasn't finished yet is incomplete on
-      // disk, indistinguishable from crash garbage without the registry)
-      val others = fs.listStatus(root).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.matches("v\\d+"))
-        .map(_.drop(1).toLong)
-        .filter(v => v < next && !liveClaims.contains(s"$dir/v$v"))
-      def complete(v: Long): Boolean =
-        if (markersEmitted) hasMarkers(v) else nonEmptyParts(v)
-      val grace = gracePred.filter(others.contains)
-        .orElse(others.filter(complete).sorted.lastOption)
-      others.filterNot(grace.contains)
-        .foreach(v => fs.delete(new Path(s"$dir/v$v"), true))
-      // a save that crashed mid-swap leaves a stale .meta.tmp.vK (before
-      // the install rename) or .meta.bak.vK (after it) behind; sweep both
-      // (ours are gone — tmp renamed to meta, bak deleted) under the same
-      // below-next + not-in-flight rule
-      fs.listStatus(root).map(_.getPath)
-        .filter { p =>
-          p.getName.matches("\\.meta\\.(tmp|bak)\\.v\\d+") && {
-            val v = p.getName.replaceFirst("^\\.meta\\.(tmp|bak)\\.v", "").toLong
-            v < next && !liveClaims.contains(s"$dir/v$v")
-          }
-        }
-        .foreach(p => fs.delete(p, true))
-    } catch { case scala.util.control.NonFatal(_) => () }
-    } // swapLock
-    } finally liveClaims.remove(base)
+    try versions(fs, root).dropRight(2).foreach(v => fs.delete(new Path(root, s"v$v"), true))
+    catch { case NonFatal(e) => log.warn(s"ModelStore GC under $dir failed: $e") }
   }
 
-  /** Load a stored model: (assigned, centroids, codes, books), resolved
-    * through the meta pointer to the committed version directory (or the
-    * legacy flat layout for a pre-versioning store). Validates the
-    * stored geometry against the caller's expectation — searching with
-    * mismatched geometry would silently mis-rank, so it fails fast
-    * instead. */
+  /** Load the highest committed model under `dir` (or a legacy flat store)
+    * as (assigned, centroids, codes, books). The stored geometry must match
+    * the caller's: searching with another geometry would silently mis-rank,
+    * so a mismatch fails fast. */
   def loadCoarsePq(
       spark: SparkSession, dir: String,
       m: Int, k: Int, coarseK: Int, dims: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (sm, sk, sck, sd, version) = readMeta(spark, dir)
-      .getOrElse(throw new IllegalArgumentException(s"no committed model at $dir"))
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = versions(fs, root).lastOption match {
+      case Some(v) => s"$dir/v$v"
+      case None if fs.exists(new Path(root, "meta")) => dir // legacy flat store
+      case None => throw new IllegalArgumentException(s"no committed model at $dir")
+    }
+    val g = spark.read.parquet(s"$base/meta").select("m", "k", "coarse_k", "dims").head()
+    val (sm, sk, sck, sd) = (g.getInt(0), g.getInt(1), g.getInt(2), g.getInt(3))
     require(
       sm == m && sk == k && sck == coarseK && sd == dims,
       s"stored model geometry (m=$sm, k=$sk, coarseK=$sck, dims=$sd) does " +
         s"not match requested (m=$m, k=$k, coarseK=$coarseK, dims=$dims)")
-    val base = if (version == 0L) dir else s"$dir/v$version"
-    val Seq(assigned, centroids, codes, books) =
-      parts.map(name => spark.read.parquet(s"$base/$name"))
-    (assigned, centroids, codes, books)
+    val Seq(la, lc, lcodes, lbooks) = parts.map(name => spark.read.parquet(s"$base/$name"))
+    (la, lc, lcodes, lbooks)
   }
 }

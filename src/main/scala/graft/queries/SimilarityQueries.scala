@@ -578,8 +578,9 @@ object SimilarityQueries {
     * identical to e15's in-memory search; the oracle replays the full
     * training + search chain (same SQL as e15). `ModelStoreSpec` pins the
     * round-trip in isolation; this gate pins it against the cross-engine
-    * oracle. The store path is session-salted tmp, overwritten per call —
-    * a bench pass measures the full save + load + search round trip. */
+    * oracle. The store path is session-salted tmp, a new version per call
+    * (GC keeps two) — a bench pass measures the full save + load + search
+    * round trip. */
   def e21StoredModelSearch(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     val dir = java.nio.file.Paths.get(

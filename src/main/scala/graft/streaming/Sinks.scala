@@ -37,13 +37,11 @@ object Sinks {
     *   2. write to an ATTEMPT-UNIQUE `.tmp-<id>-<uuid>` staging dir —
     *      unique per attempt so a zombie driver racing a failover driver
     *      can never interleave part files into one staging dir;
-    *   3. rename staging → final; the first rename is the commit point.
-    *      A losing attempt either fails the rename (posix: dest exists) or
-    *      lands its staging dir NESTED inside the committed dir (Hadoop
-    *      rename-into-directory semantics) — invisible to readers either
-    *      way, because dot-prefixed paths are excluded from scans — and is
-    *      cleaned up below. On object stores without atomic rename, swap
-    *      the rename for a manifest commit; same protocol shape.
+    *   3. commit staging → final with [[graft.Commit.renameExclusive]];
+    *      the first rename is the commit point. A losing attempt leaves the
+    *      committed dir untouched and deletes its own staging dir. On
+    *      object stores without atomic rename, swap the rename for a
+    *      manifest commit; same protocol shape.
     * Readers see only committed per-batch directories (compact
     * periodically downstream). */
   def idempotentParquetSink(baseDir: String)(batch: Dataset[Row], batchId: Long): Unit = {
@@ -54,11 +52,9 @@ object Sinks {
       val tmp = new org.apache.hadoop.fs.Path(
         s"$baseDir/.tmp-$batchId-${java.util.UUID.randomUUID()}")
       batch.write.mode("overwrite").parquet(tmp.toString)
-      val won = fs.rename(tmp, fin) && !fs.exists(new org.apache.hadoop.fs.Path(fin, tmp.getName))
-      if (!won) {
-        // lost the commit race (or rename nested us inside the winner's
-        // dir): delete our attempt; the batch IS committed — by the winner
-        fs.delete(new org.apache.hadoop.fs.Path(fin, tmp.getName), true)
+      if (!graft.Commit.renameExclusive(fs, tmp, fin)) {
+        // lost the commit race: delete our attempt; the batch IS
+        // committed — by the winner
         fs.delete(tmp, true)
         if (!fs.exists(fin))
           throw new java.io.IOException(s"commit rename failed for batch $batchId")

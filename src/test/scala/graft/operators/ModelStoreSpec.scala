@@ -1,14 +1,21 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** The model store's end-to-end contract: a coarse+PQ model trained,
-  * saved to parquet, and reloaded must drive [[Similarity.ivfPqSearchFrom]]
-  * to EXACTLY the rows the in-memory model produces — train once, store,
-  * search forever, no retraining drift. Also pins the geometry guard. */
+/** The model store's contracts: a coarse+PQ model trained, saved to
+  * parquet, and reloaded drives [[Similarity.ivfPqSearchFrom]] to EXACTLY
+  * the rows the in-memory model produces; a reader sees a whole model,
+  * old or new, never a partial save; concurrent saves land as whole
+  * versions; GC keeps the two highest; a legacy flat store still loads;
+  * a geometry mismatch fails fast. */
 class ModelStoreSpec extends SparkSpec {
   import spark.implicits._
+
+  private type Model = (DataFrame, DataFrame, DataFrame, DataFrame)
+  private val g = (2, 2, 2, 4) // (m, k, coarseK, dims)
 
   private def planted = {
     // two well-separated cells with in-cell jitter: searches have real
@@ -20,47 +27,64 @@ class ModelStoreSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
   }
 
+  /** Model A from the planted corpus, or a different model B from its
+    * mirrored embeddings; trained once per suite and checkpointed, so the
+    * saves and searches below do not re-run the training plan. */
+  private def train(mirrored: Boolean): Model = {
+    val docs = if (!mirrored) planted
+      else planted.select($"vec_id", reverse($"embedding").as("embedding"))
+    val (a, c, codes, books) = Similarity.coarsePqModels(docs, g._3, 2, g._1, g._2, 2, g._4)
+    (a.localCheckpoint(), c.localCheckpoint(), codes.localCheckpoint(), books.localCheckpoint())
+  }
+  private lazy val modelA = train(mirrored = false)
+  private lazy val modelB = train(mirrored = true)
+
+  private def searchRows(t: Model) =
+    Similarity.ivfPqSearchFrom(t._1, t._2, t._3, t._4,
+      planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
+      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+
+  private def save(dir: String, t: Model): Unit =
+    ModelStore.saveCoarsePq(dir, t._1, t._2, t._3, t._4, g._1, g._2, g._3, g._4)
+
+  private def load(dir: String): Model =
+    ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
+
+  private def newDir() = java.nio.file.Files.createTempDirectory("graft-store").toString
+
+  private def names(dir: String, pattern: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.matches(pattern)).sorted
+
+  private def vDirs(dir: String) = names(dir, "v\\d+")
+
   test("a saved-and-reloaded model reproduces the in-memory model's search rows exactly") {
-    val docs = planted
-    val queries = docs.filter($"vec_id" < 4)
-    val (m, k, coarseK, dims) = (2, 2, 2, 4)
-    val (assigned, centroids, codes, books) =
-      Similarity.coarsePqModels(docs, coarseK, 2, m, k, 2, dims)
-    val expect = Similarity.ivfPqSearchFrom(
-      assigned, centroids, codes, books, queries, m, dims / m, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, assigned, centroids, codes, books, m, k, coarseK, dims)
-    val (la, lc, lcodes, lbooks) = ModelStore.loadCoarsePq(spark, dir, m, k, coarseK, dims)
-    val served = Similarity.ivfPqSearchFrom(
-      la, lc, lcodes, lbooks, queries, m, dims / m, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
+    val expect = searchRows(modelA)
+    val dir = newDir()
+    save(dir, modelA)
     assert(expect.nonEmpty, "degenerate fixture: the search returned nothing")
-    assert(served == expect, "reloaded-model search diverges from the training run")
+    assert(searchRows(load(dir)) == expect, "reloaded-model search diverges from the training run")
   }
 
   test("a failed part write leaves meta untouched: the commit marker never validates a partial save") {
-    val docs = planted
-    val (assigned, centroids, codes, books) =
-      Similarity.coarsePqModels(docs, 2, 2, 2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, assigned, centroids, codes, books, 2, 2, 2, 4)
+    val (_, centroids, codes, books) = modelA
+    val dir = newDir()
+    save(dir, modelA)
+    val oldRows = searchRows(load(dir))
 
-    // second save at a DIFFERENT geometry whose "assigned" frame throws at
-    // execution time (ANSI 1/0): the save must surface the failure and must
-    // NOT write the new meta — meta is the commit marker, written only after
-    // every part write succeeded
-    val poisoned = spark.range(2)
-      .select(($"id" / ($"id" - lit(1))).as("v"))
-    val thrown = intercept[Throwable] {
-      ModelStore.saveCoarsePq(dir, poisoned.toDF(), centroids, codes, books, 4, 2, 2, 4)
+    // a save at a DIFFERENT geometry whose "assigned" frame throws at
+    // execution time (ANSI 1/0) in its only task: the save must surface
+    // the failure and commit nothing
+    val poisoned = spark.range(0, 2, 1, 1).select(($"id" / ($"id" - lit(1))).as("v"))
+    intercept[Throwable] {
+      ModelStore.saveCoarsePq(dir, poisoned, centroids, codes, books, 4, 2, 2, 4)
     }
-    assert(thrown != null)
+    assert(vDirs(dir) == Seq("v1"), s"the failed save left a version: ${vDirs(dir)}")
+    assert(names(dir, "\\.stage-.*").isEmpty, "the failed save left its stage behind")
 
-    // the stored meta still carries the OLD geometry, so a caller expecting
-    // the new geometry fails fast instead of searching a partial model
+    // the old model is still the one served, so a caller expecting the new
+    // geometry fails fast instead of searching a partial model
+    assert(searchRows(load(dir)) == oldRows)
     val e = intercept[IllegalArgumentException] {
       ModelStore.loadCoarsePq(spark, dir, 4, 2, 2, 4)
     }
@@ -68,733 +92,127 @@ class ModelStoreSpec extends SparkSpec {
   }
 
   test("serve-during-overwrite: a reader sees the old complete model or the new complete model, never a mix") {
-    val g = (2, 2, 2, 4)
-    def train(swap: Boolean) = {
-      val docs = if (!swap) planted else planted
-        .select($"vec_id", reverse($"embedding").as("embedding"))
-      Similarity.coarsePqModels(docs, g._3, 2, g._1, g._2, 2, g._4)
-    }
-    def searchRows(t: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      Similarity.ivfPqSearchFrom(t._1, t._2, t._3, t._4,
-        planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-        .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val (a1, c1, k1, b1) = train(swap = false)
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-    val oldHandles = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
+    val dir = newDir()
+    save(dir, modelA)
+    val oldHandles = load(dir)
     val oldRows = searchRows(oldHandles)
-    val inMemNew = train(swap = true)
-    val newRows = searchRows((inMemNew._1, inMemNew._2, inMemNew._3, inMemNew._4))
+    val newRows = searchRows(modelB)
     assert(oldRows != newRows, "degenerate fixture: retrain must change the search result")
 
-    // (a) mid-overwrite window, simulated deterministically: the new
-    // version's data directory exists but is PARTIAL (one table), and the
-    // meta pointer has not swapped — a fresh resolve must still serve the
-    // old complete model
-    a1.write.mode("overwrite").parquet(s"$dir/v2/assigned")
-    assert(searchRows(ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)) == oldRows,
-      "a reader resolved mid-save saw the uncommitted version")
+    // (a) mid-save: a save in flight has written part of its stage; a
+    // fresh resolve still serves the old complete model
+    modelB._1.write.parquet(s"$dir/.stage-inflight/assigned")
+    assert(searchRows(load(dir)) == oldRows, "a reader resolved mid-save saw the uncommitted save")
 
-    // (b) complete the retrain (same geometry, different model):
-    // the save overwrites the garbage v2 and swaps the pointer
-    ModelStore.saveCoarsePq(dir, inMemNew._1, inMemNew._2, inMemNew._3,
-      inMemNew._4, g._1, g._2, g._3, g._4)
-    assert(searchRows(ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)) == newRows,
-      "post-swap resolve did not serve the new model")
+    // (b) the retrain commits: a fresh resolve serves the new model
+    save(dir, modelB)
+    assert(searchRows(load(dir)) == newRows, "post-commit resolve did not serve the new model")
 
-    // (c) a reader that resolved BEFORE the swap still serves the old
-    // complete model — its version directory is immutable and survives
-    // one retrain (the one-version grace)
-    assert(searchRows(oldHandles) == oldRows,
-      "pre-swap reader handles were corrupted by the in-place retrain")
-
-    // interlude: the retrain in (b) allocated PAST the garbage partial
-    // (v1 committed, v2 garbage -> B landed as v3), and its GC swept the
-    // incomplete v2 while keeping complete v1 as the grace predecessor
-    val root = new java.io.File(dir)
-    def vDirs() = root.listFiles().filter(_.isDirectory).map(_.getName)
-      .filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs() == Seq("v1", "v3"),
-      s"garbage sweep / grace selection wrong after the retrain: ${vDirs()}")
-
-    // (d) GC after a further retrain: v1 finally drops, v3 (the committed
-    // predecessor) is the grace version beside the new v4
-    val (a3, c3, k3, b3) = train(swap = false)
-    ModelStore.saveCoarsePq(dir, a3, c3, k3, b3, g._1, g._2, g._3, g._4)
-    assert(vDirs() == Seq("v3", "v4"), s"GC kept the wrong versions: ${vDirs()}")
-  }
-
-  test("a reader that lands inside the pointer-swap window retries and resolves the committed model") {
-    val docs = planted
-    val (assigned, centroids, codes, books) =
-      Similarity.coarsePqModels(docs, 2, 2, 2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, assigned, centroids, codes, books, 2, 2, 2, 4)
-
-    // simulate the delete-old/rename-temp gap: meta is transiently absent
-    // while the version directories sit beside it; a concurrent restorer
-    // plays the role of the in-flight rename landing
-    val meta = new java.io.File(s"$dir/meta")
-    val stash = new java.io.File(s"$dir/meta_stash")
-    assert(meta.renameTo(stash), "fixture: could not stash meta")
-    val restorer = new Thread(() => { Thread.sleep(300); stash.renameTo(meta); () })
-    restorer.start()
-    try {
-      val (la, lc, lcodes, lbooks) = ModelStore.loadCoarsePq(spark, dir, 2, 2, 2, 4)
-      assert(la.count() > 0 && lc.count() > 0 && lcodes.count() > 0 && lbooks.count() > 0)
-    } finally restorer.join()
-  }
-
-  test("a second writer racing to the same version number fails loudly at the claim, not by interleaving") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ModelStore.claimVersion(fs, s"$dir/v1") // first writer wins the claim
-    val e = intercept[IllegalStateException] {
-      ModelStore.claimVersion(fs, s"$dir/v1") // the racer loses LOUDLY
-    }
-    assert(e.getMessage.contains("claimed by a concurrent writer"))
+    // (c) a reader that resolved BEFORE the commit still serves the old
+    // complete model: its version directory is immutable and GC keeps it
+    assert(vDirs(dir) == Seq("v1", "v2"), s"GC kept the wrong versions: ${vDirs(dir)}")
+    assert(searchRows(oldHandles) == oldRows, "pre-commit reader handles were corrupted by the retrain")
   }
 
   test("two interleaved saves land as two distinct committed versions, and the pointer resolves one complete model") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val g = (2, 2, 2, 4)
-    val modelA = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val modelB = Similarity.coarsePqModels(
-      planted.select($"vec_id", reverse($"embedding").as("embedding")),
-      g._3, 2, g._1, g._2, 2, g._4)
-    def searchRows(t: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      Similarity.ivfPqSearchFrom(t._1, t._2, t._3, t._4,
-        planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-        .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
     val rowsA = searchRows(modelA)
     val rowsB = searchRows(modelB)
     assert(rowsA != rowsB, "degenerate fixture: the two models must differ")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val saves = Seq(modelA, modelB).map { m =>
-      Future(ModelStore.saveCoarsePq(dir, m._1, m._2, m._3, m._4, g._1, g._2, g._3, g._4))
-    }
+    val dir = newDir()
+    val saves = Seq(modelA, modelB).map(m => Future(save(dir, m)))
     Await.result(Future.sequence(saves), Duration.Inf) // both must SUCCEED
+    assert(vDirs(dir) == Seq("v1", "v2"),
+      s"interleaved saves did not land as two distinct versions: ${vDirs(dir)}")
 
-    // the claim fence forced the two writers onto distinct versions and
-    // GC's below-next rule kept both data sets on disk
-    val vDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs == Seq("v1", "v2"),
-      s"interleaved saves did not land as two distinct versions: $vDirs")
-
-    // last swap won the pointer; whichever it was, the served model is
-    // ENTIRELY one of the two — never an interleaved mix
-    val served = searchRows(ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4))
+    // whichever committed last is served, ENTIRELY one of the two models
+    val served = searchRows(load(dir))
     assert(served == rowsA || served == rowsB,
       "the committed model is neither writer's model — interleaved corruption")
   }
 
   test("GC keeps the previously committed version as grace even when its _SUCCESS markers are gone") {
-    val docs = planted
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(docs, 2, 2, 2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, 2, 2, 2, 4)
-
-    // a deployment whose committer emits no _SUCCESS markers: strip them
-    // from the committed v1 — GC must still honor it as the grace
-    // predecessor because the pre-swap meta pointed at it
-    val v1 = new java.io.File(s"$dir/v1")
+    val dir = newDir()
+    save(dir, modelA)
+    // a deployment whose committer emits no _SUCCESS markers: GC must not
+    // depend on them
     def successFiles(f: java.io.File): Seq[java.io.File] =
       Option(f.listFiles()).toSeq.flatten
         .flatMap(c => if (c.isDirectory) successFiles(c)
                       else if (c.getName == "_SUCCESS") Seq(c) else Nil)
-    val stripped = successFiles(v1)
+    val stripped = successFiles(new java.io.File(s"$dir/v1"))
     assert(stripped.nonEmpty, "fixture: expected _SUCCESS markers under v1")
     stripped.foreach(f => assert(f.delete()))
+    // another writer's save in flight: GC must leave its stage alone
+    val foreign = new java.io.File(s"$dir/.stage-foreign/assigned/part-0")
+    foreign.getParentFile.mkdirs()
+    java.nio.file.Files.write(foreign.toPath, Array[Byte](1, 2, 3))
 
-    val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-      docs.select($"vec_id", reverse($"embedding").as("embedding")), 2, 2, 2, 2, 2, 4)
-    ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, 2, 2, 2, 4)
-    val vDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs == Seq("v1", "v2"),
-      s"marker-less committed predecessor was swept instead of kept as grace: $vDirs")
+    save(dir, modelB)
+    assert(vDirs(dir) == Seq("v1", "v2"),
+      s"marker-less committed predecessor was swept instead of kept as grace: ${vDirs(dir)}")
+    save(dir, modelA)
+    assert(vDirs(dir) == Seq("v2", "v3"), s"GC did not keep exactly the two highest: ${vDirs(dir)}")
+    assert(foreign.exists, "GC deleted another writer's stage")
   }
 
-  test("a meta without the _version sidecar (pre-sidecar store) still yields its grace predecessor via the parquet fallback") {
-    val docs = planted
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(docs, 2, 2, 2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, 2, 2, 2, 4)
-
-    // simulate a store committed by the pre-sidecar code: the parquet
-    // meta is intact but the _version_<N> marker is absent — the next
-    // save must fall back to reading the pointer from the parquet and
-    // still keep v1 as the reader-grace version. v1's _SUCCESS markers
-    // are ALSO stripped so the marker-based grace fallback cannot mask a
-    // broken parquet fallback — only the recovered pointer protects v1
-    val sidecar = new java.io.File(s"$dir/meta/_version_1")
-    assert(sidecar.exists, "fixture: expected the _version_1 sidecar")
-    assert(sidecar.delete())
-    def successFiles(f: java.io.File): Seq[java.io.File] =
-      Option(f.listFiles()).toSeq.flatten
-        .flatMap(c => if (c.isDirectory) successFiles(c)
-                      else if (c.getName == "_SUCCESS") Seq(c) else Nil)
-    successFiles(new java.io.File(s"$dir/v1")).foreach(f => assert(f.delete()))
-
-    val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-      docs.select($"vec_id", reverse($"embedding").as("embedding")), 2, 2, 2, 2, 2, 4)
-    ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, 2, 2, 2, 4)
-    val vDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs == Seq("v1", "v2"),
-      s"legacy meta's committed predecessor was not kept as grace: $vDirs")
-    // and the new save re-established the sidecar for the next one
-    assert(new java.io.File(s"$dir/meta/_version_2").exists,
-      "the save did not write the pointer sidecar")
-  }
-
-  // ---------------------------------------------------------------------
-  // cross-process race injection: the hooks play "the other process" —
-  // deterministic stand-ins for interleavings one JVM cannot stage
-
-  private def resetHooks(): Unit = {
-    ModelStore.midSaveTestHook = _ => ()
-    ModelStore.preSwapTestHook = _ => ()
-    ModelStore.postInstallTestHook = _ => ()
-    ModelStore.postQuarantineTestHook = _ => ()
-  }
-
-  private def deleteTree(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(rec)
-      f.delete(); ()
+  test("a commit that starts from a taken version number lands on the next free v<N> and leaves the taken one untouched") {
+    import org.apache.hadoop.fs.Path
+    val dir = newDir()
+    save(dir, modelA)
+    def tree(root: java.io.File): Map[String, Seq[Byte]] = {
+      val walk = java.nio.file.Files.walk(root.toPath)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.toPath.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
     }
-    rec(new java.io.File(path))
+    val v1 = tree(new java.io.File(s"$dir/v1"))
+    val stageDir = new java.io.File(s"$dir/.stage-late")
+    stageDir.mkdirs()
+    java.nio.file.Files.write(new java.io.File(stageDir, "part-0").toPath, Array[Byte](7))
+    val staged = tree(stageDir)
+
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(ModelStore.commit(fs, new Path(dir), new Path(stageDir.getPath), first = 1) == 2)
+    assert(tree(new java.io.File(s"$dir/v1")) == v1, "the taken version changed")
+    assert(tree(new java.io.File(s"$dir/v2")) == staged, "the stage did not land as v2")
+    assert(!stageDir.exists, "the stage path survived the commit")
   }
 
-  test("a cross-process GC sweep BEFORE the swap aborts the save loudly; the old pointer survives") {
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    // the "other process": its GC sweeps this writer's in-flight version
-    // directory after the data writes — the in-JVM liveClaims registry is
-    // bypassed by deleting the directory out from under it directly
-    ModelStore.preSwapTestHook = base => deleteTree(base)
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("swept"), s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // the pointer never moved: a fresh resolve serves the OLD complete model
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "the aborted save disturbed the committed model")
-  }
-
-  test("a cross-process GC sweep AFTER the pointer install rolls the pointer back to the old model") {
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    // the sweep lands in the narrowest window: after the pointer rename,
-    // before the post-install re-verification — the check-then-act gap the
-    // pre-swap check alone cannot close
-    ModelStore.postInstallTestHook = base => deleteTree(base)
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("rolled the pointer back"),
-        s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // the rollback restored the stashed old meta: never a dangling pointer
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "the rolled-back pointer does not serve the old model")
-  }
-
-  test("a forged fence token (local-FS double-claim) aborts the save before the pointer swap; the old pointer survives") {
-    // the local-FS exists-then-create window: another PROCESS claims the
-    // SAME version number after this writer and re-stamps .writer with
-    // ITS token. Prevention is impossible there (RawLocalFileSystem's
-    // exclusive create is check-then-create), so the save must DETECT the
-    // foreign token at the pre-swap re-read and abort instead of
-    // committing a pointer to interleaved data. The hook plays the
-    // sibling's claim in the widest window: after our claim, before our
-    // data writes.
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4) // v1
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    ModelStore.midSaveTestHook = base => {
-      // the sibling writes through the same Hadoop FileSystem a real
-      // claimant would (keeping the checksum sidecar consistent — raw
-      // NIO would instead surface as a read failure, a different branch)
-      val p = new org.apache.hadoop.fs.Path(s"$base/.writer")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(p, true)
-      try out.write(
-        "99999-forged-sibling-nonce".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("double-claimed"), s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // the pointer never moved: a fresh resolve serves the OLD complete
-    // model, and no half-installed meta artifacts linger
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "the aborted double-claimed save disturbed the committed model")
-    assert(!new java.io.File(s"$dir/.meta.tmp.v2").exists,
-      "the aborted save left its temp meta behind")
-    // staging containment: the losing claimant never wrote the shared
-    // data paths and removed its own stage on abort, so the surviving
-    // claimant's version directory holds nothing of the loser's — only
-    // the (forged) fence marker remains
-    val leftovers = Option(new java.io.File(s"$dir/v2").listFiles()).toSeq.flatten
-      .map(_.getName).filterNot(n => n == ".writer" || n == "..writer.crc")
-    assert(leftovers.isEmpty,
-      s"the aborted claimant left data in the shared version dir: $leftovers")
-  }
-
-  test("data writes stay under the writer-unique stage until the fence-checked promotion at swap time") {
-    // the structural double-claim containment: during the (long) data
-    // write phase nothing lands at the shared part paths — two local-FS
-    // claimants of one version number can therefore never write the same
-    // files; only the single fence-winning writer renames its staged
-    // tables into place inside the swap section
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val observed = new java.util.concurrent.atomic.AtomicReference[String](null)
-    ModelStore.preSwapTestHook = base => {
-      // after all four data writes, before the swap section
-      val shared = Seq("assigned", "centroids", "codes", "books")
-        .filter(p => new java.io.File(s"$base/$p").exists)
-      val stages = Option(new java.io.File(base).listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith(".stage."))
-      val staged = stages.flatMap(s => Option(s.listFiles()).toSeq.flatten)
-        .map(_.getName).sorted
-      observed.set(
-        if (shared.nonEmpty) s"shared paths written before promotion: $shared"
-        else if (stages.size != 1) s"expected exactly one stage dir, got ${stages.size}"
-        else if (staged != Seq("assigned", "books", "centroids", "codes"))
-          s"stage is missing tables: $staged"
-        else "ok")
-    }
-    try ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-    finally resetHooks()
-    assert(observed.get() == "ok", observed.get())
-    // promotion landed the tables at the shared paths and cleared the stage
-    Seq("assigned", "centroids", "codes", "books").foreach(p =>
-      assert(new java.io.File(s"$dir/v1/$p").isDirectory,
-        s"promotion did not land $p in the version dir"))
-    assert(!Option(new java.io.File(s"$dir/v1").listFiles()).toSeq.flatten
-      .exists(_.getName.startsWith(".stage.")),
-      "the committed version dir still holds a stage directory")
-    // and the committed model loads normally
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    assert(t._1.count() > 0 && t._2.count() > 0 && t._3.count() > 0 && t._4.count() > 0)
-  }
-
-  test("an unreadable fence marker aborts with a read-failure diagnosis, not a double-claim one") {
-    // ADVICE r14: a transient read failure of .writer must not be
-    // reported as a concurrent double-claim — on local FS (non-atomic
-    // claim) the save still aborts, but says WHY, with the read error as
-    // cause, after retrying the read once
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4) // v1
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    // the fence vanishes mid-save (e.g. an operator's errant cleanup):
-    // both read attempts fail with file-not-found
-    ModelStore.midSaveTestHook = base => {
-      java.nio.file.Files.delete(java.nio.file.Paths.get(base, ".writer")); ()
-    }
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("could not be re-read"), s"wrong failure: ${e.getMessage}")
-      assert(!e.getMessage.contains("double-claimed"),
-        s"read failure misdiagnosed as a double-claim: ${e.getMessage}")
-      assert(e.getCause != null, "the real read error was not attached as the cause")
-    } finally resetHooks()
-
-    // the pointer never moved
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "the aborted save disturbed the committed model")
-  }
-
-  test("post-install rollback on a previously EMPTY store reports a meta-less store, not a phantom previous model") {
-    // first-ever save (hadOld=false) whose data dir is swept after the
-    // pointer install: the rollback leaves the store correctly meta-less,
-    // and the error must SAY so — a message claiming a rollback "to the
-    // previous committed model" would misdirect the operator toward a
-    // model that never existed
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.postInstallTestHook = base => deleteTree(base)
-    try {
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("no committed model"), s"wrong failure: ${e.getMessage}")
-      assert(!e.getMessage.contains("previous committed model"),
-        s"message invents a previous model on an empty store: ${e.getMessage}")
-    } finally resetHooks()
-    // the store is empty again: a load fails the way an untouched empty
-    // store fails, with no dangling pointer
-    val le = intercept[IllegalArgumentException] {
-      ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    }
-    assert(le.getMessage.contains("no committed model"))
-  }
-
-  test("GC grace follows a sibling save that committed MID-FLIGHT, not a stale save-start predecessor") {
-    // the advisory race: v1 committed; S1 claims v2 and pauses; S2 claims
-    // v3; S1 commits v2; S2 commits v3. S2's GC must keep v2 — the version
-    // the pointer named at S2's swap — and sweep only v1. A grace
-    // predecessor captured at S2's save START (v1) would instead sweep the
-    // just-committed v2 out from under its readers.
-    val g = (2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val modelA = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val modelB = Similarity.coarsePqModels(
-      planted.select($"vec_id", reverse($"embedding").as("embedding")),
-      g._3, 2, g._1, g._2, 2, g._4)
-    ModelStore.saveCoarsePq(dir, modelA._1, modelA._2, modelA._3, modelA._4,
-      g._1, g._2, g._3, g._4) // v1
-
-    val s1Claimed = new java.util.concurrent.CountDownLatch(1)
-    val s1Go = new java.util.concurrent.CountDownLatch(1)
-    val s1Failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    ModelStore.midSaveTestHook = base =>
-      if (base.endsWith("/v2")) { s1Claimed.countDown(); s1Go.await() }
-    val t1 = new Thread(() =>
-      try ModelStore.saveCoarsePq(dir, modelB._1, modelB._2, modelB._3, modelB._4,
-        g._1, g._2, g._3, g._4)
-      catch { case t: Throwable => s1Failure.set(t) })
-    try {
-      t1.start()
-      s1Claimed.await()
-      // S2 (this thread) claims v3, then lets S1 run to COMMIT before S2's
-      // own writes proceed — the exact interleaving from the advisory
-      ModelStore.midSaveTestHook = base =>
-        if (base.endsWith("/v3")) { s1Go.countDown(); t1.join() }
-      ModelStore.saveCoarsePq(dir, modelA._1, modelA._2, modelA._3, modelA._4,
-        g._1, g._2, g._3, g._4) // v3
-    } finally { resetHooks(); s1Go.countDown(); t1.join() }
-    assert(s1Failure.get() == null, s"sibling save failed: ${s1Failure.get()}")
-
-    val vDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs == Seq("v2", "v3"),
-      s"GC must keep the mid-flight-committed v2 as grace and sweep v1, got: $vDirs")
-  }
-
-  test("claimVersion propagates a non-collision IOException with its real cause") {
-    // a filesystem that fails the marker create with a TRANSIENT error
-    // (not already-exists): the claim must surface it as the IOException
-    // it is — a collision diagnosis would burn all 16 re-allocation
-    // attempts on a dead cause and mislead the operator
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    val failing = new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def create(
-          f: org.apache.hadoop.fs.Path,
-          overwrite: Boolean): org.apache.hadoop.fs.FSDataOutputStream =
-        throw new java.io.IOException("simulated transient FS failure")
-    }
-    failing.initialize(new java.net.URI("file:///"),
-      spark.sparkContext.hadoopConfiguration)
-    val e = intercept[Throwable] { ModelStore.claimVersion(failing, s"$dir/v7") }
-    assert(!e.isInstanceOf[IllegalStateException],
-      s"transient IO failure misdiagnosed as a claim collision: $e")
-    assert(e.isInstanceOf[java.io.IOException], s"unexpected failure type: $e")
-    assert(e.getMessage.contains("simulated transient FS failure"),
-      s"the real cause was swallowed: ${e.getMessage}")
-  }
-
-  test("a crash between the stash and install renames leaves the store readable via the stash") {
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4)
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    // simulate the v2 save dying between its two install renames: the old
-    // meta sits stashed as .meta.bak.v2 and $dir/meta is gone
-    val meta = new java.io.File(s"$dir/meta")
-    assert(meta.renameTo(new java.io.File(s"$dir/.meta.bak.v2")),
-      "fixture: could not stash meta")
-
-    // a reader resolves the OLD committed model through the stash at once
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "stash fallback did not serve the old committed model")
-
-    // and the next save recovers: its grace read honors the stash pointer,
-    // so v1 survives as the reader-grace version beside the new commit
-    val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-      planted.select($"vec_id", reverse($"embedding").as("embedding")),
-      g._3, 2, g._1, g._2, 2, g._4)
-    ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-    val vDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.matches("v\\d+")).sorted.toSeq
-    assert(vDirs.head == "v1",
-      s"recovery save swept the stash-committed v1 instead of keeping it as grace: $vDirs")
-    assert(new java.io.File(s"$dir/meta").exists, "recovery save did not restore meta")
-    // the recovery save re-used the crashed save's version number (its data
-    // dir never landed), so the crashed save's stash shares the recovery's
-    // own stash name — the install must clear it rather than leave a stale
-    // .meta.bak.v2 that the below-next sweep would never reach
-    assert(!new java.io.File(s"$dir/.meta.bak.v2").exists,
-      "the recovery save left the crashed save's stale stash on disk")
-  }
-
-  test("the post-install rollback never deletes a sibling process's just-committed meta") {
-    // the rollback-clobber race: writer A installs its pointer; before A's
-    // re-verification, another PROCESS B both sweeps A's data dir and
-    // commits its own meta over A's. A must abort WITHOUT touching B's
-    // meta — rolling back here would silently un-commit B's save (and,
-    // pre-guard, could leave the store with no meta at all when A's own
-    // stash was consumed by B's swap)
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4) // v1
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    // "process B", played deterministically in the narrowest window: sweep
-    // A's v2 data, then commit over A's pointer (here by swapping the v1
-    // meta back in — any meta that is not A's exercises the same guard)
-    ModelStore.postInstallTestHook = base => {
-      deleteTree(base)
-      val meta = new java.io.File(s"$dir/meta")
-      deleteTree(meta.getPath)
-      assert(new java.io.File(s"$dir/.meta.bak.v2").renameTo(meta),
-        "fixture: could not play the sibling's meta install")
-    }
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("sibling process committed"),
-        s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // B's committed meta survived A's abort: the store resolves B's model
-    // (v1 here), not a deleted pointer and not a meta-less directory
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows,
-      "the aborting save clobbered the sibling's committed meta")
-  }
-
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).toSeq.flatten
-        .foreach(c => copyTree(c, new java.io.File(dst, c.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath); ()
-    }
-  }
-
-  test("a sibling install landing AFTER the rollback's quarantine grab survives: deletion only targets the quarantined copy") {
-    // the r14 residual TOCTOU, now closed: the old rollback checked
-    // ownership at the shared meta path and then deleted there — a
-    // sibling installing in that gap lost its commit. The quarantine
-    // protocol claims the installed meta by atomic rename FIRST, so a
-    // sibling install landing any time after the grab hits an empty
-    // shared path and commits normally; the rollback's delete targets
-    // only the writer-private quarantine and must leave the sibling's
-    // fresh commit in place (dropping its own now-stale stash).
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4) // v1
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    // the sibling's meta, prepared ahead: a byte-copy of the committed v1
-    // meta (any meta that is not writer A's exercises the same guard)
-    copyTree(new java.io.File(s"$dir/meta"), new java.io.File(s"$dir/.sibling_meta_src"))
-
-    ModelStore.postInstallTestHook = base => deleteTree(base)
-    ModelStore.postQuarantineTestHook = _ => {
-      // "process B": installs its commit in the exact window between A's
-      // quarantine grab and A's delete/restore
-      assert(new java.io.File(s"$dir/.sibling_meta_src")
-        .renameTo(new java.io.File(s"$dir/meta")),
-        "fixture: could not play the sibling's install")
-    }
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("left the sibling's commit in place"),
-        s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // the sibling's meta is the committed one; A consumed its own stash
-    // and quarantine without touching the sibling's commit
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows,
-      "the rollback deleted or displaced the sibling's mid-window commit")
-    assert(!new java.io.File(s"$dir/.meta.bak.v2").exists,
-      "the rollback left its stale stash shadowing the sibling's commit")
-    assert(!Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .exists(_.getName.startsWith(".meta.rollback.")),
-      "the rollback left its quarantine dir behind")
-  }
-
-  test("a rollback that finds the shared meta already claimed by a sibling's swap touches nothing") {
-    // grabbed==false branch: between A's install and A's rollback, a
-    // sibling's own pointer swap STASHED the shared meta (its two-rename
-    // install is mid-flight). A's quarantine grab finds nothing to grab
-    // and must abort without any delete or restore — the sibling's swap
-    // completes on its own, and until then readers resolve through A's
-    // stash (the documented swap-window grace).
-    val g = (2, 2, 2, 4)
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, a1, c1, k1, b1, g._1, g._2, g._3, g._4) // v1
-    val oldRows = Similarity.ivfPqSearchFrom(
-      a1, c1, k1, b1, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-
-    ModelStore.postInstallTestHook = base => {
-      deleteTree(base)
-      deleteTree(s"$dir/meta") // the sibling's stash rename, played as a delete
-    }
-    try {
-      val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-        planted.select($"vec_id", reverse($"embedding").as("embedding")),
-        g._3, 2, g._1, g._2, 2, g._4)
-      val e = intercept[IllegalStateException] {
-        ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-      }
-      assert(e.getMessage.contains("left the sibling's swap undisturbed"),
-        s"wrong failure: ${e.getMessage}")
-    } finally resetHooks()
-
-    // A's stash (.meta.bak.v2 = the old committed meta) is untouched and
-    // serves readers through the swap-window grace
-    assert(new java.io.File(s"$dir/.meta.bak.v2").exists,
-      "the no-grab abort consumed the stash it promised not to touch")
-    val t = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
-    val served = Similarity.ivfPqSearchFrom(
-      t._1, t._2, t._3, t._4, planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(served == oldRows, "the stash fallback does not serve the old committed model")
+  test("an empty store has no committed model") {
+    val e = intercept[IllegalArgumentException](load(newDir()))
+    assert(e.getMessage.contains("no committed model"))
   }
 
   test("a legacy flat store (version=0) loads, and a save over it upgrades to v1 without sweeping the legacy tables") {
-    val g = (2, 2, 2, 4)
-    def searchRows(t: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
-      Similarity.ivfPqSearchFrom(t._1, t._2, t._3, t._4,
-        planted.filter($"vec_id" < 4), g._1, g._4 / g._1, 3, 2)
-        .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val (a1, c1, k1, b1) = Similarity.coarsePqModels(planted, g._3, 2, g._1, g._2, 2, g._4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    // hand-build the pre-versioning layout: the four tables directly under
-    // dir and a meta with NO version column
+    val (a1, c1, k1, b1) = modelA
+    val dir = newDir()
+    // the pre-versioning layout: the four tables directly under dir and a
+    // meta with NO version column
     Seq(("assigned", a1), ("centroids", c1), ("codes", k1), ("books", b1))
       .foreach { case (n, df) => df.write.parquet(s"$dir/$n") }
     Seq((g._1, g._2, g._3, g._4)).toDF("m", "k", "coarse_k", "dims")
       .write.parquet(s"$dir/meta")
 
-    val legacyHandles = ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4)
+    val legacyHandles = load(dir)
     val legacyRows = searchRows(legacyHandles)
     assert(legacyRows == searchRows((a1, c1, k1, b1)),
       "the legacy flat layout did not resolve to the stored model")
 
-    // SAVE OVER with the current code: the upgrade must land as v1 behind
-    // the pointer swap, atomically from a reader's point of view
-    val (a2, c2, k2, b2) = Similarity.coarsePqModels(
-      planted.select($"vec_id", reverse($"embedding").as("embedding")),
-      g._3, 2, g._1, g._2, 2, g._4)
-    ModelStore.saveCoarsePq(dir, a2, c2, k2, b2, g._1, g._2, g._3, g._4)
-
-    val upgradedRows = searchRows(ModelStore.loadCoarsePq(spark, dir, g._1, g._2, g._3, g._4))
-    assert(upgradedRows == searchRows((a2, c2, k2, b2)),
-      "post-upgrade resolve did not serve the new model")
+    // SAVE OVER with the current code: the new model lands as v1
+    save(dir, modelB)
+    val upgradedRows = searchRows(load(dir))
+    assert(upgradedRows == searchRows(modelB), "post-upgrade resolve did not serve the new model")
     assert(upgradedRows != legacyRows, "degenerate fixture: retrain must change the result")
-    assert(new java.io.File(s"$dir/v1").isDirectory &&
-      new java.io.File(s"$dir/meta/_version_1").exists,
-      "the upgrade did not install a versioned v1 layout with the pointer sidecar")
+    assert(vDirs(dir) == Seq("v1"), s"the upgrade did not land as v1: ${vDirs(dir)}")
 
     // the legacy flat tables are NOT v<N> directories, so GC must not have
     // touched them: a reader that resolved the legacy model before the
-    // upgrade still serves it — the same one-version grace, legacy-shaped
+    // upgrade still serves it
     Seq("assigned", "centroids", "codes", "books").foreach(n =>
       assert(new java.io.File(s"$dir/$n").isDirectory,
         s"the upgrade swept the legacy table $n out from under its readers"))
@@ -803,11 +221,8 @@ class ModelStoreSpec extends SparkSpec {
   }
 
   test("loading with mismatched geometry fails fast") {
-    val docs = planted
-    val (assigned, centroids, codes, books) =
-      Similarity.coarsePqModels(docs, 2, 2, 2, 2, 2, 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
-    ModelStore.saveCoarsePq(dir, assigned, centroids, codes, books, 2, 2, 2, 4)
+    val dir = newDir()
+    save(dir, modelA)
     val e = intercept[IllegalArgumentException] {
       ModelStore.loadCoarsePq(spark, dir, 4, 2, 2, 4)
     }
