@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** The session-scoped (SparkContext, dataset dir, tag) memo behind the
-  * table schemas ([[Tables]]) and the fixture caches
-  * ([[graft.queries.Models]], [[graft.queries.Dedup]]).
+  * table schemas ([[Tables]]), the fixture caches
+  * ([[graft.queries.Models]], [[graft.queries.Dedup]]) and the
+  * per-application temp dirs ([[SessionMemo.appTempDir]]).
   *
   * CONTRACT: a dataset dir is immutable for the life of a SparkContext, so
   * anything derived from it alone (a table's schema, a deterministic
@@ -27,5 +29,21 @@ private[graft] object SessionMemo {
       cache.put(key, built)
       built
     }
+  }
+
+  /** `java.io.tmpdir/<prefix>_<applicationId>`, deleted with everything
+    * under it when the application ends; the listener that deletes it is
+    * registered once per SparkContext. */
+  def appTempDir(s: SparkSession, prefix: String): AppTempDir =
+    memo(s, "", s"tmpdir:$prefix") {
+      val dir = new AppTempDir(java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+        s"${prefix}_${s.sparkContext.applicationId}").toString)
+      s.sparkContext.addSparkListener(dir)
+      dir
+    }
+
+  final class AppTempDir(val path: String) extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
   }
 }

@@ -578,14 +578,13 @@ object SimilarityQueries {
     * identical to e15's in-memory search; the oracle replays the full
     * training + search chain (same SQL as e15). `ModelStoreSpec` pins the
     * round-trip in isolation; this gate pins it against the cross-engine
-    * oracle. The store path is session-salted tmp, a new version per call
-    * (GC keeps two) — a bench pass measures the full save + load + search
-    * round trip. */
+    * oracle. The store path is session-salted tmp, deleted when the
+    * application ends, a new version per call (GC keeps two) — a bench
+    * pass measures the full save + load + search round trip. */
   def e21StoredModelSearch(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"),
-      s"graft_model_store_${s.sparkContext.applicationId}",
+      graft.SessionMemo.appTempDir(s, "graft_model_store").path,
       java.lang.Integer.toHexString(d.hashCode)).toString
     graft.operators.ModelStore.saveCoarsePq(
       dir, cp.assigned, cp.centroids, cp.codes, cp.books,

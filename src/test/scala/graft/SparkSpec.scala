@@ -13,11 +13,8 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // run every streaming spec under the production state store
-      // (RocksDB, as Engine.session configures it), not the default
-      // in-memory HDFSBackedStateStoreProvider
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // the generated-class cache size and the RocksDB state store that ship
+      .config(Engine.jvmConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

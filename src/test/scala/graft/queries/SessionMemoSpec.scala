@@ -130,4 +130,19 @@ class SessionMemoSpec extends SparkSpec {
       assert(joined == expected, s"self-join gave $joined rows, expected $expected")
     }
   }
+
+  test("e21's model store lives under a per-application dir deleted when the application ends") {
+    SimilarityQueries.e21StoredModelSearch(spark, small)
+    val dir = graft.SessionMemo.appTempDir(spark, "graft_model_store")
+    assert(dir eq graft.SessionMemo.appTempDir(spark, "graft_model_store"),
+      "a second lookup built a second dir and listener")
+    val store = new java.io.File(dir.path)
+    assert(store.getName == s"graft_model_store_${spark.sparkContext.applicationId}")
+    assert(store.list().nonEmpty, "e21 saved no model under the per-application dir")
+    dir.onApplicationEnd(org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
+    assert(!store.exists, "the model store outlived the application")
+    // a later call in the same session saves a fresh store again
+    assert(SimilarityQueries.e21StoredModelSearch(spark, small).count() > 0)
+    assert(store.list().nonEmpty)
+  }
 }
