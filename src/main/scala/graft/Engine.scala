@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory with the engine's standard tuning.
+/** The engine's session factory: mains, specs and the benchmark all build
+  * their session here, so the tests run what ships.
   *
   * Local runs use `local[cores]` in one JVM, but every knob here is chosen
   * for the 1000-executor / 100 TB deployment shape and merely scaled down:
+  *   - the master is the launcher's when one is set (see [[Engine.master]]),
+  *     so `spark-submit --master yarn` runs on YARN.
   *   - AQE on: runtime coalescing + skew-join splitting replaces hand-tuned
   *     partition counts at any scale.
   *   - shuffle.partitions = cores locally; on a real cluster this is
@@ -15,9 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     supplier/part at TPC-H-ish ratios) broadcast; fact-fact joins
   *     shuffle. We additionally hint `broadcast()` where the dimension
   *     side is known-small by construction.
-  *   - the generated-class cache holds the whole catalog (see
-  *     [[Engine.jvmConf]]), so a repeated query reuses its compiled code
-  *     instead of recompiling it with Janino on every pass.
+  *   - the generated-class cache holds the whole catalog, so a repeated
+  *     query reuses its compiled code instead of recompiling it with
+  *     Janino on every pass.
+  *   - graft's SQL functions are installed through [[GraftExtensions]], and
+  *     `file:` paths go through the java.nio local file system
+  *     ([[NioLocalFileSystem]]).
   */
 object Engine {
   /** Silence WindowExec's "No Partition Defined" warning — called ONLY by
@@ -36,30 +42,15 @@ object Engine {
   def defaultCores: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
-  /** Settings every engine session and the specs' shared session apply,
-    * kept in one place so tests run what ships.
-    *   - Spark keeps generated classes in one JVM-wide cache keyed by source
-    *     text, sized once by the first session a JVM builds and capped at
-    *     100 entries by default. The 124-query catalog generates 1,694
-    *     distinct classes at sf0.01 (the 14-query benchmark list alone
-    *     171), so at the default cap every pass evicts what the next pass
-    *     needs and recompiles ~2,000 classes. 4096 holds the whole catalog
-    *     with room to spare; the classes it keeps add ~14 MB of metaspace
-    *     and no measurable peak RSS.
-    *   - Streaming state lives in RocksDB, matching the reference's
-    *     RocksDB-backed stores (samples/TopCustomerArtists.java:79,
-    *     phase3/OutOfStateSales.java:80): state size is bounded by local
-    *     disk, not executor heap — the difference between a demo and a
-    *     deployment once keyed state outgrows memory. */
-  val jvmConf: Map[String, String] = Map(
-    "spark.sql.codegen.cache.maxEntries" -> "4096",
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  /** The launcher's `spark.master` when one is set (spark-submit passes
+    * `--master` as that system property), else `local[cores]`. */
+  def master(cores: String): String = sys.props.getOrElse("spark.master", s"local[$cores]")
 
   def session(appName: String = "graft", cores: String = defaultCores): SparkSession = {
-    val b = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
+      .master(master(cores))
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -77,11 +68,26 @@ object Engine {
       // int64-µs column would break that silently and is caught by
       // EventsTsDriftSpec's live-testdata range check each round.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(jvmConf)
-    val withMaster =
-      if (SparkSession.getActiveSession.isDefined) b
-      else b.master(s"local[$cores]")
-    val spark = withMaster.getOrCreate()
+      // Spark keeps generated classes in one JVM-wide cache keyed by source
+      // text, sized once by the first session a JVM builds and capped at
+      // 100 entries by default. The 124-query catalog generates 1,694
+      // distinct classes at sf0.01 (the 14-query benchmark list alone 171),
+      // so at the default cap every pass evicts what the next pass needs
+      // and recompiles ~2,000 classes. 4096 holds the whole catalog with
+      // room to spare; the classes it keeps add ~14 MB of metaspace and no
+      // measurable peak RSS.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Streaming state lives in RocksDB, matching the reference's
+      // RocksDB-backed stores (samples/TopCustomerArtists.java:79,
+      // phase3/OutOfStateSales.java:80): state size is bounded by local
+      // disk, not executor heap — the difference between a demo and a
+      // deployment once keyed state outgrows memory.
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // `file:` only, so HDFS and object stores never see it
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -8,11 +8,7 @@ import graft.functions.{MinHashSig, MortonInterleave, Shingles, SimHash16, SimHa
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT vec_dot(a, b)")`
-  * works next to the Column API.
-  *
-  * Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `.withExtensions(new GraftExtensions)`.
+  * works next to the Column API. [[Engine.session]] installs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -3,26 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide context). */
+import java.nio.file.Files
+
+/** Shared local session for all suites (one JVM-wide context): the engine's
+  * own session, so the specs run what ships. */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-class cache size and the RocksDB state store that ship
-      .config(Engine.jvmConf)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Engine.session("graft-test", cores = "4")
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` on the path of a new directory in `java.io.tmpdir`, then
+    * deletes the directory and everything under it, whether `body` returns
+    * or throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 
   /** Evaluates `body` with expression codegen genuinely OFF. Flipping
     * spark.sql.codegen.wholeStage alone is not enough: outside

@@ -13,21 +13,23 @@ class VerifySpec extends SparkSpec {
   private def rows(n: Int): Query = (s, _) => s.range(n).toDF("id")
 
   test("a throwing query is returned as a failure and the rest are written") {
-    val out = Files.createTempDirectory("graft_verify").toString
-    val boom: Query = (_, _) => throw new IllegalStateException("synthetic failure")
-    val failed = Verify.writeAll(spark, "/root/testdata/sf0.001", out,
-      Seq("first" -> rows(3), "boom" -> boom, "last" -> rows(5)))
-    assert(failed == Seq("boom"))
-    assert(spark.read.parquet(s"$out/first").count() == 3)
-    assert(spark.read.parquet(s"$out/last").count() == 5)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$out/boom")))
+    withTempDir("graft_verify") { out =>
+      val boom: Query = (_, _) => throw new IllegalStateException("synthetic failure")
+      val failed = Verify.writeAll(spark, "/root/testdata/sf0.001", out,
+        Seq("first" -> rows(3), "boom" -> boom, "last" -> rows(5)))
+      assert(failed == Seq("boom"))
+      assert(spark.read.parquet(s"$out/first").count() == 3)
+      assert(spark.read.parquet(s"$out/last").count() == 5)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$out/boom")))
+    }
   }
 
   test("a fatal error propagates instead of being logged as a failure") {
-    val out = Files.createTempDirectory("graft_verify").toString
-    val fatal: Query = (_, _) => throw new OutOfMemoryError("synthetic")
-    intercept[OutOfMemoryError] {
-      Verify.writeAll(spark, "/root/testdata/sf0.001", out, Seq("fatal" -> fatal))
+    withTempDir("graft_verify") { out =>
+      val fatal: Query = (_, _) => throw new OutOfMemoryError("synthetic")
+      intercept[OutOfMemoryError] {
+        Verify.writeAll(spark, "/root/testdata/sf0.001", out, Seq("fatal" -> fatal))
+      }
     }
   }
 }

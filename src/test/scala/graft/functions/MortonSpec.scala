@@ -40,8 +40,6 @@ class MortonSpec extends SparkSpec {
   }
 
   test("SQL registration resolves and rejects wrong arity/types") {
-    val (ident, info, builder) = graft.GraftExtensions.mortonInterleave
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     val got = spark.sql("SELECT morton_interleave(3L, 5L) AS z").collect().head.getLong(0)
     assert(got == 39L)
     intercept[Exception](spark.sql("SELECT morton_interleave(1L)").collect())

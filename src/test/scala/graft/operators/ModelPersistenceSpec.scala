@@ -21,23 +21,24 @@ class ModelPersistenceSpec extends SparkSpec {
     val expect = assigned.select($"vec_id", $"cluster", $"sq")
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
-    // shuffle storage order on purpose: the serving fold must not depend on it
-    centroids.orderBy($"cluster".desc).write.mode("overwrite").parquet(dir)
-    val reloaded = spark.read.parquet(dir)
+    withTempDir("graft-model") { dir =>
+      // shuffle storage order on purpose: the serving fold must not depend on it
+      centroids.orderBy($"cluster".desc).write.mode("overwrite").parquet(dir)
+      val reloaded = spark.read.parquet(dir)
 
-    val packed = reloaded
-      .withColumn("dcc", graft.functions.VectorFunctions.vec_dot($"c", $"c"))
-      .agg(array_sort(collect_list(struct($"cluster", $"c", $"dcc"))).as("cents"))
-    val served = docs
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("dxx", graft.functions.VectorFunctions.vec_dot($"v", $"v"))
-      .crossJoin(broadcast(packed))
-      .withColumn("best", graft.functions.VectorFunctions.vec_argmin_cell(
-        $"v", $"dxx", $"cents"))
-      .select($"vec_id", $"best.cluster", $"best.sq")
-      .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    assert(served == expect,
-      "reloaded-model assignments diverge from the training run")
+      val packed = reloaded
+        .withColumn("dcc", graft.functions.VectorFunctions.vec_dot($"c", $"c"))
+        .agg(array_sort(collect_list(struct($"cluster", $"c", $"dcc"))).as("cents"))
+      val served = docs
+        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+        .withColumn("dxx", graft.functions.VectorFunctions.vec_dot($"v", $"v"))
+        .crossJoin(broadcast(packed))
+        .withColumn("best", graft.functions.VectorFunctions.vec_argmin_cell(
+          $"v", $"dxx", $"cents"))
+        .select($"vec_id", $"best.cluster", $"best.sq")
+        .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
+      assert(served == expect,
+        "reloaded-model assignments diverge from the training run")
+    }
   }
 }

@@ -122,10 +122,7 @@ class TextOpsPropertySpec extends SparkSpec {
       assert(viaExpr(id) == refSim(shs, 32), s"doc $id signature differs")
     }
     assert(viaExpr(999L).isEmpty, "shingle-less doc must get a null signature")
-    // SQL registration path
-    spark.sessionState.functionRegistry.registerFunction(
-      graft.GraftExtensions.simhashSig._1,
-      graft.GraftExtensions.simhashSig._2, graft.GraftExtensions.simhashSig._3)
+    // SQL path (GraftExtensions, installed by the session)
     sh.createOrReplaceTempView("simhash_sig_in")
     val sqlRes = spark.sql(
       "SELECT doc_id, simhash_sig(sh, 32) AS sig FROM simhash_sig_in")
@@ -172,10 +169,7 @@ class TextOpsPropertySpec extends SparkSpec {
       if (sig.forall(_ == null)) assert(expr(id) == null, s"doc $id: expected null sig")
       else assert(expr(id) == sig, s"doc $id signatures differ")
     }
-    // SQL registration path (covers the parser->expression wiring)
-    viaExpr.sparkSession.sessionState.functionRegistry
-      .registerFunction(graft.GraftExtensions.minhashSig._1,
-        graft.GraftExtensions.minhashSig._2, graft.GraftExtensions.minhashSig._3)
+    // SQL path (covers the parser->expression wiring)
     sh.createOrReplaceTempView("sh_view")
     val viaSql = sh.sparkSession
       .sql(s"SELECT doc_id, minhash_sig(sh, $k) AS sig FROM sh_view")

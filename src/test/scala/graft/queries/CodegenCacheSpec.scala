@@ -5,7 +5,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Spark compiles generated code through one JVM-wide class cache keyed by
   * the compiling thread's context class loader and the source text;
-  * `Engine.jvmConf` sizes it to hold the catalog. This spec pins the
+  * `Engine.session` sizes it to hold the catalog. This spec pins the
   * effect: a query set whose first run compiles more classes than Spark's
   * default cap of 100 compiles nothing when it runs again. Both runs go
   * through a new session, which gets its own class loader on the
@@ -28,18 +28,17 @@ class CodegenCacheSpec extends SparkSpec {
 
   test("a second run of a catalog query set compiles no generated class") {
     val session = spark.newSession()
-    val out = java.nio.file.Files.createTempDirectory("graft_codegen_cache").toString
-    def compiles(): Long = {
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val failed = Verify.writeAll(session, "/root/testdata/sf0.001", out,
-        names.map(n => n -> SparkEntry.queries(n)))
-      assert(failed.isEmpty, s"queries failed: $failed")
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-    }
-    try {
+    withTempDir("graft_codegen_cache") { out =>
+      def compiles(): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val failed = Verify.writeAll(session, "/root/testdata/sf0.001", out,
+          names.map(n => n -> SparkEntry.queries(n)))
+        assert(failed.isEmpty, s"queries failed: $failed")
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
       val first = compiles()
       assert(first > 100, s"the first run compiled only $first classes, within Spark's default cap")
       assert(compiles() == 0, "the second run recompiled generated classes")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
   }
 }

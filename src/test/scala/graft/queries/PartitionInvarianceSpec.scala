@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{SparkSpec, SparkEntry}
 import org.apache.spark.sql.Row
-import org.scalatest.BeforeAndAfterAll
-import java.nio.file.{Files, Path, Paths}
+import org.scalatest.{Args, Status}
+import java.nio.file.{Files, Paths}
 
 /** Partition-count invariance of catalog results — the determinism claim
   * the rounding design (display-round4 before compare, decimal partial
@@ -30,33 +30,31 @@ import java.nio.file.{Files, Path, Paths}
   * RETRAIN under exactly that leg's partitioning — the invariance claim
   * covers training, not just serving.
   */
-class PartitionInvarianceSpec extends SparkSpec with BeforeAndAfterAll {
+class PartitionInvarianceSpec extends SparkSpec {
 
   private val sfReal = "/root/testdata/sf0.001"
 
-  private def mkAlias(): Path = {
-    val dir = Files.createTempDirectory("graft_sf_alias")
+  /** Links every table of the real dataset into `dir`. */
+  private def alias(dir: String): String = {
     // Files.list returns a Stream that holds a directory fd — close it
     val listing = Files.list(Paths.get(sfReal))
     try listing.forEach { p =>
-      Files.createSymbolicLink(dir.resolve(p.getFileName), p)
+      Files.createSymbolicLink(Paths.get(dir, p.getFileName.toString), p)
     } finally listing.close()
     dir
   }
 
-  private lazy val aliasA: Path = mkAlias()
-  private lazy val aliasB: Path = mkAlias()
+  // (3-part alias, 13-part alias), shared by every test of the suite: a
+  // fixture is trained once per leg and reused by the later queries
+  private var aliases: (String, String) = _
 
-  override def afterAll(): Unit = {
-    // deleteOnExit is a no-op on a non-empty dir; remove contents here
-    for (dir <- Seq(aliasA, aliasB)) {
-      val listing = Files.list(dir)
-      try listing.forEach(Files.deleteIfExists(_))
-      finally listing.close()
-      Files.deleteIfExists(dir)
+  override def run(testName: Option[String], args: Args): Status =
+    withTempDir("graft_sf_alias") { a =>
+      withTempDir("graft_sf_alias") { b =>
+        aliases = (alias(a), alias(b))
+        super.run(testName, args)
+      }
     }
-    super.afterAll()
-  }
 
   /** (schema DDL, rows sorted by display form, value multiset). The
     * comparison is on typed Row values + schema — Row.toString alone
@@ -113,8 +111,8 @@ class PartitionInvarianceSpec extends SparkSpec with BeforeAndAfterAll {
 
   for (n <- names)
     test(s"$n is invariant to shuffle partitioning (3-part vs 13-part retrain)") {
-      val (schemaA, rowsA, msA) = rows(n, aliasA.toString, 3)
-      val (schemaB, rowsB, msB) = rows(n, aliasB.toString, 13)
+      val (schemaA, rowsA, msA) = rows(n, aliases._1, 3)
+      val (schemaB, rowsB, msB) = rows(n, aliases._2, 13)
       assert(schemaA == schemaB, s"$n schema drift: $schemaA vs $schemaB")
       assert(rowsA.size == rowsB.size, s"$n row count ${rowsA.size} vs ${rowsB.size}")
       if (msA != msB) {

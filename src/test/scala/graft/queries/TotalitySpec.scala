@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{SparkSpec, SparkEntry, Tables}
-import java.nio.file.Files
 
 /** Empty-corpus totality: every catalog query must PLAN AND EXECUTE on a
   * zero-row dataset without throwing. At 100 TB "empty" is not a corner
@@ -21,28 +20,23 @@ import java.nio.file.Files
   */
 class TotalitySpec extends SparkSpec {
 
-  private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty_sf")
-    dir.toFile.deleteOnExit()
-    val src = "/root/testdata/sf0.001"
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings")) {
-      spark.read.parquet(s"$src/$t.parquet").limit(0)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/$t.parquet")
-    }
-    dir.toString
-  }
-
   test("every catalog query executes on a zero-row dataset without throwing") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, emptyDir).collect(); None }
-        catch { case e: Throwable =>
-          Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.take(3).mkString(" | ")}")
-        } finally spark.catalog.clearCache()
+    withTempDir("graft_empty_sf") { dir =>
+      val src = "/root/testdata/sf0.001"
+      for (t <- Tables.names) {
+        spark.read.parquet(s"$src/$t.parquet").limit(0)
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$dir/$t.parquet")
+      }
+      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+        case (name, fn) =>
+          try { fn(spark, dir).collect(); None }
+          catch { case e: Throwable =>
+            Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.take(3).mkString(" | ")}")
+          } finally spark.catalog.clearCache()
+      }
+      assert(failures.isEmpty,
+        s"${failures.size} queries throw on empty input:\n  ${failures.mkString("\n  ")}")
     }
-    assert(failures.isEmpty,
-      s"${failures.size} queries throw on empty input:\n  ${failures.mkString("\n  ")}")
   }
 }

@@ -4,7 +4,6 @@ import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
-import java.nio.file.Files
 
 /** Guard against the next events.ts physical-format drift.
   *
@@ -46,9 +45,10 @@ class EventsTsDriftSpec extends SparkSpec {
   test("tsToMicros yields identical micros for ns-as-long, µs-NTZ, and µs-UTC encodings") {
     val expected = rows.toMap
     for (dt <- Seq[DataType](LongType, TimestampNTZType, TimestampType)) {
-      val dir = Files.createTempDirectory(s"graft_tsdrift").toString
-      val got = writeAndNormalize(dir, dt)
-      assert(got == expected, s"normalized micros diverge for encoding $dt")
+      withTempDir("graft_tsdrift") { dir =>
+        val got = writeAndNormalize(dir, dt)
+        assert(got == expected, s"normalized micros diverge for encoding $dt")
+      }
     }
   }
 

@@ -14,7 +14,6 @@ class FileStreamSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("file-stream rollup equals the batch rollup on the same parquet") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def rollup(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("hour_bucket", expr("ts div 3600000000"))
         .groupBy(col("hour_bucket"), col("event_type"))

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.music.{Event, Ticket, Topologies}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import scala.collection.mutable
 
 class SinksSpec extends SparkSpec {
@@ -15,14 +14,15 @@ class SinksSpec extends SparkSpec {
     val tickets = (1 to 12).map(i => Ticket(f"t$i%02d", s"c$i", "e1", 10.0)).toDF()
     val routed = Topologies.confirmationRoute(
       Topologies.purchaseEventTicket(tickets, events, col("id")), events)
-    val dir = Files.createTempDirectory("routed").toString
-    Sinks.writeRoutedBatch(routed, "route", dir)
-    val back = spark.read.parquet(dir)
-    val counts = back.groupBy("route").count().as[(String, Long)].collect().toMap
-    assert(counts == Map("confirmed" -> 7L, "confirmed-low-stock" -> 3L, "rejected" -> 2L))
-    // physical layout: one directory per route (partition pruning on read)
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("route=confirmed", "route=confirmed-low-stock", "route=rejected"))
+    withTempDir("routed") { dir =>
+      Sinks.writeRoutedBatch(routed, "route", dir)
+      val back = spark.read.parquet(dir)
+      val counts = back.groupBy("route").count().as[(String, Long)].collect().toMap
+      assert(counts == Map("confirmed" -> 7L, "confirmed-low-stock" -> 3L, "rejected" -> 2L))
+      // physical layout: one directory per route (partition pruning on read)
+      val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
+      assert(dirs.toSeq == Seq("route=confirmed", "route=confirmed-low-stock", "route=rejected"))
+    }
   }
 
   test("routedForeachBatch: every route written from one micro-batch snapshot") {

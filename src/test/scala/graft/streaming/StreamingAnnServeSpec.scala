@@ -24,36 +24,37 @@ class StreamingAnnServeSpec extends SparkSpec {
     val corpus = docs.toDF("vec_id", "embedding")
     val (m, k, coarseK, dims) = (2, 2, 2, 4)
     val (a, c, codes, books) = Similarity.coarsePqModels(corpus, coarseK, 2, m, k, 2, dims)
-    val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
-    ModelStore.saveCoarsePq(dir, a, c, codes, books, m, k, coarseK, dims)
-    val (la, lc, lcodes, lbooks) = ModelStore.loadCoarsePq(spark, dir, m, k, coarseK, dims)
+    withTempDir("graft-serve") { dir =>
+      ModelStore.saveCoarsePq(dir, a, c, codes, books, m, k, coarseK, dims)
+      val (la, lc, lcodes, lbooks) = ModelStore.loadCoarsePq(spark, dir, m, k, coarseK, dims)
 
-    val queries = docs.take(6)
-    val expect = Similarity.ivfPqSearchFrom(
-      la, lc, lcodes, lbooks, queries.toDF("vec_id", "embedding"), m, dims / m, 3, 2)
-      .as[(Long, Long, Int, Double)].collect().toSet
+      val queries = docs.take(6)
+      val expect = Similarity.ivfPqSearchFrom(
+        la, lc, lcodes, lbooks, queries.toDF("vec_id", "embedding"), m, dims / m, 3, 2)
+        .as[(Long, Long, Int, Double)].collect().toSet
 
-    val in = MemoryStream[(Long, Array[Float])]
-    val got = scala.collection.mutable.Set[(Long, Long, Int, Double)]()
-    val q = in.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        got ++= Similarity.ivfPqSearchFrom(
-          la, lc, lcodes, lbooks, b, m, dims / m, 3, 2)
-          .as[(Long, Long, Int, Double)].collect()
-        ()
-      }
-      .start()
-    try {
-      in.addData(queries.take(2): _*)
-      q.processAllAvailable()
-      in.addData(queries.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
+      val in = MemoryStream[(Long, Array[Float])]
+      val got = scala.collection.mutable.Set[(Long, Long, Int, Double)]()
+      val q = in.toDF().toDF("vec_id", "embedding")
+        .writeStream
+        .outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          got ++= Similarity.ivfPqSearchFrom(
+            la, lc, lcodes, lbooks, b, m, dims / m, 3, 2)
+            .as[(Long, Long, Int, Double)].collect()
+          ()
+        }
+        .start()
+      try {
+        in.addData(queries.take(2): _*)
+        q.processAllAvailable()
+        in.addData(queries.drop(2): _*)
+        q.processAllAvailable()
+      } finally q.stop()
 
-    assert(expect.nonEmpty, "degenerate fixture: the batch search returned nothing")
-    assert(got.toSet == expect,
-      "streamed per-batch search diverges from the batch search over the stored model")
+      assert(expect.nonEmpty, "degenerate fixture: the batch search returned nothing")
+      assert(got.toSet == expect,
+        "streamed per-batch search diverges from the batch search over the stored model")
+    }
   }
 }

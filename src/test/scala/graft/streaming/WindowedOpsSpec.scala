@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.GraftExtensions
+import graft.functions.VectorFunctions.{minhash_sig, simhash_sig}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -76,44 +76,55 @@ class WindowedOpsSpec extends SparkSpec {
   }
 
   test("vec_dot / simhash16 / vec_argmin_cell register as SQL functions (GraftExtensions builders)") {
-    Seq(GraftExtensions.vecDot, GraftExtensions.simhash16,
-      GraftExtensions.vecArgminCell).foreach {
-      case (ident, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    val r = spark.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
-      .as[Double].head()
-    assert(r == 11.0)
-    // one token hash 0b0101: bits 0,2 vote +1 (set), others -1... all-zero
-    // sums stay >= 0 only for the set bits of the single vote
-    val sh = spark.sql("SELECT simhash16(array(5)) AS s").as[Int].head()
-    assert(sh == 5)
-    // (1,0) against centroids 0=(1,0), 1=(0,1): cluster 0 at sq 0
-    val am = spark.sql(
-      """SELECT vec_argmin_cell(array(1.0D, 0.0D), 1.0D, array(
-        |  named_struct('cluster', 0, 'c', array(1.0D, 0.0D), 'dcc', 1.0D),
-        |  named_struct('cluster', 1, 'c', array(0.0D, 1.0D), 'dcc', 1.0D))) AS r""".stripMargin)
-      .select("r.sq", "r.cluster").as[(Double, Int)].head()
-    assert(am == ((0.0, 0)))
-    // the aggregate registers too: top-2 of three members, tie on cnt=2
-    // broken by key asc
-    val (ident, info, builder) = GraftExtensions.topKByCount
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    val tk = spark.sql(
-      """SELECT transform(top_k_by_count(named_struct('cnt', cnt, 'key', key), 2),
-        |  x -> x.key) AS t
-        |FROM VALUES (2L, 'b'), (2L, 'a'), (1L, 'c') AS v(cnt, key)""".stripMargin)
-      .as[Seq[String]].head()
-    assert(tk == Seq("a", "b"))
-    // k accepts any FOLDABLE integer expression, not just a bare literal:
-    // arithmetic over literals and an explicit cast both resolve
-    for (kExpr <- Seq("1+1", "CAST(2 AS INT)", "2L")) {
-      val tf = spark.sql(
-        s"""SELECT transform(top_k_by_count(named_struct('cnt', cnt, 'key', key), $kExpr),
-           |  x -> x.key) AS t
-           |FROM VALUES (2L, 'b'), (2L, 'a'), (1L, 'c') AS v(cnt, key)""".stripMargin)
+    // Engine.session installs GraftExtensions, so all eight functions
+    // resolve in plain SQL with no registration, in the shared session and
+    // in a new session of the same context
+    for (s <- Seq(spark, spark.newSession())) {
+      val r = s.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+        .as[Double].head()
+      assert(r == 11.0)
+      // one token hash 0b0101: bits 0,2 vote +1 (set), others -1... all-zero
+      // sums stay >= 0 only for the set bits of the single vote
+      val sh = s.sql("SELECT simhash16(array(5)) AS s").as[Int].head()
+      assert(sh == 5)
+      // (1,0) against centroids 0=(1,0), 1=(0,1): cluster 0 at sq 0
+      val am = s.sql(
+        """SELECT vec_argmin_cell(array(1.0D, 0.0D), 1.0D, array(
+          |  named_struct('cluster', 0, 'c', array(1.0D, 0.0D), 'dcc', 1.0D),
+          |  named_struct('cluster', 1, 'c', array(0.0D, 1.0D), 'dcc', 1.0D))) AS r""".stripMargin)
+        .select("r.sq", "r.cluster").as[(Double, Int)].head()
+      assert(am == ((0.0, 0)))
+      // the aggregate: top-2 of three members, tie on cnt=2 broken by key asc
+      val tk = s.sql(
+        """SELECT transform(top_k_by_count(named_struct('cnt', cnt, 'key', key), 2),
+          |  x -> x.key) AS t
+          |FROM VALUES (2L, 'b'), (2L, 'a'), (1L, 'c') AS v(cnt, key)""".stripMargin)
         .as[Seq[String]].head()
-      assert(tf == Seq("a", "b"), s"k = $kExpr")
+      assert(tk == Seq("a", "b"))
+      // k accepts any FOLDABLE integer expression, not just a bare literal:
+      // arithmetic over literals and an explicit cast both resolve
+      for (kExpr <- Seq("1+1", "CAST(2 AS INT)", "2L")) {
+        val tf = s.sql(
+          s"""SELECT transform(top_k_by_count(named_struct('cnt', cnt, 'key', key), $kExpr),
+             |  x -> x.key) AS t
+             |FROM VALUES (2L, 'b'), (2L, 'a'), (1L, 'c') AS v(cnt, key)""".stripMargin)
+          .as[Seq[String]].head()
+        assert(tf == Seq("a", "b"), s"k = $kExpr")
+      }
+      // word 2-shingles, first occurrence order, duplicates dropped
+      val shingles = s.sql("SELECT shingles(array('a', 'b', 'a', 'b'), 2) AS s")
+        .as[Seq[String]].head()
+      assert(shingles == Seq("a b", "b a"))
+      // the signatures equal the Column API's on the same shingles
+      val sigs = s.sql(
+        """SELECT sh, minhash_sig(sh, 4) AS m, simhash_sig(sh, 32) AS h,
+          |  morton_interleave(3L, 5L) AS z
+          |FROM (SELECT shingles(array('x', 'y', 'z', 'w'), 2) AS sh)""".stripMargin)
+      val viaColumns = sigs.select(minhash_sig($"sh", 4), simhash_sig($"sh", 32))
+        .as[(Seq[Long], Long)].head()
+      assert(sigs.select("m", "h").as[(Seq[Long], Long)].head() == viaColumns)
+      assert(viaColumns._1.size == 4)
+      assert(sigs.select("z").as[Long].head() == 39L)
     }
   }
 }
