@@ -24,15 +24,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - graft's SQL functions are installed through [[GraftExtensions]], and
   *     `file:` paths go through the java.nio local file system
   *     ([[NioLocalFileSystem]]).
+  *   - a final sort runs as one task when its measured input fits one
+  *     advisory partition ([[SmallSort]], installed with the functions), so
+  *     a small result skips the range exchange and its sampling job.
   */
 object Engine {
   /** Silence WindowExec's "No Partition Defined" warning — called ONLY by
-    * the Bench/Verify mains, where the engine's one deliberately-global
-    * window (`x3_moving_avg`, calendar-bounded input — see its scaladoc)
-    * fires it as pure noise on every measured run. Interactive sessions
-    * (this factory) deliberately KEEP the warning: for any future
-    * accidentally-unpartitioned window it is exactly the signal that
-    * matters, and a level-based suppression here would hide it JVM-wide. */
+    * the Bench, Verify and ProfileJobs mains, where the engine's one
+    * deliberately-global window (`x3_moving_avg`, calendar-bounded input —
+    * see its scaladoc) fires it as pure noise on every measured run.
+    * Interactive sessions (this factory) deliberately KEEP the warning: for
+    * any future accidentally-unpartitioned window it is exactly the signal
+    * that matters, and a level-based suppression here would hide it
+    * JVM-wide. */
   def tuneLogging(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",

@@ -8,6 +8,10 @@ package graft
   *   - BroadcastHashJoin on dimension sides; SortMergeJoin only fact-fact
   *   - WholeStageCodegen spans covering the hot expressions
   *   - no unexpected Exchange (shuffle) nodes
+  * With AQE on this is the initial plan, planned before any stage runs: a
+  * range exchange that [[SmallSort]] removes at run time still shows here.
+  * The executed plan (`queryExecution.executedPlan` after an action) shows
+  * the final one.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

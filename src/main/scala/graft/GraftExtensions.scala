@@ -4,11 +4,18 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, Limit, LogicalPlan, Project, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
+import org.apache.spark.sql.internal.SQLConf
 import graft.functions.{MinHashSig, MortonInterleave, Shingles, SimHash16, SimHashSig, TopKByCount, VecArgminCell, VecDot}
 
 /** SparkSessionExtensions entry point: registers graft's custom Catalyst
   * expressions as SQL functions, so `spark.sql("SELECT vec_dot(a, b)")`
-  * works next to the Column API. [[Engine.session]] installs it.
+  * works next to the Column API, and adds the [[SmallSort]] runtime rule.
+  * [[Engine.session]] installs it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -20,6 +27,60 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.vecArgminCell)
     ext.injectFunction(GraftExtensions.topKByCount)
     ext.injectFunction(GraftExtensions.mortonInterleave)
+    ext.injectRuntimeOptimizerRule(_ => SmallSort)
+  }
+}
+
+/** Adaptive-execution rule: a global sort whose input has been measured to
+  * fit one advisory partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+  * sorts in one task, `Sort(global = false, Repartition(1, shuffle = false, ..))`.
+  * That plans no range exchange, so the query skips the exchange's
+  * boundary-sampling job and its stage. The total order is the same at any
+  * size; the threshold only decides when one task is cheaper.
+  *
+  * AQE runs the rule each time a query stage materializes, before it plans
+  * the stages above, so the range exchange is not yet created when it
+  * fires. The size is trusted only when every path below the sort ends in a
+  * materialized stage and passes no `Generate` and no join other than a
+  * semi or anti join:
+  *   - a scan's size is its compressed file size;
+  *   - Spark sizes an explode like its input;
+  *   - Spark sizes a join as the product of its inputs' sizes, and a
+  *     broadcast side's size changes once its broadcast stage exists, so
+  *     the decision would follow the order in which stages finish.
+  * A semi or anti join is sized as its left side, which bounds it.
+  */
+object SmallSort extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    // a sort under a limit plans as a top-k (TakeOrderedAndProject), which
+    // has no range exchange to remove
+    val topK = plan.collect {
+      case Limit(_, s: Sort) => s
+      case Limit(_, Project(_, s: Sort)) => s
+    }
+    plan.transformDown {
+      case s @ Sort(_, true, child, _) if !topK.exists(_ eq s) && !rangeStage(child) &&
+          measured(child) &&
+          child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
+        s.copy(global = false, child = Repartition(1, shuffle = false, child))
+    }
+  }
+
+  private def measured(p: LogicalPlan): Boolean = p match {
+    case stage: LogicalQueryStage => stage.isMaterialized
+    case _: Generate => false
+    case j: Join if j.joinType != LeftSemi && j.joinType != LeftAnti => false
+    case _ => p.children.nonEmpty && p.children.forall(measured)
+  }
+
+  /** The sort's own range exchange has already run: AQE links that stage to
+    * the sort's child, and one task would only sort its output again. */
+  private def rangeStage(p: LogicalPlan): Boolean = p match {
+    case stage: LogicalQueryStage => stage.physicalPlan.exists {
+      case s: ShuffleQueryStageExec => s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    case _ => false
   }
 }
 

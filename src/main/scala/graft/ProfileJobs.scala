@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import java.util.concurrent.{Semaphore, TimeUnit}
 import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1): run catalog queries
@@ -14,8 +14,8 @@ import scala.util.control.NonFatal
   * shuffle-bound (fix: guide §2-3) at bench scale.
   *
   * Usage: runMain graft.ProfileJobs <sfDir> [reps] [name ...] (default: all)
-  * Prints one JSON line per query (median wall over reps, counters from the
-  * last rep) plus a trailing summary line.
+  * Prints one JSON line per query (min wall over reps, counters from the
+  * last rep) plus a trailing line of the counters' totals.
   */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
@@ -30,19 +30,28 @@ object ProfileJobs {
     @volatile var shufRead = 0L
     @volatile var shufWrite = 0L
     @volatile var input = 0L
+    val marker = "graft-profile-jobs-marker"
+    @volatile var markerJob = -1
+    @volatile var atMarker = (0, 0, 0, 0L, 0L, 0L)
+    val markerEnded = new Semaphore(0)
     val verbose = sys.env.get("GRAFT_PROFILE_VERBOSE").contains("1")
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs += 1
-        if (verbose) {
-          val desc = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(Option(j.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("?")
-          println(s"[job] ${j.jobId} stages=${j.stageInfos.size} $desc")
+        val props = Option(j.properties)
+        val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (desc.contains(marker)) {
+          markerJob = j.jobId
+          atMarker = (jobs, stages, tasks, shufRead, shufWrite, input)
+        } else {
+          jobs += 1
+          if (verbose) {
+            val label = desc.orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+            println(s"[job] ${j.jobId} stages=${j.stageInfos.size} ${label.getOrElse("?")}")
+          }
         }
       }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == markerJob) markerEnded.release()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
         stages += 1
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -57,6 +66,19 @@ object ProfileJobs {
     }
     spark.sparkContext.addSparkListener(listener)
 
+    /** The counters as they stood when a marker job started. The bus
+      * delivers events in order, so every event of the jobs before the
+      * marker has been counted by then; waiting for the marker's end as
+      * well keeps its own stage and task out of the next reading. */
+    def drain(): (Int, Int, Int, Long, Long, Long) = {
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      if (!markerEnded.tryAcquire(30, TimeUnit.SECONDS))
+        throw new IllegalStateException("the marker job's end never reached the listener")
+      atMarker
+    }
+
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
@@ -65,25 +87,28 @@ object ProfileJobs {
     try SparkEntry.queries("e1_knn_brute")(spark, "/root/testdata/sf0.001")
       .write.format("noop").mode("overwrite").save()
     catch { case NonFatal(_) => () }
+    drain()
 
+    var totals = (0, 0, 0)
     names.foreach { n =>
+      var counts = (0, 0, 0, 0L, 0L, 0L)
       val walls = (1 to reps).map { _ =>
         spark.catalog.clearCache()
         jobs = 0; stages = 0; tasks = 0; shufRead = 0L; shufWrite = 0L; input = 0L
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        // drain queued listener events so the counters are complete
-        // (listenerBus is private[spark]; a short sleep suffices for a
-        // local-mode bus that is idle once the action returns)
-        Thread.sleep(150)
-        (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
+        counts = drain()
+        wall
       }
       spark.catalog.clearCache()
-      val wall = walls.min
+      val (j, st, t, sr, sw, in) = counts
+      totals = (totals._1 + j, totals._2 + st, totals._3 + t)
       println(
-        f"""{"q":"$n","wall_s":$wall%.3f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,"shuf_read_mb":${shufRead / 1e6}%.1f,"shuf_write_mb":${shufWrite / 1e6}%.1f,"input_mb":${input / 1e6}%.1f}""")
+        f"""{"q":"$n","wall_s":${walls.min}%.3f,"jobs":$j,"stages":$st,"tasks":$t,"shuf_read_mb":${sr / 1e6}%.1f,"shuf_write_mb":${sw / 1e6}%.1f,"input_mb":${in / 1e6}%.1f}""")
     }
+    println(s"""{"queries":${names.size},"jobs":${totals._1},"stages":${totals._2},"tasks":${totals._3}}""")
     spark.stop()
   }
 }

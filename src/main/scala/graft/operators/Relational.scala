@@ -277,32 +277,6 @@ object Relational {
     */
   def dec(c: Column): Column = c.cast("decimal(18,2)")
 
-  /** Deterministic total order for a FIXED-cardinality result — one whose
-    * row count is bounded by the key domain (nations, regions, event types,
-    * date buckets, top-K), not by the input size, so it is tiny at ANY
-    * scale factor including 100 TB.
-    *
-    * `orderBy` plans an `Exchange rangepartitioning`, which costs one
-    * boundary-sampling job plus one AQE stage materialization per query —
-    * pure scheduler latency when the result is a handful of rows (this
-    * host: 60-100 ms per empty job; guide §2.4 "an orderBy used only to
-    * make output deterministic" is the canonical accidental exchange).
-    * Sorting the single coalesced partition produces the identical total
-    * order with zero exchanges. The single-task sort is NOT a scale cliff
-    * precisely because the cardinality is fixed: the final aggregate that
-    * produces these rows is already a 1-few-task stage at any scale.
-    *
-    * Only apply to results with scale-independent cardinality; anything
-    * corpus-bounded keeps the range-partitioned global sort. */
-  def sortBounded(df: DataFrame, cols: Column*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols: _*)
-
-  /** Chainable form of [[sortBounded]]: `df.orderByBounded(cols…)` reads
-    * like the `orderBy` it replaces at fixed-cardinality query tails. */
-  implicit class BoundedSortOps(private val df: DataFrame) extends AnyVal {
-    def orderByBounded(cols: Column*): DataFrame = sortBounded(df, cols: _*)
-  }
-
   /** Display rounding to 4 dp via `floor(x·10⁴ + 0.5)/10⁴` — pure IEEE
     * multiply/add/floor/divide, so Spark and DuckDB agree bit-for-bit.
     * The engines' native `round(x, 4)` functions disagree at half-boundaries

@@ -36,7 +36,7 @@ object RelationalQueries {
         revenue.as("sum_disc_price"),
         (sum(dec(col("l_quantity"))).cast("double") / count(lit(1))).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      .orderByBounded(col("l_returnflag"), col("l_linestatus"))
+      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   /** KTable semantics (SURVEY §2.1 S2): latest event per user. */
   def s2LatestByKey(s: SparkSession, d: String): DataFrame = {
@@ -84,7 +84,7 @@ object RelationalQueries {
     clicks.union(views)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(dec(col("value"))).cast("double").as("sum_value"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
   }
 
   /** Content-based routing (SURVEY §2.3 P6, reference 3-way branch in
@@ -96,7 +96,7 @@ object RelationalQueries {
         (col("value") >= 20, "MID")), "LOW"))
     routed.groupBy(col("route"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(dec(col("value"))).cast("double").as("sum_value"))
-      .orderByBounded(col("route"), col("event_type"))
+      .orderBy(col("route"), col("event_type"))
   }
 
   /** Stringify + enrich (SURVEY §2.3 P7, reference AddressSortAndStringify
@@ -160,7 +160,7 @@ object RelationalQueries {
     li.hint("merge").join(dims, li("l_orderkey") === col("o_orderkey"))
       .groupBy(col("r_name"), col("n_name"))
       .agg(revenue.as("revenue"), count(lit(1)).as("n_items"))
-      .orderByBounded(col("r_name"), col("n_name"))
+      .orderBy(col("r_name"), col("n_name"))
   }
 
   /** Out-of-state sales analog (SURVEY §2.5 A4 + §2.4 quasi-theta note):
@@ -269,7 +269,7 @@ object RelationalQueries {
       .agg(count(lit(1)).as("cnt"))
     topKPerGroup(counted, Seq("s_nationkey"), Seq(col("cnt").desc, col("p_type").asc), 3)
       .select(col("s_nationkey"), col("p_type"), col("cnt"), col("rank"))
-      .orderByBounded(col("s_nationkey"), col("rank"))
+      .orderBy(col("s_nationkey"), col("rank"))
   }
 
   /** Capacity ledger (SURVEY §2.5 A2, reference PurchaseEventTicket):
@@ -301,7 +301,7 @@ object RelationalQueries {
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"),
         count(lit(1)).as("n_events"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
 
   /** As-of enrichment (beyond the reference; the general form of its
     * temporal stream⋈table joins): each click event picks up the latest
@@ -413,7 +413,7 @@ object RelationalQueries {
         coalesce(col("r_name"), lit("ALL")).as("region_name"),
         coalesce(col("n_name"), lit("ALL")).as("nation_name"),
         col("revenue"), col("n_items"))
-      .orderByBounded(col("gid"), col("region_name"), col("nation_name"))
+      .orderBy(col("gid"), col("region_name"), col("nation_name"))
   }
 
   /** Cube (the rollup's sibling: ALL grouping-set combinations — here
@@ -429,7 +429,7 @@ object RelationalQueries {
         coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
         col("n"), col("rev"))
-      .orderByBounded(col("gid"), col("status"), col("priority"))
+      .orderBy(col("gid"), col("status"), col("priority"))
 
   /** Anti join (beyond the reference's join surface): customers with no
     * order since 1997-07-01. The filter on the right side is pushed to the
@@ -454,7 +454,7 @@ object RelationalQueries {
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_customers"))
-      .orderByBounded(col("c_mktsegment"))
+      .orderBy(col("c_mktsegment"))
   }
 
   /** JSON field extraction (SURVEY §2.8 serde surface on testdata: the
@@ -466,7 +466,7 @@ object RelationalQueries {
         get_json_object(col("props"), "$.k").cast("long").as("k"))
       .groupBy(col("event_type"))
       .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
 
   /** Approximate distinct (the 100 TB path a6's scaladoc points at): HLL
     * sketch per group. The raw estimate is engine-specific (DuckDB can't
@@ -505,7 +505,7 @@ object RelationalQueries {
       .select(col("event_type"), col("exact_users"), col("n_events"),
         (abs(col("approx_users") - col("exact_users")) <=
           col("exact_users").cast("double") * 0.05).as("approx_ok"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
 
   /** Funnel / event-sequence analytics — the ORDERED-step family the
     * windowed rollups don't cover: per user, the first 'view' and the
@@ -566,7 +566,7 @@ object RelationalQueries {
       .select(col("cohort_day"), col("wk"), col("active_users"), col("cohort_size"),
         graft.operators.Relational.round4(
           col("active_users").cast("double") / col("cohort_size")).as("retention"))
-      .orderByBounded(col("cohort_day"), col("wk"))
+      .orderBy(col("cohort_day"), col("wk"))
   }
 
   /** Per-group OLS trend line (x10) — the regression staple of an
@@ -625,7 +625,7 @@ object RelationalQueries {
         when(col("denx") =!= 0 && col("deny") =!= 0,
           (col("num").cast("double") * col("num").cast("double"))
             / (col("denx").cast("double") * col("deny").cast("double"))).as("r2"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
   }
 
   /** Entity-graph PageRank (x11) — graph centrality in the shape it
@@ -645,7 +645,7 @@ object RelationalQueries {
     graft.operators.Graph.pagerankInt(tradeFlowEdges(s, d), nodes, iters = 5)
       .join(Tables.nation(s, d), col("id") === col("n_nationkey"))
       .select(col("n_name"), col("pr"))
-      .orderByBounded(col("pr").desc, col("n_name"))
+      .orderBy(col("pr").desc, col("n_name"))
   }
 
   /** The customer-nation → supplier-nation trade-flow edge aggregation
@@ -692,7 +692,7 @@ object RelationalQueries {
     graft.operators.Graph.bfsLevels(edges, nodes, src = 0L, iters = 6)
       .join(Tables.nation(s, d), col("id") === col("n_nationkey"))
       .select(col("n_name"), col("lvl"))
-      .orderByBounded(col("n_name"))
+      .orderBy(col("n_name"))
   }
 
   /** CDC merge-apply gate (x16, [[graft.operators.Relational.cdcApply]]):
@@ -815,7 +815,7 @@ object RelationalQueries {
         (!col("aligned") || (col("n_rect") === col("n_zrange"))).as("exact_ok"),
         graft.operators.Relational.round4(when(col("n_zrange") > 0,
           col("n_rect").cast("double") / col("n_zrange"))).as("efficiency"))
-      .orderByBounded(col("rect"))
+      .orderBy(col("rect"))
   }
 
   /** Markov transition matrix (x13) — the user-journey model behind
@@ -850,7 +850,7 @@ object RelationalQueries {
     tr.join(tot, Seq("src"))
       .select(col("src"), col("dst"), col("n_trans"), col("n_src"),
         round4(col("n_trans").cast("double") / col("n_src")).as("prob"))
-      .orderByBounded(col("src"), col("dst"))
+      .orderBy(col("src"), col("dst"))
   }
 
   /** Zone-map pruning (x15) — x12's layout claim made MEASURABLE: lay the
@@ -955,7 +955,7 @@ object RelationalQueries {
         sum(col("n_match")).as("n_match"),
         (sum(when(!col("touched"), col("n_match")).otherwise(0L)) === 0L)
           .as("sound_ok"))
-      .orderByBounded(col("layout"), col("rect"))
+      .orderBy(col("layout"), col("rect"))
   }
 
   /** Triangle census of the co-purchase graph (x14) — graph-structure
@@ -1032,7 +1032,7 @@ object RelationalQueries {
         ok(col("__est_1")).as("approx_ok"),
         ok(col("__est_4")).as("merge4_ok"),
         ok(col("__est_8")).as("merge8_ok"))
-      .orderByBounded(col("event_type"))
+      .orderBy(col("event_type"))
   }
 
   /** Bottom-k uniform sample per group (a15) — the DISTRIBUTED form of
@@ -1064,7 +1064,7 @@ object RelationalQueries {
       .select(col("event_type"), posexplode(col("__s")))
       .select(col("event_type"), (col("pos") + 1).cast("int").as("smp_rank"),
         col("col.key").as("user_id"))
-      .orderByBounded(col("event_type"), col("smp_rank"))
+      .orderBy(col("event_type"), col("smp_rank"))
   }
 
   /** Last-touch attribution (x18) — the marketing-analytics staple: each
@@ -1093,7 +1093,7 @@ object RelationalQueries {
       .groupBy(coalesce(col("touch"), lit("direct")).as("channel"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(dec(col("value"))).cast("double").as("revenue"))
-      .orderByBounded(col("channel"))
+      .orderBy(col("channel"))
   }
 
   /** Equi-width histogram (a17) — the data-profiling primitive that was
@@ -1119,7 +1119,7 @@ object RelationalQueries {
       .select(col("event_type"), col("bucket"), col("n"),
         graft.operators.Relational.round4(
           col("n").cast("double") / col("total")).as("share"))
-      .orderByBounded(col("event_type"), col("bucket"))
+      .orderBy(col("event_type"), col("bucket"))
   }
 
   /** Weighted sample WITHOUT replacement per group (a16) — a15's uniform
@@ -1155,7 +1155,7 @@ object RelationalQueries {
       .select(col("c_mktsegment"), posexplode(col("__s")))
       .select(col("c_mktsegment"), (col("pos") + 1).cast("int").as("smp_rank"),
         col("col.key").as("c_custkey"))
-      .orderByBounded(col("c_mktsegment"), col("smp_rank"))
+      .orderBy(col("c_mktsegment"), col("smp_rank"))
   }
 
   /** Theta-sketch set INTERSECTION as a gate (a14) — the operation the
@@ -1229,7 +1229,7 @@ object RelationalQueries {
           col("__union") * (3.0 / math.sqrt(1 << smallLgK))) &&
           within(col("__msk7_a"), col("__msk7_b"),
             col("__union") * (3.0 / math.sqrt(1 << smallLgK)))).as("est_regime_ok"))
-      .orderByBounded(col("type_a"), col("type_b"))
+      .orderBy(col("type_a"), col("type_b"))
   }
 
   /** Count-Min heavy hitters (the bounded-memory path a8's scaladoc family
@@ -1309,7 +1309,7 @@ object RelationalQueries {
       .groupBy(col("n_regionkey"))
       .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
         count(lit(1)).as("n"))
-      .orderByBounded(col("n_regionkey"))
+      .orderBy(col("n_regionkey"))
 
   /** Correlated scalar subquery (the TPC-H Q17 shape, beyond the
     * reference): revenue from small-quantity orders of one brand's parts,

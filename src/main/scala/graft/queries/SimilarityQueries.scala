@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.operators.Similarity._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.operators.Relational.BoundedSortOps
 import org.apache.spark.sql.functions._
 
 /** Similarity-search operators over the `embeddings` table. */
@@ -16,20 +15,20 @@ object SimilarityQueries {
     * baseline every ANN variant is measured against. */
   def e1KnnBrute(s: SparkSession, d: String): DataFrame =
     knnBruteForce(Tables.embeddings(s, d), queriesSide(s, d), 5)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
 
   /** IVF-style ANN: probe only the query's coarse cell (`label` stands in
     * for the k-means assignment). */
   def e2KnnIVF(s: SparkSession, d: String): DataFrame =
     knnIVF(Tables.embeddings(s, d), queriesSide(s, d), 5)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
 
   /** Multi-probe IVF ANN: probe the 2 nearest cells by centroid similarity
     * (centroids derived in-plan — the e4 training step feeding the e2
     * search shape; the recall dial over single-probe IVF). */
   def e6KnnIVFMultiProbe(s: SparkSession, d: String): DataFrame =
     knnIVFMultiProbe(Tables.embeddings(s, d), queriesSide(s, d), 5, nprobe = 2)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
 
   /** Embedding near-dup pairs within a coarse cell at cosine ≥ 0.35. */
   def e3CosNeardup(s: SparkSession, d: String): DataFrame =
@@ -119,7 +118,7 @@ object SimilarityQueries {
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("sqr").cast("decimal(18,4)")).cast("double").as("inertia"))
-      .orderByBounded(col("cluster"))
+      .orderBy(col("cluster"))
 
   /** Multi-probe IVF ANN over the LEARNED quantizer: e6's probe/scan shape
     * with cells and probe centroids from the in-plan k-means instead of
@@ -127,7 +126,7 @@ object SimilarityQueries {
   def e11KnnIVFLearned(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     knnIVFMultiProbeLearned(cp.assigned, cp.centroids, queriesSide(s, d), 5, nprobe = 2)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   /** Recall@5 of the learned-IVF search against the brute-force ground
@@ -154,7 +153,7 @@ object SimilarityQueries {
       .select(col("q_id"), col("n_truth"), col("n_hit"),
         graft.operators.Relational.round4(
           col("n_hit").cast("double") / col("n_truth")).as("recall"))
-      .orderByBounded(col("q_id"))
+      .orderBy(col("q_id"))
   }
 
   /** Probe-count sensitivity of learned-IVF recall — the recall/cost dial
@@ -216,7 +215,7 @@ object SimilarityQueries {
         recall(col("h4")).as("recall_4"))
       .withColumn("monotone",
         col("recall_1") <= col("recall_2") && col("recall_2") <= col("recall_4"))
-      .orderByBounded(col("q_id"))
+      .orderBy(col("q_id"))
   }
 
   /** PQ geometry shared by the e13 gate and its generated oracle: 2
@@ -241,7 +240,7 @@ object SimilarityQueries {
     val cp = Models.coarsePq(s, d)
     graft.operators.Similarity.pqAdcSearchFrom(
       cp.codes, cp.books, queriesSide(s, d), PqM, KmeansDims / PqM, 5)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   /** IVF-PQ (IVFADC) top-5 search: the coarse cells (e9's k-means), the PQ
@@ -253,7 +252,7 @@ object SimilarityQueries {
     graft.operators.Similarity.ivfPqSearchFrom(
       cp.assigned, cp.centroids, cp.codes, cp.books, queriesSide(s, d),
       PqM, KmeansDims / PqM, topK = 5, nprobe = 2)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   /** Residual product quantization vs raw PQ — the IVFADC encoding choice
@@ -319,7 +318,7 @@ object SimilarityQueries {
     graft.operators.Similarity.ivfAdcResidualSearchFrom(
       cp.assigned, cp.centroids, rp.codes, rp.books, queriesSide(s, d),
       PqM, KmeansDims / PqM, topK = 5, nprobe = 2)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   /** Recall@5 of the full IVFADC search (e17) against brute-force
@@ -370,7 +369,7 @@ object SimilarityQueries {
       .select(col("q_id"), col("n_truth"), col("n_hit"),
         graft.operators.Relational.round4(
           col("n_hit").cast("double") / col("n_truth")).as("recall"))
-      .orderByBounded(col("q_id"))
+      .orderBy(col("q_id"))
   }
 
   /** ADC shortlist re-ranking (e22) — the refine step of Jégou et al.
@@ -438,7 +437,7 @@ object SimilarityQueries {
         graft.operators.Relational.round4(
           col("hit_rerank").cast("double") / col("n_truth")).as("recall_rerank"),
         (col("hit_rerank") >= col("hit_adc")).as("rerank_ge"))
-      .orderByBounded(col("q_id"))
+      .orderBy(col("q_id"))
   }
 
   /** PQ geometry dial, measured: exhaustive-ADC recall@5 against Euclidean
@@ -537,7 +536,7 @@ object SimilarityQueries {
       .select(col("perm"), col("total_err"),
         (col("total_err") <= col("__id")).as("beats_identity"),
         (col("total_err") === col("__min")).as("is_best"))
-      .orderByBounded(col("perm"))
+      .orderBy(col("perm"))
   }
 
   /** Top-PC projection by in-plan power iteration (e23,
@@ -594,7 +593,7 @@ object SimilarityQueries {
     graft.operators.Similarity.ivfPqSearchFrom(
       assigned, centroids, codes, books, queriesSide(s, d),
       PqM, KmeansDims / PqM, topK = 5, nprobe = 2)
-      .orderByBounded(col("q_id"), col("rank"))
+      .orderBy(col("q_id"), col("rank"))
   }
 
   /** Per-label centroid (the IVF training step made explicit): elementwise
@@ -613,5 +612,5 @@ object SimilarityQueries {
       .agg(avg(col("x")).as("c"))
       .select(col("label"), col("dim"),
         graft.operators.Relational.round4(col("c")).as("c"))
-      .orderByBounded(col("label"), col("dim"))
+      .orderBy(col("label"), col("dim"))
 }

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.operators.TextOps._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Relational.BoundedSortOps
 import org.apache.spark.sql.functions._
 
 /** LLM training-data pipeline operators over the `documents` table
@@ -113,7 +112,7 @@ object TextQueries {
       .select(col("lang"), col("source"), col("docs_in"),
         coalesce(col("docs_kept"), lit(0L)).as("docs_kept"),
         coalesce(col("tokens_kept"), lit(0L)).as("tokens_kept"))
-      .orderByBounded(col("lang"), col("source"))
+      .orderBy(col("lang"), col("source"))
   }
 
   /** Dup-cluster collapse: the verified near-dup PAIRS (d3) become GROUPS
@@ -246,7 +245,7 @@ object TextQueries {
             col("n_verified").cast("double") / col("n_candidates")))
           .as("prec"),
         col("nested_ok"), col("recall_monotone"))
-      .orderByBounded(col("n_bands"))
+      .orderBy(col("n_bands"))
   }
 
   /** Cross-corpus decontamination over a deterministic benchmark split:
@@ -396,7 +395,7 @@ object TextQueries {
       .select(posexplode(col("top")))
       .select(col("col.pair").as("pair"), col("col.cnt").as("cnt"),
         (col("pos") + 1).cast("int").as("rank"))
-      .orderByBounded(col("rank"))
+      .orderBy(col("rank"))
 
   /** Zipf's-law fit of the token rank-frequency curve (t24) — the
     * corpus-statistics gate tying t8's vocabulary head to x10's OLS
@@ -483,7 +482,7 @@ object TextQueries {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_tokens"),
         (sum(col("tq")) / lit(grid)).as("kl"))
-      .orderByBounded(col("source"))
+      .orderBy(col("source"))
   }
 
   /** Iterated BPE training ([[graft.operators.TextOps.bpeTrainMerges]]):
@@ -496,7 +495,7 @@ object TextQueries {
     * sentinel encoding — `replace` is left-to-right non-overlapping greedy
     * on both engines, which IS BPE's merge rule. */
   def t21BpeTrain(s: SparkSession, d: String): DataFrame =
-    Dedup.bpeMerges(s, d).orderByBounded(col("iter"))
+    Dedup.bpeMerges(s, d).orderBy(col("iter"))
 
   /** BPE application ([[graft.operators.TextOps.bpeSegmentStatsFrom]]):
     * encode every document under t21's trained 3-merge table (the shared
@@ -597,7 +596,7 @@ object TextQueries {
       .orderBy(col("bm25").desc, col("doc_id").asc).limit(20)
       .withColumn("rank", row_number().over(wr))
       .select(col("doc_id"), col("n_hit"), col("bm25"), col("rank"))
-      .orderByBounded(col("rank"))
+      .orderBy(col("rank"))
   }
 
   /** Repetition filter (the Gopher-style rule family): per-doc token
@@ -821,7 +820,7 @@ object TextQueries {
         coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
         coalesce(col("n_packs"), lit(0L)).as("n_packs"),
         coalesce(col("tokens_packed"), lit(0L)).as("tokens_packed"))
-      .orderByBounded(col("lang"))
+      .orderBy(col("lang"))
   }
 
   /** Per-language winsorization of `n_chars` at [p5, p95] — the outlier-
@@ -862,7 +861,7 @@ object TextQueries {
         graft.operators.Relational.round4(element_at(col("__q"), 1)).as("p50"),
         graft.operators.Relational.round4(element_at(col("__q"), 2)).as("p90"),
         col("n_docs"))
-      .orderByBounded(col("lang"))
+      .orderBy(col("lang"))
 
   /** Approximate quantiles next to their exact twins — the sketch-side
     * switch for t7 at 100 TB: exact percentiles need a per-group sort,
@@ -886,7 +885,7 @@ object TextQueries {
           lit(0.05) * element_at(col("__q"), 1)).as("ok_p50"),
         (abs(element_at(col("__a"), 2) - element_at(col("__q"), 2)) <=
           lit(0.05) * element_at(col("__q"), 2)).as("ok_p90"))
-      .orderByBounded(col("lang"))
+      .orderBy(col("lang"))
 
   /** Stratified train/val/test split (c6) — the last step of a training
     * corpus pipeline: every document lands in exactly one split by pure
@@ -916,7 +915,7 @@ object TextQueries {
           col("n_docs").cast("double") / col("n_lang")).as("frac"),
         (abs(col("n_docs").cast("double") / col("n_lang") - col("target")) <=
           lit(0.15)).as("within_band"))
-      .orderByBounded(col("lang"), col("split"))
+      .orderBy(col("lang"), col("split"))
   }
 
   /** Positional phrase search (t23) — the retrieval operation BM25 (t18)
@@ -962,6 +961,6 @@ object TextQueries {
         min(col("doc_id")).as("first_doc"))
       .select(col("w1"), col("w2"), col("n_docs"), col("n_occ"), col("first_doc"),
         (col("n_occ") === col("cnt")).as("occ_consistent"))
-      .orderByBounded(col("n_occ").desc, col("w1"), col("w2"))
+      .orderBy(col("n_occ").desc, col("w1"), col("w2"))
   }
 }

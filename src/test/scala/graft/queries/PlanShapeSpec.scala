@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.{SparkSpec, SparkEntry}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, LogicalPlan}
 
 /** Regression guards for the plan properties the 100 TB design depends on —
@@ -228,5 +230,57 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"CartesianProduct found in: ${offenders.mkString(", ")}")
+  }
+
+  // --- SmallSort (GraftExtensions) decides at run time, from the measured
+  // size of the stage under a global sort. `plan` prints AQE's initial plan,
+  // which still holds the range exchange, so these run the query and read
+  // the final plan.
+
+  /** The collected rows and AQE's final plan. */
+  private def runFinal(name: String): (Seq[Row], String) = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    val rows = df.collect().toSeq
+    val fin = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    (rows, fin.toString)
+  }
+
+  test("a small final sort runs as one task; over the threshold it keeps its range exchange, same rows in the same order") {
+    for (name <- Seq("w1_hourly_rollup", "q1_pricing_summary")) {
+      val (small, smallPlan) = runFinal(name)
+      assert(!smallPlan.contains("rangepartitioning"),
+        s"$name: a result under one advisory partition still range-partitions:\n$smallPlan")
+      val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "1")
+      val (big, bigPlan) =
+        try runFinal(name)
+        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(bigPlan.contains("rangepartitioning"),
+        s"$name: with a 1-byte threshold the sort lost its range exchange:\n$bigPlan")
+      assert(small.nonEmpty, s"$name: empty result pins no order")
+      assert(small == big, s"$name: the one-task sort and the range sort disagree on rows or order")
+    }
+  }
+
+  test("a sort above an explode or a join keeps its range exchange: their sizes are not measured") {
+    // a11's tail is Sort <- posexplode <- top-k aggregate stage, and Spark
+    // sizes the explode like its input; x8's tail is Sort <- join of
+    // aggregate stages, and Spark sizes the join as a product of its inputs
+    for ((name, node) <- Seq("a11_topk_agg" -> "Generate", "x8_funnel" -> "Join")) {
+      val (_, p) = runFinal(name)
+      assert(p.contains(node), s"$name's tail lost its $node; the case no longer tests the guard:\n$p")
+      assert(p.contains("rangepartitioning"), s"$name's sort above a $node went to one task:\n$p")
+      // once the range stage has run, a one-task sort would only repeat its work
+      assert(!p.contains("Coalesce"), s"$name sorts its range-partitioned output again in one task:\n$p")
+    }
+  }
+
+  test("a sort under a limit stays a top-k: it plans no range exchange to remove") {
+    val (_, p) = runFinal("t2_top10_customers")
+    assert(p.contains("TakeOrderedAndProject"), s"t2's top-10 became a full one-task sort:\n$p")
   }
 }
