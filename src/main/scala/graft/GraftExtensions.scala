@@ -105,84 +105,44 @@ object GraftExtensions {
     }
   }
 
-  val vecDot: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
+  /** One SQL function registration: `name` resolves to `cls`'s expression,
+    * built from exactly `arity` arguments; any other count fails with
+    * `s"$name requires " + usage.format(count)`. */
+  private def function(name: String, cls: Class[_], arity: Int, usage: String)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"vec_dot requires exactly 2 arguments, got ${children.length}")
-      VecDot(children(0), children(1))
+      if (children.length != arity)
+        throw new IllegalArgumentException(s"$name requires " + usage.format(children.length))
+      build(children)
     })
 
-  val vecArgminCell: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_argmin_cell"),
-    new ExpressionInfo(classOf[VecArgminCell].getName, "vec_argmin_cell"),
-    (children: Seq[Expression]) => {
-      if (children.length != 3)
-        throw new IllegalArgumentException(
-          s"vec_argmin_cell requires (vec, self_dot, centroids), got ${children.length} args")
-      VecArgminCell(children(0), children(1), children(2))
-    })
+  val vecDot = function("vec_dot", classOf[VecDot], 2,
+    "exactly 2 arguments, got %d")(c => VecDot(c(0), c(1)))
 
-  val topKByCount: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("top_k_by_count"),
-    new ExpressionInfo(classOf[TopKByCount].getName, "top_k_by_count"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"top_k_by_count requires (struct<cnt, key>, k), got ${children.length} args")
-      TopKByCount(children.head, foldableInt(children(1), "top_k_by_count k"))
-        .toAggregateExpression()
-    })
+  val vecArgminCell = function("vec_argmin_cell", classOf[VecArgminCell], 3,
+    "(vec, self_dot, centroids), got %d args")(c => VecArgminCell(c(0), c(1), c(2)))
 
-  val mortonInterleave: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("morton_interleave"),
-    new ExpressionInfo(classOf[MortonInterleave].getName, "morton_interleave"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"morton_interleave requires exactly 2 arguments, got ${children.length}")
-      MortonInterleave(children(0), children(1))
-    })
+  val topKByCount = function("top_k_by_count", classOf[TopKByCount], 2,
+    "(struct<cnt, key>, k), got %d args")(c =>
+    TopKByCount(c(0), foldableInt(c(1), "top_k_by_count k")).toAggregateExpression())
 
-  val simhash16: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash16"),
-    new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-    (children: Seq[Expression]) => {
-      if (children.length != 1)
-        throw new IllegalArgumentException(
-          s"simhash16 requires exactly 1 argument, got ${children.length}")
-      SimHash16(children.head)
-    })
+  val mortonInterleave = function("morton_interleave", classOf[MortonInterleave], 2,
+    "exactly 2 arguments, got %d")(c => MortonInterleave(c(0), c(1)))
 
-  val minhashSig: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"minhash_sig requires (array<string>, numHashes), got ${children.length} args")
-      MinHashSig(children.head, foldableInt(children(1), "minhash_sig numHashes"))
-    })
+  val simhash16 = function("simhash16", classOf[SimHash16], 1,
+    "exactly 1 argument, got %d")(c => SimHash16(c(0)))
 
-  val simhashSig: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash_sig"),
-    new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"simhash_sig requires (array<string>, nBits), got ${children.length} args")
-      SimHashSig(children.head, foldableInt(children(1), "simhash_sig nBits"))
-    })
+  val minhashSig = function("minhash_sig", classOf[MinHashSig], 2,
+    "(array<string>, numHashes), got %d args")(c =>
+    MinHashSig(c(0), foldableInt(c(1), "minhash_sig numHashes")))
 
-  val shingles: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingles"),
-    new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-    (children: Seq[Expression]) => {
-      if (children.length != 2)
-        throw new IllegalArgumentException(
-          s"shingles requires (array<string>, n), got ${children.length} args")
-      Shingles(children.head, foldableInt(children(1), "shingles n"))
-    })
+  val simhashSig = function("simhash_sig", classOf[SimHashSig], 2,
+    "(array<string>, nBits), got %d args")(c =>
+    SimHashSig(c(0), foldableInt(c(1), "simhash_sig nBits")))
+
+  val shingles = function("shingles", classOf[Shingles], 2,
+    "(array<string>, n), got %d args")(c => Shingles(c(0), foldableInt(c(1), "shingles n")))
 }

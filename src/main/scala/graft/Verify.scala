@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
@@ -26,6 +27,15 @@ object Verify {
       failed
     }
 
+  /** Writes `outDir/oracle_sql.json`, one JSON object of query name →
+    * oracle SQL, as `tools/check_oracle.py` reads it. */
+  def writeOracleSql(outDir: String, sql: Iterable[(String, String)]): Unit = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    sql.foreach { case (k, v) => m.put(k, v) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(m))
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Engine.session("graft-verify")
@@ -35,21 +45,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def keep(n: String): Boolean = only.forall(_.contains(n))
     val failed = writeAll(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql.filter(kv => keep(kv._1)))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")

@@ -1,19 +1,28 @@
 package graft.functions
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+// Every expression here writes its kernel ONCE, as a method of its
+// companion object (MortonInterleave's pattern): nullSafeEval calls it,
+// and doGenCode emits one static call to it, so the expression stays
+// inside WholeStageCodegen (CodegenFallback would break the stage) with
+// no second, hand-written Java copy of the loop to keep in step.
 
 /** Codegen'd dot product over two `array<double>` columns.
   *
   * The `functions.aggregate`/`zip_with` formulation is a higher-order
   * function — CodegenFallback, interpreted, with per-element lambda-closure
   * overhead; at ~1e6 pairs × 64 dims that interpretation dominates entire
-  * query runtimes. This expression compiles to a tight Java loop inside
-  * whole-stage codegen (~50× on the similarity benchmarks).
+  * query runtimes. This expression is one static call inside whole-stage
+  * codegen (~50× on the similarity benchmarks).
   *
   * Summation is strictly left-to-right (`acc += a[i]*b[i]`), the exact
   * operation order of both the previous fold AND DuckDB's
@@ -43,9 +52,19 @@ case class VecDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = graft.functions.VecDot.dot($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): VecDot = copy(newLeft, newRight)
+}
+
+object VecDot {
+  /** Left-to-right dot product over the common prefix of `xs` and `ys`. */
+  def dot(xs: ArrayData, ys: ArrayData): Double = {
     val n = math.min(xs.numElements(), ys.numElements())
     var acc = 0.0
     var i = 0
@@ -55,24 +74,6 @@ case class VecDot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecDot = copy(newLeft, newRight)
 }
 
 /** Codegen'd 16-bit SimHash over an `array<int>` of per-token hashes.
@@ -93,8 +94,17 @@ case class SimHash16(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "simhash16"
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = SimHash16.simhash16(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.SimHash16.simhash16($a);")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash16 =
+    copy(newChild)
+}
+
+object SimHash16 {
+  def simhash16(xs: ArrayData): Int = {
     val sums = new Array[Int](16)
     var i = 0
     val n = xs.numElements()
@@ -115,34 +125,16 @@ case class SimHash16(child: Expression) extends UnaryExpression {
     }
     out
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("v")
-      val sums = ctx.freshName("sums")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $sums = new int[16];
-         |int $n = $a.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  int $v = $a.getInt($i);
-         |  for (int $j = 0; $j < 16; $j++) {
-         |    $sums[$j] += ((($v >> $j) & 1) == 1) ? 1 : -1;
-         |  }
-         |}
-         |int $out = 0;
-         |for (int $j = 0; $j < 16; $j++) {
-         |  if ($sums[$j] >= 0) $out |= (1 << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash16 =
-    copy(newChild)
+/** The shared base hash of [[MinHashSig]] and [[SimHashSig]]: the first 4
+  * md5 digest bytes of a string, read big-endian-unsigned — exactly
+  * `conv(substring(md5(s), 1, 8), 16, 10)`. */
+private[functions] object Md5Prefix {
+  def hash32(s: UTF8String): Long = {
+    val d = DigestUtils.md5(s.getBytes)
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+  }
 }
 
 /** Codegen'd MinHash signature over an `array<string>` of shingles: one
@@ -153,8 +145,7 @@ case class SimHash16(child: Expression) extends UnaryExpression {
   * the base hashes + numHashes × `array_min(transform(...))`), every pass
   * interpreted (HOFs are CodegenFallback) with the md5 cost paid through
   * the interpreted expression path. Semantics are bit-identical: the base
-  * hash is the first 4 digest bytes read big-endian-unsigned, exactly
-  * `conv(substring(md5(s), 1, 8), 16, 10)`, and (a_i, b_i, P) come from
+  * hash is [[Md5Prefix]], and (a_i, b_i, P) come from
   * [[graft.operators.TextOps]] so Scala, SQL and the DuckDB oracle stay in
   * lockstep.
   *
@@ -169,13 +160,12 @@ case class SimHash16(child: Expression) extends UnaryExpression {
 case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"minhash_sig requires array<string>, got ${t.simpleString}")
   }
 
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, false)
+  override def dataType: DataType = ArrayType(LongType, false)
   override def prettyName: String = "minhash_sig"
   override def nullable: Boolean = true
 
@@ -184,77 +174,49 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
   private lazy val bCoef: Array[Long] =
     Array.tabulate(numHashes)(graft.operators.TextOps.minhashB)
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val n = xs.numElements()
-    val p = graft.operators.TextOps.MinhashP
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var contributed = false
-    var i = 0
-    while (i < n) {
-      if (!xs.isNullAt(i)) {
-        contributed = true
-        val d = org.apache.commons.codec.digest.DigestUtils.md5(
-          xs.getUTF8String(i).getBytes)
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-        var j = 0
-        while (j < numHashes) {
-          val v = (h * aCoef(j) + bCoef(j)) % p
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      i += 1
-    }
-    if (!contributed) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
-  }
+  override def nullSafeEval(a: Any): Any =
+    MinHashSig.signature(a.asInstanceOf[ArrayData], aCoef, bCoef)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val aRef = ctx.addReferenceObj("mhA", aCoef, "long[]")
     val bRef = ctx.addReferenceObj("mhB", bCoef, "long[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val mins = ctx.freshName("mins")
-      val any = ctx.freshName("any")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $mins = new long[$numHashes];
-         |java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |boolean $any = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) continue;
-         |  $any = true;
-         |  byte[] $d = org.apache.commons.codec.digest.DigestUtils.md5(
-         |    $a.getUTF8String($i).getBytes());
-         |  long $h = (($d[0] & 0xffL) << 24) | (($d[1] & 0xffL) << 16) |
-         |    (($d[2] & 0xffL) << 8) | ($d[3] & 0xffL);
-         |  for (int $j = 0; $j < $numHashes; $j++) {
-         |    long $v = ($h * $aRef[$j] + $bRef[$j]) % ${graft.operators.TextOps.MinhashP}L;
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |if (!$any) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.MinHashSig.signature($a, $aRef, $bRef);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
 }
 
+object MinHashSig {
+  /** Per-coefficient minimum of `(a(j)·h + b(j)) mod P` over the non-null
+    * elements' base hashes; null when no element contributed. */
+  def signature(xs: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
+    val n = xs.numElements()
+    val k = a.length
+    val mins = Array.fill(k)(Long.MaxValue)
+    var contributed = false
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) {
+        contributed = true
+        val h = Md5Prefix.hash32(xs.getUTF8String(i))
+        var j = 0
+        while (j < k) {
+          val v = (h * a(j) + b(j)) % graft.operators.TextOps.MinhashP
+          if (v < mins(j)) mins(j) = v
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (contributed) new GenericArrayData(mins) else null
+  }
+}
+
 /** Codegen'd wide SimHash signature over an `array<string>` of shingles:
-  * one md5 per element (the same first-4-digest-bytes base hash as
+  * one md5 per element (the same [[Md5Prefix]] base hash as
   * [[MinHashSig]], `('0x' || substr(md5(x), 1, 8))::BIGINT` on the oracle
   * side), each element voting ±1 on the low `nBits` bits of its base hash,
   * positive sums setting the output bit — ONE pass over the array.
@@ -274,18 +236,33 @@ case class SimHashSig(child: Expression, nBits: Int) extends UnaryExpression {
   require(nBits >= 1 && nBits <= 32, s"simhash width must be in [1,32], got $nBits")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"simhash_sig requires array<string>, got ${t.simpleString}")
   }
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "simhash_sig"
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = SimHashSig.signature(a.asInstanceOf[ArrayData], nBits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sig = ctx.freshName("sig")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""java.lang.Long $sig = graft.functions.SimHashSig.signature($a, $nBits);
+         |${ev.isNull} = $sig == null;
+         |if (!${ev.isNull}) ${ev.value} = $sig.longValue();""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
+    copy(child = newChild)
+}
+
+object SimHashSig {
+  /** The `nBits`-bit simhash of the non-null elements' base hashes; null
+    * when no element contributed. */
+  def signature(xs: ArrayData, nBits: Int): java.lang.Long = {
     val n = xs.numElements()
     val sums = new Array[Int](nBits)
     var contributed = false
@@ -293,10 +270,7 @@ case class SimHashSig(child: Expression, nBits: Int) extends UnaryExpression {
     while (i < n) {
       if (!xs.isNullAt(i)) {
         contributed = true
-        val d = org.apache.commons.codec.digest.DigestUtils.md5(
-          xs.getUTF8String(i).getBytes)
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+        val h = Md5Prefix.hash32(xs.getUTF8String(i))
         var j = 0
         while (j < nBits) {
           sums(j) += (if (((h >> j) & 1L) == 1L) 1 else -1)
@@ -316,46 +290,6 @@ case class SimHashSig(child: Expression, nBits: Int) extends UnaryExpression {
       out
     }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val h = ctx.freshName("h")
-      val sums = ctx.freshName("sums")
-      val any = ctx.freshName("any")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $sums = new int[$nBits];
-         |boolean $any = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) continue;
-         |  $any = true;
-         |  byte[] $d = org.apache.commons.codec.digest.DigestUtils.md5(
-         |    $a.getUTF8String($i).getBytes());
-         |  long $h = (($d[0] & 0xffL) << 24) | (($d[1] & 0xffL) << 16) |
-         |    (($d[2] & 0xffL) << 8) | ($d[3] & 0xffL);
-         |  for (int $j = 0; $j < $nBits; $j++) {
-         |    $sums[$j] += ((($h >> $j) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |if (!$any) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $out = 0L;
-         |  for (int $j = 0; $j < $nBits; $j++) {
-         |    if ($sums[$j] >= 0) $out |= (1L << $j);
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
 }
 
 /** Codegen'd distinct n-token shingles over an `array<string>` token
@@ -377,62 +311,41 @@ case class Shingles(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"shingles requires array<string>, got ${t.simpleString}")
   }
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, false)
+  override def dataType: DataType = ArrayType(StringType, false)
   override def prettyName: String = "shingles"
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val total = xs.numElements()
-    val seen = new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-    val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-    var i = 0
-    while (i <= total - n) {
-      val parts = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-      var j = 0
-      while (j < n) { parts(j) = xs.getUTF8String(i + j); j += 1 }
-      seen.add(org.apache.spark.unsafe.types.UTF8String.concatWs(sep, parts: _*))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      seen.toArray.asInstanceOf[Array[AnyRef]])
-  }
+  override def nullSafeEval(a: Any): Any = Shingles.shingles(a.asInstanceOf[ArrayData], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sepRef = ctx.addReferenceObj("shingleSep",
-      org.apache.spark.unsafe.types.UTF8String.fromString(" "),
-      "org.apache.spark.unsafe.types.UTF8String")
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val total = ctx.freshName("total")
-      val parts = ctx.freshName("parts")
-      val seen = ctx.freshName("seen")
-      s"""
-         |int $total = $a.numElements();
-         |java.util.LinkedHashSet $seen = new java.util.LinkedHashSet();
-         |for (int $i = 0; $i <= $total - $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String[] $parts =
-         |    new org.apache.spark.unsafe.types.UTF8String[$n];
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $parts[$j] = $a.getUTF8String($i + $j);
-         |  }
-         |  $seen.add(org.apache.spark.unsafe.types.UTF8String.concatWs($sepRef, $parts));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  $seen.toArray());
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.functions.Shingles.shingles($a, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): Shingles =
     copy(child = newChild)
+}
+
+object Shingles {
+  private val sep = UTF8String.fromString(" ")
+
+  /** The distinct space-joined `n`-token windows of `xs`, in first-
+    * occurrence order. */
+  def shingles(xs: ArrayData, n: Int): ArrayData = {
+    val total = xs.numElements()
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    var i = 0
+    while (i <= total - n) {
+      val parts = new Array[UTF8String](n)
+      var j = 0
+      while (j < n) { parts(j) = xs.getUTF8String(i + j); j += 1 }
+      seen.add(UTF8String.concatWs(sep, parts: _*))
+      i += 1
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
+  }
 }
 
 /** Codegen'd nearest-centroid argmin — the k-means assignment kernel.
@@ -447,14 +360,13 @@ case class Shingles(child: Expression, n: Int) extends UnaryExpression {
   * Null handling (the function is registered as public SQL, so arbitrary
   * input can reach it): a null STRUCT element in the centroid table, a
   * null field inside it, or a null double inside a centroid's `c` array
-  * marks that centroid invalid and it is SKIPPED — identical in
-  * interpreted and codegen paths; a table of only invalid entries
-  * degenerates to the empty-table result (Double.MaxValue, −1).
+  * marks that centroid invalid and it is SKIPPED; a table of only invalid
+  * entries degenerates to the empty-table result (Double.MaxValue, −1).
   *
   * Bit-for-bit the same float ops in the same order as the
   * `functions.aggregate` fold it replaces (left-to-right dot, then
   * dxx − 2·dot + dcc), so the unrolled-CTE DuckDB oracles keep hashing
-  * identically — but in ONE codegen'd loop instead of an interpreted
+  * identically — but in ONE codegen'd call instead of an interpreted
   * higher-order fold whose per-centroid lambda dominates every Lloyd
   * round's assignment pass.
   */
@@ -462,19 +374,16 @@ case class VecArgminCell(first: Expression, second: Expression, third: Expressio
     extends TernaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val centsOk = third.dataType match {
-      case ArrayType(org.apache.spark.sql.types.StructType(fields), _)
-        if fields.length == 3 && fields(0).dataType == IntegerType &&
-          fields(1).dataType == ArrayType(DoubleType, false) &&
-          fields(2).dataType == DoubleType => true
-      case ArrayType(org.apache.spark.sql.types.StructType(fields), _)
-        if fields.length == 3 && fields(0).dataType == IntegerType &&
-          fields(1).dataType == ArrayType(DoubleType, true) &&
-          fields(2).dataType == DoubleType => true
+    def doubles(t: DataType): Boolean = t match {
+      case ArrayType(DoubleType, _) => true
       case _ => false
     }
-    if (first.dataType == ArrayType(DoubleType, false) ||
-      first.dataType == ArrayType(DoubleType, true)) {
+    val centsOk = third.dataType match {
+      case ArrayType(StructType(Array(c, v, d)), _) =>
+        c.dataType == IntegerType && doubles(v.dataType) && d.dataType == DoubleType
+      case _ => false
+    }
+    if (doubles(first.dataType)) {
       if (second.dataType == DoubleType) {
         if (centsOk) TypeCheckResult.TypeCheckSuccess
         else TypeCheckResult.TypeCheckFailure(
@@ -486,83 +395,54 @@ case class VecArgminCell(first: Expression, second: Expression, third: Expressio
       s"vec_argmin_cell needs an array<double> vector, got ${first.dataType.simpleString}")
   }
 
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("sq", DoubleType, nullable = false),
-    org.apache.spark.sql.types.StructField("cluster", IntegerType, nullable = false)))
+  override def dataType: DataType = StructType(Seq(
+    StructField("sq", DoubleType, nullable = false),
+    StructField("cluster", IntegerType, nullable = false)))
   override def prettyName: String = "vec_argmin_cell"
 
-  override def nullSafeEval(v: Any, dxx: Any, cents: Any): Any = {
-    val xs = v.asInstanceOf[ArrayData]
-    val dx = dxx.asInstanceOf[Double]
-    val cs = cents.asInstanceOf[ArrayData]
+  override def nullSafeEval(v: Any, dxx: Any, cents: Any): Any =
+    VecArgminCell.argmin(v.asInstanceOf[ArrayData], dxx.asInstanceOf[Double],
+      cents.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (v, dxx, cents) =>
+      s"${ev.value} = graft.functions.VecArgminCell.argmin($v, $dxx, $cents);")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression, newThird: Expression): VecArgminCell =
+    copy(newFirst, newSecond, newThird)
+}
+
+object VecArgminCell {
+  /** (sq, cluster) of the valid centroid nearest to `v`, lowest cluster id
+    * on ties; (Double.MaxValue, −1) when there is none. */
+  def argmin(v: ArrayData, dxx: Double, cents: ArrayData): InternalRow = {
     var bestSq = Double.MaxValue
     var bestCluster = -1
     var j = 0
-    while (j < cs.numElements()) {
-      if (!cs.isNullAt(j)) {
-        val ct = cs.getStruct(j, 3)
+    while (j < cents.numElements()) {
+      if (!cents.isNullAt(j)) {
+        val ct = cents.getStruct(j, 3)
         if (!ct.isNullAt(0) && !ct.isNullAt(1) && !ct.isNullAt(2)) {
           val c = ct.getArray(1)
-          val n = math.min(xs.numElements(), c.numElements())
+          val n = math.min(v.numElements(), c.numElements())
           var dot = 0.0
           var ok = true
           var i = 0
           while (ok && i < n) {
             if (c.isNullAt(i)) ok = false
-            else { dot += xs.getDouble(i) * c.getDouble(i); i += 1 }
+            else { dot += v.getDouble(i) * c.getDouble(i); i += 1 }
           }
           if (ok) {
-            val sq = dx - 2.0 * dot + ct.getDouble(2)
+            val sq = dxx - 2.0 * dot + ct.getDouble(2)
             if (sq < bestSq) { bestSq = sq; bestCluster = ct.getInt(0) }
           }
         }
       }
       j += 1
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestSq, bestCluster))
+    new GenericInternalRow(Array[Any](bestSq, bestCluster))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, dxx, cents) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val sq = ctx.freshName("sq")
-      val ct = ctx.freshName("ct")
-      val c = ctx.freshName("c")
-      val bestSq = ctx.freshName("bestSq")
-      val bestCluster = ctx.freshName("bestCluster")
-      val ok = ctx.freshName("ok")
-      s"""
-         |double $bestSq = Double.MAX_VALUE;
-         |int $bestCluster = -1;
-         |for (int $j = 0; $j < $cents.numElements(); $j++) {
-         |  if ($cents.isNullAt($j)) continue;
-         |  org.apache.spark.sql.catalyst.InternalRow $ct = $cents.getStruct($j, 3);
-         |  if ($ct.isNullAt(0) || $ct.isNullAt(1) || $ct.isNullAt(2)) continue;
-         |  org.apache.spark.sql.catalyst.util.ArrayData $c = $ct.getArray(1);
-         |  int $n = java.lang.Math.min($v.numElements(), $c.numElements());
-         |  double $dot = 0.0;
-         |  boolean $ok = true;
-         |  for (int $i = 0; $ok && $i < $n; $i++) {
-         |    if ($c.isNullAt($i)) { $ok = false; }
-         |    else { $dot += $v.getDouble($i) * $c.getDouble($i); }
-         |  }
-         |  if (!$ok) continue;
-         |  double $sq = $dxx - 2.0 * $dot + $ct.getDouble(2);
-         |  if ($sq < $bestSq) { $bestSq = $sq; $bestCluster = $ct.getInt(0); }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[] { java.lang.Double.valueOf($bestSq),
-         |                 java.lang.Integer.valueOf($bestCluster) });
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): VecArgminCell =
-    copy(newFirst, newSecond, newThird)
 }
 
 object VectorFunctions {

@@ -210,29 +210,6 @@ object Relational {
         .cast("int"))
   }
 
-  /** Scan fan-out: redistribute a skinny scan across the cluster before
-    * CPU-heavy per-row work (multi-join pipelines, wide partial aggregates).
-    *
-    * Parquet splits at row-group boundaries, so a file with few huge row
-    * groups (or a small file under `files.maxPartitionBytes`) scans as a
-    * handful of tasks no matter how many cores exist — and every downstream
-    * narrow stage (broadcast joins, partial aggregation) inherits that
-    * parallelism. One round-robin exchange right after the scan costs a
-    * single pass over the rows and unlocks full-width execution. Use on the
-    * fact side only when the downstream is compute-bound; well-laid-out
-    * sources at scale (many row groups) don't need it.
-    *
-    * MEASURED (round 3, sf0.1, best-of-5): none of the catalog's
-    * broadcast-join pipelines is compute-bound enough to pay for the extra
-    * exchange — every former call site ran 1.4-3.8× FASTER without it
-    * (a1 1.82→0.98 s, a5 2.25→0.59 s, a4 2.07→1.33 s, j_multiway
-    * 1.81→1.30 s, r1 2.05→1.97 s). Kept as an operator for genuinely
-    * compute-bound per-row work (e.g. the shingle/minhash scan stage, where
-    * shingleFrame applies the same repartition inline).
-    */
-  def fanout(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
   /** Blocked fuzzy match over a name dictionary — the edit-distance join
     * of entity resolution, shaped for scale: callers dedupe the fact table
     * to (name, count) first (vocabulary cardinality, not row cardinality),

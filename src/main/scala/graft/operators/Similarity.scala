@@ -19,8 +19,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Brute-force top-k cosine neighbors for a (small) query set.

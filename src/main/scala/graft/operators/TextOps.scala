@@ -54,8 +54,9 @@ object TextOps {
     * statistical behavior.
     *
     * Constants: P = 2^31-1 (prime); a_i < 2^21 so a_i·h < 2^53 — no int64
-    * overflow on either engine. */
-  val MinhashP = 2147483647L
+    * overflow on either engine. P is a `final val` constant, so the
+    * MinHashSig kernel's `% MinhashP` compiles to a constant modulus. */
+  final val MinhashP = 2147483647L
   def minhashA(i: Int): Long = 977L + 104729L * i
   def minhashB(i: Int): Long = 12345L + 7919L * i
 

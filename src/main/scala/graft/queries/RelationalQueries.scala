@@ -1170,16 +1170,16 @@ object RelationalQueries {
     *
     * Two sketch paths per type, a13's honesty pattern: a direct per-type
     * sketch, and a 4-way user-hash-sharded build whose shards union via
-    * [[graft.functions.ThetaUnionAgg]] — the bound must hold for ANY
-    * sharding. Estimates themselves stay out of the gate (theta retained
-    * sets in estimation mode are build-path-dependent); the gate pins the
+    * Spark's `theta_union_agg` — the bound must hold for ANY sharding.
+    * Estimates themselves stay out of the gate (theta retained sets in
+    * estimation mode are build-path-dependent); the gate pins the
     * exact twin and the bound booleans. Bound: at lgK = 12 the intersect
     * estimate's σ is ~1/√4096 of the UNION size, so the gate allows 5 % of
     * |A ∪ B| — tight at full overlap, honest when sets are disjoint-ish.
     * The pair scoring joins two ≤ types-row sketch tables — broadcast NLJ
-    * of tiny frames, codegen'd intersect expression. */
+    * of tiny frames. Sketches, unions and intersections are Spark's
+    * built-in theta functions (DataSketches compact sketches). */
   def a14ThetaIntersect(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.ThetaFunctions.{theta_intersect_estimate, theta_sketch_agg, theta_union_agg}
     val ev = Tables.events(s, d)
     // one distinct (type, user) collapse feeds the exact twin AND both
     // sketch paths: three consumers, one events scan
@@ -1196,18 +1196,18 @@ object RelationalQueries {
     // from sf0.01 up) forces ESTIMATION mode so the gate also witnesses a
     // sketch that genuinely approximates, under its published 3σ ≈
     // 3/√128 ≈ 26.5 % of-the-union bound
-    val smallLgK = 7
+    val (lgK, smallLgK) = (12, 7)
     val direct = tu.groupBy(col("event_type"))
-      .agg(theta_sketch_agg(col("user_id")).as("__sk"),
+      .agg(theta_sketch_agg(col("user_id"), lgK).as("__sk"),
         theta_sketch_agg(col("user_id"), smallLgK).as("__sk7"),
         count(lit(1)).as("__n"))
     val sharded = tu
       .withColumn("__shard", pmod(col("user_id"), lit(4)))
       .groupBy(col("event_type"), col("__shard"))
-      .agg(theta_sketch_agg(col("user_id")).as("__psk"),
+      .agg(theta_sketch_agg(col("user_id"), lgK).as("__psk"),
         theta_sketch_agg(col("user_id"), smallLgK).as("__psk7"))
       .groupBy(col("event_type"))
-      .agg(theta_union_agg(col("__psk")).as("__msk"),
+      .agg(theta_union_agg(col("__psk"), lgK).as("__msk"),
         theta_union_agg(col("__psk7"), smallLgK).as("__msk7"))
     val sk = direct.join(sharded, "event_type")
     def side(sfx: String) = sk.select(
@@ -1215,7 +1215,7 @@ object RelationalQueries {
       col("__sk7").as(s"__sk7_$sfx"), col("__msk").as(s"__msk_$sfx"),
       col("__msk7").as(s"__msk7_$sfx"), col("__n").as(s"__n_$sfx"))
     def within(a: Column, b: Column, band: Column): Column =
-      abs(theta_intersect_estimate(a, b) - col("exact_both")) <= band
+      abs(theta_sketch_estimate(theta_intersection(a, b)) - col("exact_both")) <= band
     exact
       .join(broadcast(side("a")), "type_a")
       .join(broadcast(side("b")), "type_b")

@@ -36,25 +36,9 @@ object TextQueries {
       .select(col("id1"), col("id2"), graft.operators.Relational.round4(col("j")).as("jaccard"))
       .orderBy(col("id1"), col("id2"))
 
-  /** The UNSORTED verified-pair pipeline over an already-canonicalized doc
-    * frame (`doc_id`, `text`, ...) — identical docs must collapse to one
-    * representative BEFORE banding, otherwise an N-doc exact-dup cluster
-    * shares every band key and lands N²/2 pairs in one LSH bucket (see
-    * TextOps.canonicalDocs). Production entry: [[Dedup.verifiedPairs]];
-    * this hook exists for ad-hoc frames and the specs. */
-  def verifiedDupPairsFrom(canonDocs: DataFrame): DataFrame =
-    // ONE shingle pass feeds both the LSH banding and the exact-Jaccard
-    // verification join (the tokenize→shingle pass dominates corpus CPU).
-    // Eager localCheckpoint, not persist: consumers read the materialized
-    // blocks, nothing stays pinned in the CacheManager after the query —
-    // blocks are reclaimed by ContextCleaner once the frame's reference
-    // dies, instead of waiting for an external clearCache().
-    verifiedPairsFromShingles(
-      shingleFrame(canonDocs, "doc_id", "text").localCheckpoint(true))
-
   /** Candidate banding + exact-Jaccard verification over a MATERIALIZED
-    * shingle frame — the core both [[verifiedDupPairsFrom]] and the
-    * session fixture share. `sh` must be materialized (checkpointed): it
+    * shingle frame of canonical docs — the core of the session fixture
+    * [[Dedup.verifiedPairs]]. `sh` must be materialized (checkpointed): it
     * feeds three join sides below. */
   private[queries] def verifiedPairsFromShingles(sh: DataFrame): DataFrame = {
     // LSH prefilter keeps the candidate set tiny relative to the corpus —

@@ -82,42 +82,26 @@ class SketchSpec extends SparkSpec {
   }
 
   test("theta: exact-mode sketches estimate, union, and intersect exactly") {
-    import graft.functions.ThetaFunctions._
     // 0..99 tagged A, 50..149 tagged B: |A| = |B| = 100, |A ∩ B| = 50 —
     // far below nominal (lgK=12), so every estimate must be EXACT
     val rows = ((0L until 100L).map(("A", _)) ++ (50L until 150L).map(("B", _)))
       .toDF("tag", "id")
-    val direct = rows.groupBy($"tag").agg(theta_sketch_agg($"id").as("sk"))
+    val direct = rows.groupBy($"tag").agg(theta_sketch_agg($"id", 12).as("sk"))
     // sharded build: per-shard sketches union to the same sets
     val sharded = rows.withColumn("shard", pmod($"id", lit(3)))
-      .groupBy($"tag", $"shard").agg(theta_sketch_agg($"id").as("psk"))
-      .groupBy($"tag").agg(theta_union_agg($"psk").as("sk"))
+      .groupBy($"tag", $"shard").agg(theta_sketch_agg($"id", 12).as("psk"))
+      .groupBy($"tag").agg(theta_union_agg($"psk", 12).as("sk"))
     for (sk <- Seq(direct, sharded)) {
-      val est = sk.select($"tag", theta_estimate($"sk").as("e"))
-        .as[(String, Double)].collect().toMap
-      assert(est == Map("A" -> 100.0, "B" -> 100.0),
+      val est = sk.select($"tag", theta_sketch_estimate($"sk").as("e"))
+        .as[(String, Long)].collect().toMap
+      assert(est == Map("A" -> 100L, "B" -> 100L),
         s"exact-mode estimates wrong: $est")
       val both = sk.filter($"tag" === "A").select($"sk".as("ska"))
         .crossJoin(sk.filter($"tag" === "B").select($"sk".as("skb")))
-        .select(theta_intersect_estimate($"ska", $"skb"))
-        .as[Double].head()
-      assert(both == 50.0, s"exact-mode intersection wrong: $both")
+        .select(theta_sketch_estimate(theta_intersection($"ska", $"skb")))
+        .as[Long].head()
+      assert(both == 50L, s"exact-mode intersection wrong: $both")
     }
-  }
-
-  test("theta intersect: interpreted eval equals codegen") {
-    import graft.functions.ThetaFunctions._
-    val rows = ((0L until 40L).map(("A", _)) ++ (20L until 60L).map(("B", _)))
-      .toDF("tag", "id")
-    val sk = rows.groupBy($"tag").agg(theta_sketch_agg($"id").as("sk"))
-      .localCheckpoint(true)
-    def run(): Double =
-      sk.filter($"tag" === "A").select($"sk".as("ska"))
-        .crossJoin(sk.filter($"tag" === "B").select($"sk".as("skb")))
-        .select(theta_intersect_estimate($"ska", $"skb"))
-        .as[Double].head()
-    assert(run() == interpreted(run())) // NO_CODEGEN leg pins nullSafeEval
-    assert(run() == 20.0)
   }
 
   test("grids merge by cell-wise addition") {

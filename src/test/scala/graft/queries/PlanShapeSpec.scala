@@ -85,9 +85,38 @@ class PlanShapeSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       for (name <- Seq("q1_pricing_summary", "e1_knn_brute", "d1_exact_dedup",
-        "t1_lang_id", "a11_topk_agg")) {
+        "t1_lang_id", "a11_topk_agg", "d4_simhash16", "d5_simhash_pairs",
+        "d9_cross_neardups", "e9_kmeans_assign")) {
         assert(plan(name).contains("codegen id :"),
           s"$name has no WholeStageCodegen span")
+      }
+      // each kernel's static call sits inside a codegen'd operator: every
+      // operator whose details call it carries a codegen id. simhash_sig
+      // and vec_argmin_cell run only inside checkpointed fixtures, and d4
+      // feeds simhash16 from an interpreted `transform`, so those three
+      // are planned over the catalog's tables directly.
+      import graft.functions.VectorFunctions._
+      import org.apache.spark.sql.functions._
+      val docs = graft.Tables.load(spark, sf, "documents")
+      val v = graft.Tables.load(spark, sf, "embeddings")
+        .select(col("embedding").cast("array<double>").as("v"))
+      def formatted(df: org.apache.spark.sql.DataFrame): String =
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      for ((label, p, fn) <- Seq(
+          ("e1_knn_brute", plan("e1_knn_brute"), "vec_dot"),
+          ("d9_cross_neardups", plan("d9_cross_neardups"), "minhash_sig"),
+          ("d7_decontaminate", plan("d7_decontaminate"), "shingles"),
+          ("documents", formatted(docs.select(simhash_sig(
+            shingles(split(col("text"), " "), 3), 32))), "simhash_sig"),
+          ("documents", formatted(docs.select(simhash16(
+            array(hash(col("text")), hash(col("doc_id")))))), "simhash16"),
+          ("embeddings", formatted(v.select(vec_argmin_cell(col("v"), vec_dot(col("v"), col("v")),
+            array(struct(lit(0), col("v"), lit(0.0)))))), "vec_argmin_cell"))) {
+        val callers = p.split("\n\n").toSeq.filter(_.contains(s"$fn("))
+          .map(_.linesIterator.next())
+        assert(callers.nonEmpty, s"$label plans no $fn call:\n$p")
+        assert(callers.forall(_.contains("codegen id :")),
+          s"$label calls $fn outside WholeStageCodegen: ${callers.mkString("; ")}")
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
@@ -98,10 +127,8 @@ class PlanShapeSpec extends SparkSpec {
     // §Scan edge) — the extra exchange per scan costs more than the
     // parallelism it buys, and at 100 TB a load-edge repartition of the
     // corpus would be a pure pessimization. Compute-heavy scan stages
-    // apply their own inline repartition (e.g. shingleFrame);
-    // Relational.fanout remains only as an escape hatch with no current
-    // call sites. This pins the rejected decoration so it can't silently
-    // return.
+    // apply their own inline repartition (e.g. shingleFrame). This pins
+    // the rejected decoration so it can't silently return.
     for (t <- Seq("lineitem", "events", "documents", "embeddings")) {
       val p = graft.Tables.load(spark, sf, t).queryExecution
         .explainString(ExplainMode.fromString("formatted"))
