@@ -30,9 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
   /** Silence WindowExec's "No Partition Defined" warning — called ONLY by
-    * the Bench, Verify and ProfileJobs mains, where the engine's one
-    * deliberately-global window (`x3_moving_avg`, calendar-bounded input —
-    * see its scaladoc) fires it as pure noise on every measured run.
+    * the Bench, Verify and ProfileJobs mains and benchkit's Main and
+    * Record, where the engine's one deliberately-global window
+    * (`x3_moving_avg`, calendar-bounded input — see its scaladoc) fires it
+    * as pure noise on every measured run.
     * Interactive sessions (this factory) deliberately KEEP the warning: for
     * any future accidentally-unpartitioned window it is exactly the signal
     * that matters, and a level-based suppression here would hide it

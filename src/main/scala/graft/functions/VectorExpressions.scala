@@ -4,7 +4,7 @@ import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
@@ -191,7 +191,9 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
 
 object MinHashSig {
   /** Per-coefficient minimum of `(a(j)·h + b(j)) mod P` over the non-null
-    * elements' base hashes; null when no element contributed. */
+    * elements' base hashes; null when no element contributed. The result
+    * is an unboxed `UnsafeArrayData` copy of the k longs (a
+    * `GenericArrayData` would box each one). */
   def signature(xs: ArrayData, a: Array[Long], b: Array[Long]): ArrayData = {
     val n = xs.numElements()
     val k = a.length
@@ -211,7 +213,7 @@ object MinHashSig {
       }
       i += 1
     }
-    if (contributed) new GenericArrayData(mins) else null
+    if (contributed) UnsafeArrayData.fromPrimitiveArray(mins) else null
   }
 }
 

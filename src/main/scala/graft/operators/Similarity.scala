@@ -21,6 +21,42 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** (q_id, q_emb, q_norm, extra…) — a search's query side, norms once
+    * per vector. */
+  private def querySide(queries: DataFrame, extra: Column*): DataFrame =
+    queries
+      .select(Seq(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb")) ++ extra: _*)
+      .withColumn("q_norm", norm(col("q_emb")))
+
+  /** (n_id, n_emb, n_norm, extra…) — a search's corpus side, spread over
+    * every core: single-row-group inputs would pin this CPU-heavy stage to
+    * one task. */
+  private def corpusSide(corpus: DataFrame, extra: Column*): DataFrame =
+    corpus
+      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+      .select(Seq(col("vec_id").as("n_id"), asDouble(col("embedding")).as("n_emb")) ++ extra: _*)
+      .withColumn("n_norm", norm(col("n_emb")))
+
+  /** The scoring join every cosine search shares: the corpus side
+    * (n_id, n_emb, n_norm [, n_cell]) against the broadcast query side
+    * (q_id, q_emb, q_norm [, q_cell]) — on the cell when the query side
+    * carries one — never pairing a query with itself. `cos` =
+    * dot / (‖q‖·‖n‖), operation-for-operation the oracle SQL's. */
+  private def cosineScored(c: DataFrame, q: DataFrame): DataFrame = {
+    val notSelf = col("q_id") =!= col("n_id")
+    val on =
+      if (q.columns.contains("q_cell")) col("q_cell") === col("n_cell") && notSelf
+      else notSelf
+    c.join(broadcast(q), on)
+      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
+  }
+
+  /** The per-query top-k every cosine search ends with: rank by
+    * (cos desc, n_id asc), display-round the cosine. */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    Relational.topKPerGroup(scored, Seq("q_id"), Seq(col("cos").desc, col("n_id").asc), k)
+      .select(col("q_id"), col("n_id"), col("rank"), Relational.round4(col("cos")).as("cos"))
+
   /** Brute-force top-k cosine neighbors for a (small) query set.
     *
     * The query side is `broadcast()` — at 100 TB the corpus streams through
@@ -29,29 +65,10 @@ object Similarity {
     * This is the exact baseline; [[knnIVF]] is the sub-linear scale path.
     *
     * Norms are computed once per VECTOR (separate projections) rather than
-    * once per pair — the dot products are interpreted (higher-order funcs
-    * don't codegen), so per-pair work is the whole cost model. The final
-    * `cos` arithmetic (dot / (na * nb), na = sqrt(dot(a,a))) is kept
-    * operation-for-operation identical to the oracle SQL.
+    * once per pair — per-pair work is the whole cost model.
     */
-  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus
-      .repartition(par) // single-row-group inputs would pin this CPU-heavy stage to 1 task
-      .select(col("vec_id").as("n_id"), asDouble(col("embedding")).as("n_emb"))
-      .withColumn("n_norm", norm(col("n_emb")))
-    val q = queries
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val scored = c
-      .join(broadcast(q), col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), Relational.round4(col("cos")).as("cos"))
-  }
+  def knnBruteForce(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    cosineTopK(cosineScored(corpusSide(corpus), querySide(queries)), k)
 
   /** IVF-style ANN: the corpus carries a coarse partition assignment (here
     * the precomputed `label` column, standing in for a k-means cell id) and
@@ -63,26 +80,10 @@ object Similarity {
     * Recall < 1.0 by construction (single-probe); add neighboring cells to
     * the probe list for higher recall.
     */
-  def knnIVF(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus
-      .repartition(par)
-      .select(col("vec_id").as("n_id"), asDouble(col("embedding")).as("n_emb"),
-        col("label").as("n_cell"))
-      .withColumn("n_norm", norm(col("n_emb")))
-    val q = queries
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"),
-        col("label").as("q_cell"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val scored = c
-      .join(broadcast(q), col("q_cell") === col("n_cell") && col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), Relational.round4(col("cos")).as("cos"))
-  }
+  def knnIVF(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    cosineTopK(cosineScored(
+      corpusSide(corpus, col("label").as("n_cell")),
+      querySide(queries, col("label").as("q_cell"))), k)
 
   /** Multi-probe IVF ANN: each query probes its `nprobe` nearest cells by
     * CENTROID similarity instead of only its own assignment — the standard
@@ -98,46 +99,25 @@ object Similarity {
     * deterministic left-to-right fold over identical inputs.
     *
     * Scale: centroid derivation is one cheap aggregation (cells × dims
-    * rows); the probe ranking is |queries| × |cells| against a broadcast
-    * centroid table; the scan stays O(nprobe · |cell| · |queries|) via the
-    * same broadcast equi-join as [[knnIVF]] — recall rises with nprobe at
-    * linear, bounded cost, still never O(|corpus| · |queries|).
+    * rows); the probe ranking ([[probeCells]]) is |queries| × |cells|
+    * against a broadcast centroid table; the scan stays
+    * O(nprobe · |cell| · |queries|) via the same broadcast equi-join as
+    * [[knnIVF]] — recall rises with nprobe at linear, bounded cost, still
+    * never O(|corpus| · |queries|).
     */
   def knnIVFMultiProbe(
       corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
     val cent = corpus
       .select(col("label"), posexplode(asDouble(col("embedding"))))
       .groupBy(col("label"), col("pos"))
       .agg(avg(col("col")).as("c"))
       .select(col("label"), col("pos"), Relational.round4(col("c")).as("c"))
-      .groupBy(col("label"))
+      .groupBy(col("label").as("cluster"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-        e => e.getField("c")).as("cent"))
-      .withColumn("cent_norm", norm(col("cent")))
-    val q = queries
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("label").asc)
-    val probed = q
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("cent")) / (col("q_norm") * col("cent_norm")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("label").as("q_cell"))
-    val c = corpus
-      .repartition(par)
-      .select(col("vec_id").as("n_id"), asDouble(col("embedding")).as("n_emb"),
-        col("label").as("n_cell"))
-      .withColumn("n_norm", norm(col("n_emb")))
-    val scored = c
-      .join(broadcast(probed), col("q_cell") === col("n_cell") && col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), Relational.round4(col("cos")).as("cos"))
+        e => e.getField("c")).as("c"))
+    cosineTopK(cosineScored(
+      corpusSide(corpus, col("label").as("n_cell")),
+      probeCells(cent, queries, nprobe)), k)
   }
 
   /** In-plan Lloyd k-means over an embedding corpus — the training step
@@ -233,35 +213,7 @@ object Similarity {
     (assign(centArr), centroids)
   }
 
-  /** Top principal component by POWER ITERATION, fully in-plan — the
-    * dimensionality-reduction primitive (PCA/OPQ's workhorse; Golub &
-    * Van Loan §8.2) in [[kmeans]]'s distributed shape: each round is ONE
-    * map-side-combining aggregate computing the covariance action
-    * w = Σ (x−μ)((x−μ)·v) — never a materialized d×d covariance, never a
-    * DATA collect — with the O(d) normalize fused into the same one-row
-    * result, which comes back to the driver as a d-double model constant
-    * (the same single-row model-meta pattern as
-    * [[ModelStore.loadCoarsePq]]) and re-enters the next round as a
-    * literal array: no per-round checkpoint or broadcast exchange, just
-    * one aggregate job per round. At 100 TB each round still shuffles d
-    * doubles per task; the corpus is scanned once per round from a
-    * centered localCheckpoint. Round-to-round state (the axis) is
-    * round4-quantized exactly like [[kmeans]]'s centroids, so
-    * partial-aggregation order cannot perturb the chain and the oracle
-    * replays it verbatim. Start axis = uniform 1/8 (exact), non-orthogonal
-    * to any data direction that survives centering; sign is stable because
-    * the covariance is PSD (w·v = v·Cv ≥ 0 — no per-round flip).
-    * Returns (per-vector frame with the projection `proj` and centered
-    * self-dot `xx`, both round4'd; the final one-row axis). */
-  def pcaPower(corpus: DataFrame, rounds: Int, dims: Int): (DataFrame, DataFrame) = {
-    val centered = pcaCentered(corpus, dims)
-    val ax = pcaTrainAxis(centered, rounds, dims)
-    val axLit = array(ax.toIndexedSeq.map(lit(_)): _*)
-    (pcaProjectFrom(centered, ax),
-      corpus.sparkSession.range(1).select(axLit.as("ax")))
-  }
-
-  /** [[pcaPower]]'s centering stage alone: (vec_id, x) with x the
+  /** [[pcaTrainAxis]]'s centering stage: (vec_id, x) with x the
     * round4'd-mean-centered embedding, localCheckpoint'd — the frame the
     * training rounds and the projection both scan. */
   def pcaCentered(corpus: DataFrame, dims: Int): DataFrame = {
@@ -274,10 +226,26 @@ object Similarity {
       .localCheckpoint(true)
   }
 
-  /** [[pcaPower]]'s training rounds alone: the dominant axis after
-    * `rounds` covariance-action aggregates over a [[pcaCentered]] frame.
-    * The axis is a d-double model constant (driver-held, like a loaded
-    * model's metadata) — each round is ONE aggregate job. */
+  /** Top principal component by POWER ITERATION, fully in-plan — the
+    * dimensionality-reduction primitive (PCA/OPQ's workhorse; Golub &
+    * Van Loan §8.2) in [[kmeans]]'s distributed shape: each round is ONE
+    * map-side-combining aggregate over a [[pcaCentered]] frame computing
+    * the covariance action w = Σ (x−μ)((x−μ)·v) — never a materialized
+    * d×d covariance, never a DATA collect — with the O(d) normalize fused
+    * into the same one-row result, which comes back to the driver as a
+    * d-double model constant (the same single-row model-meta pattern as
+    * [[ModelStore.loadCoarsePq]]) and re-enters the next round as a
+    * literal array: no per-round checkpoint or broadcast exchange, just
+    * one aggregate job per round. At 100 TB each round still shuffles d
+    * doubles per task; the corpus is scanned once per round from the
+    * centered localCheckpoint. Round-to-round state (the axis) is
+    * round4-quantized exactly like [[kmeans]]'s centroids, so
+    * partial-aggregation order cannot perturb the chain and the oracle
+    * replays it verbatim. Start axis = uniform 1/8 (exact), non-orthogonal
+    * to any data direction that survives centering; sign is stable because
+    * the covariance is PSD (w·v = v·Cv ≥ 0 — no per-round flip). Returns
+    * the dominant axis after `rounds` rounds; [[pcaProjectFrom]] projects
+    * onto it. */
   def pcaTrainAxis(centered: DataFrame, rounds: Int, dims: Int): Array[Double] = {
     var ax: Array[Double] = Array.fill(dims)(0.125)
     for (_ <- 1 to rounds) {
@@ -293,9 +261,9 @@ object Similarity {
     ax
   }
 
-  /** [[pcaPower]]'s projection stage alone: per-vector projection onto a
-    * trained axis plus the centered self-dot (both round4'd) — one scan
-    * of the centered frame with the axis as a literal array. */
+  /** [[pcaTrainAxis]]'s projection stage: per-vector projection `proj`
+    * onto a trained axis plus the centered self-dot `xx` (both round4'd)
+    * — one scan of the centered frame with the axis as a literal array. */
   def pcaProjectFrom(centered: DataFrame, ax: Array[Double]): DataFrame = {
     val axLit = array(ax.toIndexedSeq.map(lit(_)): _*)
     centered.select(col("vec_id"),
@@ -310,29 +278,19 @@ object Similarity {
     * the pair [[kmeans]] returns. */
   def knnIVFMultiProbeLearned(
       assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-      k: Int, nprobe: Int = 2): DataFrame = {
-    val cent = centroids.withColumn("cent_norm", norm(col("c")))
-    val q = queries
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster").asc)
-    val probed = q
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("c")) / (col("q_norm") * col("cent_norm")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("cluster").as("q_cell"))
-    val c = assigned.select(col("vec_id").as("n_id"), col("v").as("n_emb"),
-      col("cluster").as("n_cell"), sqrt(col("dxx")).as("n_norm"))
-    val scored = c
-      .join(broadcast(probed), col("q_cell") === col("n_cell") && col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"), Relational.round4(col("cos")).as("cos"))
-  }
+      k: Int, nprobe: Int = 2): DataFrame =
+    cosineTopK(learnedCandidates(assigned, centroids, queries, nprobe), k)
+
+  /** [[knnIVFMultiProbeLearned]]'s scored candidates before the top-k:
+    * every (query, neighbor) pair in the query's `nprobe` probed cells,
+    * with `cos` and the cell's probe rank `prank`. */
+  private[graft] def learnedCandidates(
+      assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
+      nprobe: Int): DataFrame =
+    cosineScored(
+      assigned.select(col("vec_id").as("n_id"), col("v").as("n_emb"),
+        col("cluster").as("n_cell"), sqrt(col("dxx")).as("n_norm")),
+      probeCells(centroids, queries, nprobe))
 
   /** Product quantization — the codebook path that takes ANN storage BELOW
     * scalar quantization's 4× (e7): the vector splits into `m` contiguous
@@ -344,24 +302,16 @@ object Similarity {
     * 2011): IVF (e9/e11) coarse-partitions, PQ compresses the residuals'
     * storage inside each cell.
     *
-    * Returns scalar rows (vec_id, sub, code, sq). Scale: all m subspace
-    * chains train in ONE plan — the sliced projections union (tagged by
-    * `sub`) in the scan stage, the m codebooks pack into ONE broadcast row
-    * (array indexed by sub of per-sub centroid packs), assignment is the
-    * same scan-stage [[graft.functions.VecArgminCell]] fold against the
-    * row's own subspace pack, and the update is ONE (sub, cluster)-keyed
-    * mean exchange per round. Per-round: one corpus pass + one tiny
-    * shuffle + one checkpoint barrier — training m subspaces sequentially
-    * pays m× the barriers for identical arithmetic (the scheduling cost
-    * that dominated this operator before). */
-  def pqCodes(
-      corpus: DataFrame, m: Int, k: Int, rounds: Int, dims: Int): DataFrame =
-    pqModel(corpus, m, k, rounds, dims)._1
-      .select(col("vec_id"), col("sub"), col("code"),
-        Relational.round4(col("sq")).as("sq"))
-
-  /** The trained PQ model behind [[pqCodes]]: (codes, codebooks) —
-    * codes = (vec_id, sub, code, sq raw), codebooks = (sub, cluster, c).
+    * Returns (codes, codebooks): codes = (vec_id, sub, code, sq raw),
+    * codebooks = (sub, cluster, c). Scale: all m subspace chains train in
+    * ONE plan — the sliced projections explode (tagged by `sub`) in the
+    * scan stage, the m codebooks pack into ONE broadcast row (array
+    * indexed by sub of per-sub centroid packs), assignment is the same
+    * scan-stage [[graft.functions.VecArgminCell]] fold against the row's
+    * own subspace pack, and the update is ONE (sub, cluster)-keyed mean
+    * exchange per round. Per-round: one corpus pass + one tiny shuffle +
+    * one checkpoint barrier — training m subspaces sequentially pays m×
+    * the barriers for identical arithmetic.
     *
     * Numerically identical to m independent [[kmeans]] chains over the
     * slices (the formulation the DuckDB oracle replays): seeds are the k
@@ -377,17 +327,25 @@ object Similarity {
       slicedVecs(corpus.repartition(par), m, dims / m, 0), k, rounds, dims / m, m)
   }
 
+  /** `df`'s vector column `vec` cut into `m` contiguous `subLen`-long
+    * slices by ONE scan-stage explode: rows (keys…, sub = base + s, v). A
+    * union of m sliced projections would instead copy `df`'s whole plan —
+    * a probe, its runtime filters — into each of the m branches. */
+  private def slices(
+      df: DataFrame, keys: Seq[String], vec: Column,
+      m: Int, subLen: Int, base: Int): DataFrame =
+    df
+      .select(keys.map(col) :+ explode(array((0 until m).map { s =>
+        struct(lit(base + s).as("sub"), slice(vec, s * subLen + 1, subLen).as("v"))
+      }: _*)).as("sv"): _*)
+      .select(keys.map(col) ++ Seq(col("sv.sub").as("sub"), col("sv.v").as("v")): _*)
+
   /** Corpus × m sliced rows, each tagged by subspace id `base + s` — the
     * scan-stage explode that feeds [[pqModelFrom]]; no shuffle of its own.
     * `base` offsets the sub ids so independently-sliced frames (raw +
     * residual in e16) can union into ONE training with dense sub ids. */
   def slicedVecs(corpus: DataFrame, m: Int, subLen: Int, base: Int): DataFrame =
-    corpus
-      .select(col("vec_id"), explode(array((0 until m).map { s =>
-        struct(lit(base + s).as("sub"),
-          slice(asDouble(col("embedding")), s * subLen + 1, subLen).as("v"))
-      }: _*)).as("sv"))
-      .select(col("vec_id"), col("sv.sub").as("sub"), col("sv.v").as("v"))
+    slices(corpus, Seq("vec_id"), asDouble(col("embedding")), m, subLen, base)
       .withColumn("dxx", dot(col("v"), col("v")))
 
   /** The fused multi-chain Lloyd trainer behind [[pqModel]], over a
@@ -533,15 +491,66 @@ object Similarity {
     splitCoarsePq(all, books, m)
   }
 
+  /** Each query's `nprobe` nearest coarse cells by centroid cosine — the
+    * probe ranking every IVF search here shares: (q_id, q_emb, q_norm,
+    * q_cell, prank, c), ranked (csim desc, cluster asc), carrying the
+    * probed cell's centroid `c` so residual-encoding callers can subtract
+    * it. `centroids` = (cluster, c). */
+  private[graft] def probeCells(
+      centroids: DataFrame, queries: DataFrame, nprobe: Int): DataFrame = {
+    val cent = centroids.withColumn("cent_norm", norm(col("c")))
+    val wp = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster").asc)
+    querySide(queries).crossJoin(broadcast(cent))
+      .withColumn("csim", dot(col("q_emb"), col("c")) / (col("q_norm") * col("cent_norm")))
+      .withColumn("prank", row_number().over(wp))
+      .filter(col("prank") <= nprobe)
+      .select(col("q_id"), col("q_emb"), col("q_norm"), col("cluster").as("q_cell"),
+        col("prank"), col("c"))
+  }
+
+  /** The ADC lookup table (Jégou et al. 2011 §III): each `qv` row's query
+    * vector `qe`, sliced into `m` subvectors, against every codebook entry
+    * of its subspace — (keys…, sub, code, part) with part =
+    * ‖qe‖² − 2·qe·c + ‖c‖², display-rounded then decimal-cast so the
+    * downstream sum is order-independent. */
+  private def adcTable(
+      qv: DataFrame, keys: Seq[String], books: DataFrame, m: Int, subLen: Int): DataFrame =
+    slices(qv, keys, col("qe"), m, subLen, 0)
+      .join(books.withColumn("dcc", dot(col("c"), col("c"))), "sub")
+      .select(keys.map(col) ++ Seq(col("sub"), col("cluster").as("code"),
+        Relational.round4(dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("c"))
+          + col("dcc")).cast("decimal(18,4)").as("part")): _*)
+
+  /** The ADC tail every PQ search shares: join the codes to the BROADCAST
+    * lookup table on `keys` — with the cell among them, pruning happens in
+    * the join key, map-side — drop self-matches, decimal-sum each
+    * (q_id, n_id)'s partials and rank (adc asc, n_id asc). Any change here
+    * must keep the e14, e15 and e17 oracles hash-exact. */
+  private def adcTopK(
+      codes: DataFrame, lut: DataFrame, keys: Seq[String], topK: Int): DataFrame =
+    Relational.topKPerGroup(
+      codes.join(broadcast(lut), keys)
+        .filter(col("q_id") =!= col("vec_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"), col("part"))
+        .groupBy(col("q_id"), col("n_id"))
+        .agg(sum(col("part")).cast("double").as("adc")),
+      Seq("q_id"), Seq(col("adc").asc, col("n_id").asc), topK)
+      .select(col("q_id"), col("n_id"), col("rank"), col("adc"))
+
+  /** Codes with their coarse cell attached — in a production index the
+    * (cell, codes) pair is stored once per vector and this join is free. */
+  private def withCells(codes: DataFrame, assigned: DataFrame): DataFrame =
+    codes.join(assigned.select(col("vec_id"), col("cluster").as("cell")), Seq("vec_id"))
+
   /** PQ search by asymmetric distance computation (ADC, Jégou et al. 2011
-    * §III): the query stays UNquantized; its squared distance to every
-    * codebook entry is tabulated once (the lookup table — m·k rows per
-    * query), and a corpus vector's approximate distance is the sum of its
-    * m codes' table entries. The scoring scan never touches float vectors —
-    * only (sub, code) ints against a broadcast LUT — which is the entire
-    * point of PQ at 100 TB: the index is codes, not vectors (here the
-    * codes are trained in the same plan for gate self-containment; a
-    * production index stores them once and pays only the scoring scan).
+    * §III) over a trained PQ model ([[pqModel]]'s codes and books): the
+    * query stays UNquantized; its squared distance to every codebook entry
+    * is tabulated once (the lookup table — m·k rows per query), and a
+    * corpus vector's approximate distance is the sum of its m codes' table
+    * entries. The scoring scan never touches float vectors — only
+    * (sub, code) ints against a broadcast LUT — which is the entire point
+    * of PQ at 100 TB: the index is codes, not vectors, stored once; a
+    * search pays only the scoring scan.
     *
     * Per-subspace partials are display-rounded then decimal-summed
     * (order-independent, oracle-exact); ranking is (adc asc, n_id asc).
@@ -550,153 +559,50 @@ object Similarity {
     * ever |corpus|×|queries| floats. The (q_id, n_id) AGGREGATE is still
     * corpus×queries small ints — exhaustive ADC by definition; the
     * probed-cells composition that bounds it to nprobe·|cell|·|queries|
-    * is [[ivfPqSearch]] (raw codes) / [[ivfAdcResidualSearch]]
+    * is [[ivfPqSearchFrom]] (raw codes) / [[ivfAdcResidualSearchFrom]]
     * (residual codes). */
-  def pqAdcSearch(
-      corpus: DataFrame, queries: DataFrame,
-      m: Int, k: Int, rounds: Int, dims: Int, topK: Int): DataFrame = {
-    val (codes, books) = pqModel(corpus, m, k, rounds, dims)
-    pqAdcSearchFrom(codes, books, queries, m, dims / m, topK)
-  }
-
-  /** [[pqAdcSearch]] over an ALREADY-trained PQ model — the production
-    * shape (the index stores codes once; searches pay only the scoring
-    * scan), and the sharing variant the session model cache feeds. */
   def pqAdcSearchFrom(
       codes: DataFrame, books: DataFrame, queries: DataFrame,
       m: Int, subLen: Int, topK: Int): DataFrame = {
-    val qSub = (0 until m).map { s =>
-      queries.select(col("vec_id").as("q_id"),
-        slice(col("embedding"), s * subLen + 1, subLen)
-          .cast("array<double>").as("qe"), lit(s).as("sub"))
-    }.reduce(_ unionAll _)
-    val lut = qSub
-      .join(books.withColumn("dcc", dot(col("c"), col("c"))), "sub")
-      .select(col("q_id"), col("sub"), col("cluster").as("code"),
-        Relational.round4(dot(col("qe"), col("qe"))
-          - lit(2.0) * dot(col("qe"), col("c")) + col("dcc"))
-          .cast("decimal(18,4)").as("part"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    codes
-      .join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), col("part"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg(sum(col("part")).cast("double").as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("n_id"), col("rank"), col("adc"))
+    val qv = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qe"))
+    adcTopK(codes, adcTable(qv, Seq("q_id"), books, m, subLen), Seq("sub", "code"), topK)
   }
 
   /** IVF-PQ search — the IVFADC composition (Jégou et al. 2011 §III) the
     * standalone pieces exist for: the coarse quantizer ([[kmeans]])
     * partitions the corpus into cells, PQ ([[pqModel]]) compresses each
     * vector to m codes, and a query ADC-scores ONLY the nprobe cells its
-    * coarse probe ranks highest — [[pqAdcSearch]]'s code-only scan without
-    * its corpus×queries aggregate, which is the entire point at 100 TB:
-    * per query the scored set is nprobe·|cell| rows of small ints, never
-    * the corpus.
+    * coarse probe ranks highest — [[pqAdcSearchFrom]]'s code-only scan
+    * without its corpus×queries aggregate, which is the entire point at
+    * 100 TB: per query the scored set is nprobe·|cell| rows of small
+    * ints, never the corpus.
     *
-    * The scoring join is keyed on (cell, sub, code): the broadcast side is
-    * the per-query LUT pre-joined with its probed cells
-    * (|queries|·nprobe·m·k rows — tiny), so pruning happens IN the join
-    * key, map-side, before the (q_id, n_id) aggregate. The cell column
-    * rides next to the codes via a vec_id-keyed join of the two trained
-    * assignments — in a production index the (cell, codes) pair is stored
-    * once per vector and this join disappears; both trainings run in-plan
-    * here for gate self-containment. Probe ranking is by centroid cosine
-    * (identical to [[knnIVFMultiProbeLearned]]); ADC partials are
-    * display-rounded then decimal-summed, so distributed order cannot
-    * perturb the gate. */
-  /** Each query's nprobe nearest coarse cells by centroid cosine (the
-    * probe ranking every IVF search here shares), carrying the probed
-    * cell's centroid so residual-encoding callers can subtract it. */
-  private def probeCells(
-      centroids: DataFrame, queries: DataFrame, nprobe: Int): DataFrame = {
-    val cent = centroids.withColumn("cent_norm", norm(col("c")))
-    val q = queries
-      .select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster").asc)
-    q.crossJoin(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("c")) / (col("q_norm") * col("cent_norm")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("cluster").as("q_cell"), col("c"))
-  }
-
-  /** One ADC lookup-table partial: ‖qe‖² − 2·qe·c + ‖c‖², display-rounded
-    * then decimal-cast so the downstream sum is order-independent. */
-  private def adcPart(qe: Column, c: Column, dcc: Column): Column =
-    Relational.round4(dot(qe, qe) - lit(2.0) * dot(qe, c) + dcc)
-      .cast("decimal(18,4)")
-
-  /** Codes with their coarse cell attached — in a production index the
-    * (cell, codes) pair is stored once per vector and this join is free. */
-  private def withCells(codes: DataFrame, assigned: DataFrame): DataFrame =
-    codes.join(assigned.select(col("vec_id"), col("cluster").as("cell")), Seq("vec_id"))
-
-  /** The shared probed-cells ADC scoring tail: join codes to the BROADCAST
-    * per-(query, probed-cell) LUT on (cell, sub, code) — pruning happens
-    * in the join key, map-side — then decimal-sum per (q_id, n_id) and
-    * rank (adc asc, n_id asc). `lutCells` columns: (q_id, q_cell, l_sub,
-    * l_code, part). Any change here must keep both the e15 and e17
-    * oracles hash-exact. */
-  private def adcScoreProbed(
-      cellCodes: DataFrame, lutCells: DataFrame, topK: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    cellCodes
-      .join(broadcast(lutCells),
-        col("cell") === col("q_cell") && col("sub") === col("l_sub") &&
-          col("code") === col("l_code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), col("part"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg(sum(col("part")).cast("double").as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("n_id"), col("rank"), col("adc"))
-  }
-
-  def ivfPqSearch(
-      corpus: DataFrame, queries: DataFrame,
-      coarseK: Int, coarseRounds: Int,
-      m: Int, k: Int, rounds: Int, dims: Int,
-      topK: Int, nprobe: Int): DataFrame = {
-    val (assigned, centroids, codes, books) =
-      coarsePqModels(corpus, coarseK, coarseRounds, m, k, rounds, dims)
-    ivfPqSearchFrom(assigned, centroids, codes, books, queries, m, dims / m, topK, nprobe)
-  }
-
-  /** [[ivfPqSearch]] over ALREADY-trained coarse + PQ models — the
-    * production shape (a deployed index stores (cell, codes) per vector
-    * and the trained books/centroids; a search pays only the probe + the
-    * bounded ADC join), and the sharing variant the session model cache
-    * feeds. */
+    * Runs over ALREADY-trained coarse + PQ models ([[coarsePqModels]]) —
+    * the production shape: a deployed index stores (cell, codes) per
+    * vector and the trained books/centroids, and a search pays only the
+    * probe + the bounded ADC join. The scoring join is keyed on
+    * (cell, sub, code): the broadcast side is the per-query LUT pre-joined
+    * with its probed cells (|queries|·nprobe·m·k rows — tiny), so pruning
+    * happens IN the join key, map-side, before the (q_id, n_id) aggregate.
+    * The cell column rides next to the codes via a vec_id-keyed join of
+    * the two trained assignments. Probe ranking is by centroid cosine
+    * ([[probeCells]], identical to [[knnIVFMultiProbeLearned]]); ADC
+    * partials are display-rounded then decimal-summed, so distributed
+    * order cannot perturb the gate. */
   def ivfPqSearchFrom(
       assigned: DataFrame, centroids: DataFrame,
       codes: DataFrame, books: DataFrame, queries: DataFrame,
       m: Int, subLen: Int, topK: Int, nprobe: Int): DataFrame = {
     val probed = probeCells(centroids, queries, nprobe)
-      .select(col("q_id"), col("q_cell"))
-    val qSub = (0 until m).map { s =>
-      queries.select(col("vec_id").as("q_id"),
-        slice(col("embedding"), s * subLen + 1, subLen)
-          .cast("array<double>").as("qe"), lit(s).as("sub"))
-    }.reduce(_ unionAll _)
-    val lut = qSub
-      .join(books.withColumn("dcc", dot(col("c"), col("c"))), "sub")
-      .select(col("q_id"), col("sub"), col("cluster").as("code"),
-        adcPart(col("qe"), col("c"), col("dcc")).as("part"))
+      .select(col("q_id"), col("q_cell").as("cell"))
+    val qv = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qe"))
     // LUT entries tagged with their query's probed cells: the broadcast
-    // probe table whose (q_cell, sub, code) key prunes at the join
-    val lutCells = probed.join(lut, Seq("q_id"))
-      .select(col("q_id"), col("q_cell"), col("sub").as("l_sub"),
-        col("code").as("l_code"), col("part"))
-    adcScoreProbed(withCells(codes, assigned), lutCells, topK)
+    // probe table whose (cell, sub, code) key prunes at the join
+    val lutCells = probed.join(adcTable(qv, Seq("q_id"), books, m, subLen), Seq("q_id"))
+    adcTopK(withCells(codes, assigned), lutCells, Seq("cell", "sub", "code"), topK)
   }
 
-  /** Full IVFADC search (Jégou et al. 2011 §III): [[ivfPqSearch]]'s
+  /** Full IVFADC search (Jégou et al. 2011 §III): [[ivfPqSearchFrom]]'s
     * probed-cells-only ADC scan, but over RESIDUAL codes — each corpus
     * vector is encoded as its offset from its coarse centroid
     * ([[residualsFrom]]), and each query builds a SEPARATE lookup table
@@ -706,34 +612,16 @@ object Similarity {
     * the encoding is tighter, this operator is the search that cashes
     * that in.
     *
-    * Shapes are identical to [[ivfPqSearch]]: the broadcast side grows
+    * Shapes are identical to [[ivfPqSearchFrom]]: the broadcast side grows
     * only by the per-cell LUT copies (|queries|·nprobe·m·k rows), the
     * scoring join stays keyed on (cell, sub, code), and the aggregate
-    * stays nprobe·|cell|·|queries|. */
-  def ivfAdcResidualSearch(
-      corpus: DataFrame, queries: DataFrame,
-      coarseK: Int, coarseRounds: Int,
-      m: Int, k: Int, rounds: Int, dims: Int,
-      topK: Int, nprobe: Int): DataFrame = {
-    val subLen = dims / m
-    // the residual PQ chain DEPENDS on the finished coarse quantizer
-    // (residuals subtract its final centroids), so unlike [[ivfPqSearch]]
-    // these two trainings are inherently sequential — sharing across
-    // consumers happens at the model-cache layer instead
-    val (assigned, centroids) = kmeans(corpus, coarseK, coarseRounds, dims)
-    // materialize the residual corpus once (it IS the encoded data — the
-    // 100 TB deployment stores it): without this every training round
-    // would recompute the coarse assignment scan behind residualsFrom
-    val resid = residualsFrom(assigned, centroids).localCheckpoint(true)
-    val (codes, books) = pqModelFrom(slicedVecs(resid, m, subLen, 0), k, rounds, subLen, m)
-    ivfAdcResidualSearchFrom(
-      assigned, centroids, codes, books, queries, m, subLen, topK, nprobe)
-  }
-
-  /** [[ivfAdcResidualSearch]] over ALREADY-trained coarse + residual-PQ
-    * models (the residual `codes`/`books` must have been trained on
-    * [[residualsFrom]] of exactly this `assigned`/`centroids` pair — seeds
-    * that diverge would silently mis-rank). */
+    * stays nprobe·|cell|·|queries|.
+    *
+    * The residual `codes`/`books` must have been trained on
+    * [[residualsFrom]] of exactly this `assigned`/`centroids` pair —
+    * seeds that diverge would silently mis-rank. That makes the two
+    * trainings inherently sequential (residuals subtract the finished
+    * coarse centroids), unlike [[coarsePqModels]]'s fused run. */
   def ivfAdcResidualSearchFrom(
       assigned: DataFrame, centroids: DataFrame,
       codes: DataFrame, books: DataFrame, queries: DataFrame,
@@ -741,43 +629,28 @@ object Similarity {
     // the probe keeps each probed cell's centroid: the query's residual is
     // PER CELL (q − c_cell), one LUT per (query, probed cell)
     val qr = probeCells(centroids, queries, nprobe)
-      .select(col("q_id"), col("q_cell"),
+      .select(col("q_id"), col("q_cell").as("cell"),
         zip_with(col("q_emb"), col("c"), (x, c) => x - c).as("qe"))
-    val qSub = (0 until m).map { s =>
-      qr.select(col("q_id"), col("q_cell"),
-        slice(col("qe"), s * subLen + 1, subLen).as("qe"), lit(s).as("sub"))
-    }.reduce(_ unionAll _)
-    val lutCells = qSub
-      .join(books.withColumn("dcc", dot(col("c"), col("c"))), "sub")
-      .select(col("q_id"), col("q_cell"), col("sub").as("l_sub"),
-        col("cluster").as("l_code"),
-        adcPart(col("qe"), col("c"), col("dcc")).as("part"))
-    adcScoreProbed(withCells(codes, assigned), lutCells, topK)
+    adcTopK(withCells(codes, assigned), adcTable(qr, Seq("q_id", "cell"), books, m, subLen),
+      Seq("cell", "sub", "code"), topK)
   }
 
-  /** Coarse-quantizer residuals — the vectors IVFADC actually encodes
-    * (Jégou et al. 2011 §III): r(x) = x − c(cell(x)), each vector minus
-    * its assigned coarse centroid. Residual magnitudes are a fraction of
-    * raw magnitudes, so a PQ codebook of the same size spends its k
-    * entries on a tighter distribution and reconstruction error drops —
-    * the e16 gate measures exactly that. Returns (vec_id, embedding) with
-    * the residual in `embedding`, drop-in for [[pqModel]].
+  /** Coarse-quantizer residuals over a trained coarse quantizer ([[kmeans]]'s
+    * `assigned`/`centroids`) — the vectors IVFADC actually encodes (Jégou
+    * et al. 2011 §III): r(x) = x − c(cell(x)), each vector minus its
+    * assigned coarse centroid. Residual magnitudes are a fraction of raw
+    * magnitudes, so a PQ codebook of the same size spends its k entries on
+    * a tighter distribution and reconstruction error drops — the e16 gate
+    * measures exactly that. Returns (vec_id, embedding) with the residual
+    * in `embedding`, drop-in for [[pqModel]]/[[slicedVecs]]. Taking the
+    * trained quantizer keeps one training for both the residuals and the
+    * search that probes the same cells (e17): training twice would be both
+    * wasteful and subtly wrong if seeds ever diverged.
     *
     * The centroid join is a broadcast of k rows; the subtraction is
     * scan-stage `zip_with` over correctly-rounded IEEE doubles (exact
     * float→double inputs minus round4'd means), so both engines compute
     * bit-identical residuals. */
-  def residuals(
-      corpus: DataFrame, coarseK: Int, coarseRounds: Int, dims: Int): DataFrame = {
-    val (assigned, centroids) = kmeans(corpus, coarseK, coarseRounds, dims)
-    residualsFrom(assigned, centroids)
-  }
-
-  /** [[residuals]] over an ALREADY-trained coarse quantizer — the sharing
-    * variant for pipelines that need the assignment/centroids again
-    * downstream (the e17 IVFADC search probes the same cells the residuals
-    * were taken against, so training twice would be both wasteful and
-    * subtly wrong if seeds ever diverged). */
   def residualsFrom(assigned: DataFrame, centroids: DataFrame): DataFrame =
     assigned
       .join(broadcast(centroids), Seq("cluster"))

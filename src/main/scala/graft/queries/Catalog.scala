@@ -167,7 +167,7 @@ object Catalog {
     SimilarityQueries.KmeansK, SimilarityQueries.KmeansRounds, 64)
 
   /** Unrolled power-iteration CTE chain mirroring
-    * [[graft.operators.Similarity.pcaPower]]: round4'd per-dim mean,
+    * [[graft.operators.Similarity.pcaTrainAxis]]: round4'd per-dim mean,
     * centered vectors, uniform 1/8 start axis; per round r the
     * covariance-action aggregate w = avg(x·(x·ax)) per dim (round4'd)
     * then the normalized round4'd axis. Quantization before every reuse

@@ -591,12 +591,6 @@ object RelationalQueries {
       (expr("ts div 86400000000") - lit(19723L)).as("x"),
       (dec(col("value")) * lit(100)).cast("long").as("yc")))
 
-  /** [[x10GroupRegression]]'s statistics + closed form over a
-    * caller-supplied (event_type, x: long, yc: long cents) frame —
-    * shared with the spec, which feeds a perfect line and pins EXACT
-    * slope/intercept/r² recovery (the sufficient statistics are integer,
-    * so a representable-slope line survives the double closed form
-    * bit-exactly). */
   /** The six sufficient statistics alone — shared with the streaming
     * twin's spec, which pins its running state against exactly this
     * batch aggregate on every fed prefix. */
@@ -609,6 +603,12 @@ object RelationalQueries {
         sum(col("x") * col("yc")).as("sxy"),
         sum(col("yc") * col("yc")).as("syy"))
 
+  /** [[x10GroupRegression]]'s statistics + closed form over a
+    * caller-supplied (event_type, x: long, yc: long cents) frame —
+    * shared with the spec, which feeds a perfect line and pins EXACT
+    * slope/intercept/r² recovery (the sufficient statistics are integer,
+    * so a representable-slope line survives the double closed form
+    * bit-exactly). */
   def regressionFrom(e: DataFrame): DataFrame = {
     regressionSuffStats(e)
       .withColumn("num", col("n") * col("sxy") - col("sx") * col("syc"))
@@ -716,24 +716,6 @@ object RelationalQueries {
       .orderBy(col("key"))
   }
 
-  /** Z-order data layout (x12) — the storage-layout operator behind
-    * multi-dimensional scan pruning: cluster rows by
-    * [[graft.functions.MortonInterleave]] and a 2-D range predicate maps
-    * to ONE contiguous z-interval that per-file min/max statistics can
-    * prune, where either single-column sort order scatters the other
-    * dimension across every file. The gate pins the two properties that
-    * make the technique sound, on exact counts:
-    *   - monotonicity ⇒ for ANY rectangle, the z-interval
-    *     [morton(xlo,ylo), morton(xhi,yhi)] is a SUPERSET of the
-    *     rectangle (pruning never loses rows) — `superset_ok`;
-    *   - for a power-of-two ALIGNED square the interval is EXACT (zero
-    *     false positives) — the aligned row's `exact_ok`, efficiency 1.
-    * Coordinates are the repo's 32-bit md5-prefix hash of part/supp keys
-    * mod 64, so the point cloud is uniform at every scale factor and the
-    * oracle replays it bit-for-bit; the per-bit interleave definition in
-    * SQL cross-checks the mask-spread codegen implementation. One scan,
-    * a 2-row broadcast of rectangle specs, conditional-sum aggregates —
-    * nothing above cardinality 2 leaves the mappers. */
   /** The x12/x15 point cloud: 32-bit md5-prefix hash of a key, mod 64 —
     * uniform at every scale factor, replayed bit-for-bit by the oracle. */
   private def hashCoord64(c: Column): Column =
@@ -771,6 +753,24 @@ object RelationalQueries {
       .groupBy(col("px"), col("sx"), col("z"))
       .agg(count(lit(1)).as("cnt"))
 
+  /** Z-order data layout (x12) — the storage-layout operator behind
+    * multi-dimensional scan pruning: cluster rows by
+    * [[graft.functions.MortonInterleave]] and a 2-D range predicate maps
+    * to ONE contiguous z-interval that per-file min/max statistics can
+    * prune, where either single-column sort order scatters the other
+    * dimension across every file. The gate pins the two properties that
+    * make the technique sound, on exact counts:
+    *   - monotonicity ⇒ for ANY rectangle, the z-interval
+    *     [morton(xlo,ylo), morton(xhi,yhi)] is a SUPERSET of the
+    *     rectangle (pruning never loses rows) — `superset_ok`;
+    *   - for a power-of-two ALIGNED square the interval is EXACT (zero
+    *     false positives) — the aligned row's `exact_ok`, efficiency 1.
+    * Coordinates are the repo's 32-bit md5-prefix hash of part/supp keys
+    * mod 64, so the point cloud is uniform at every scale factor and the
+    * oracle replays it bit-for-bit; the per-bit interleave definition in
+    * SQL cross-checks the mask-spread codegen implementation. One scan,
+    * a 2-row broadcast of rectangle specs, conditional-sum aggregates —
+    * nothing above cardinality 2 leaves the mappers. */
   def x12ZorderLayout(s: SparkSession, d: String): DataFrame =
     x12FromHist(mortonHist(s, d))
 
@@ -1311,20 +1311,6 @@ object RelationalQueries {
         count(lit(1)).as("n"))
       .orderBy(col("n_regionkey"))
 
-  /** Correlated scalar subquery (the TPC-H Q17 shape, beyond the
-    * reference): revenue from small-quantity orders of one brand's parts,
-    * where "small" is relative to EACH part's own average quantity. The
-    * oracle states it in the natural CORRELATED form; this side is the
-    * decorrelated plan Catalyst would rewrite it to — per-part averages as
-    * an ordinary aggregate joined back on the correlation key — proving
-    * the rewrite preserves semantics. The brand filter broadcasts; the
-    * correlated average is an UNBOUNDED WINDOW over the correlation key —
-    * one shuffle on l_partkey serves both the average and the comparison
-    * row-by-row, with no self-join and no cached intermediate (the earlier
-    * persist+join formulation scanned the semi-filtered frame twice and
-    * left it pinned in the cache until an external clearCache). avg =
-    * exact decimal sum / count so shuffle order cannot perturb the
-    * threshold. */
   /** Offset window functions (SURVEY §2.8 breadth): per-customer order
     * timeline with lag/lead neighbors, day gaps, and ntile quartiles — the
     * inter-arrival-time shape every retention/cadence analysis runs. One
@@ -1347,6 +1333,20 @@ object RelationalQueries {
       .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
   }
 
+  /** Correlated scalar subquery (the TPC-H Q17 shape, beyond the
+    * reference): revenue from small-quantity orders of one brand's parts,
+    * where "small" is relative to EACH part's own average quantity. The
+    * oracle states it in the natural CORRELATED form; this side is the
+    * decorrelated plan Catalyst would rewrite it to — per-part averages as
+    * an ordinary aggregate joined back on the correlation key — proving
+    * the rewrite preserves semantics. The brand filter broadcasts; the
+    * correlated average is an UNBOUNDED WINDOW over the correlation key —
+    * one shuffle on l_partkey serves both the average and the comparison
+    * row-by-row, with no self-join and no cached intermediate (the earlier
+    * persist+join formulation scanned the semi-filtered frame twice and
+    * left it pinned in the cache until an external clearCache). avg =
+    * exact decimal sum / count so shuffle order cannot perturb the
+    * threshold. */
   def x4SmallQtyRevenue(s: SparkSession, d: String): DataFrame = {
     val brandParts = Tables.part(s, d)
       .filter(col("p_brand") === "Brand#1")

@@ -133,28 +133,32 @@ object SimilarityQueries {
     * truth — the standard ANN quality measurement, closing the
     * train→assign→search→EVALUATE loop in-plan. Per query: how many of the
     * exact top-5 neighbors ([[e1KnnBrute]]'s result) the multi-probe
-    * learned search ([[e11KnnIVFLearned]]'s result) returned. Both sides
-    * are tiny ranked lists (q × k rows), so the compare join is broadcast
-    * and the cost is the two searches themselves; the denominator is the
-    * per-query truth count (= k here), so the gate stays honest if a query
-    * ever has fewer than k neighbors. */
+    * learned search ([[e11KnnIVFLearned]]'s result) returned
+    * ([[recallAgainst]]); the cost is the two searches themselves. */
   def e12RecallAtK(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     val truth = knnBruteForce(Tables.embeddings(s, d), queriesSide(s, d), 5)
       .select(col("q_id"), col("n_id"))
-    val approx =
-      knnIVFMultiProbeLearned(cp.assigned, cp.centroids, queriesSide(s, d), 5, nprobe = 2)
-        .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
+    recallAgainst(truth,
+      knnIVFMultiProbeLearned(cp.assigned, cp.centroids, queriesSide(s, d), 5, nprobe = 2))
+      .orderBy(col("q_id"))
+  }
+
+  /** Per-query recall of an approximate search against its (q_id, n_id)
+    * truth — the check e12 and e18 share: both sides are tiny ranked lists
+    * (q × k rows), so the compare join broadcasts; the denominator is the
+    * per-query truth count (= k here), so the gate stays honest if a query
+    * ever has fewer than k neighbors. Columns (q_id, n_truth, n_hit,
+    * recall). */
+  private def recallAgainst(truth: DataFrame, approx: DataFrame): DataFrame =
     truth
-      .join(broadcast(approx),
+      .join(broadcast(approx.select(col("q_id").as("a_q"), col("n_id").as("a_n"))),
         col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_hit"))
       .select(col("q_id"), col("n_truth"), col("n_hit"),
         graft.operators.Relational.round4(
           col("n_hit").cast("double") / col("n_truth")).as("recall"))
-      .orderBy(col("q_id"))
-  }
 
   /** Probe-count sensitivity of learned-IVF recall — the recall/cost dial
     * MEASURED instead of asserted at one point: recall@5 at nprobe ∈
@@ -166,28 +170,8 @@ object SimilarityQueries {
     * (true-top-5 members outrank every non-member in any candidate
     * subset, so widening the probe set only adds them). */
   def e12bProbeRecall(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Similarity.{dot, norm, knnBruteForce}
     val cp = Models.coarsePq(s, d)
-    val (assigned, centroids) = (cp.assigned, cp.centroids)
-    val cent = centroids.withColumn("cent_norm", norm(col("c")))
-    val q = queriesSide(s, d)
-      .select(col("vec_id").as("q_id"),
-        col("embedding").cast("array<double>").as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("csim").desc, col("cluster").asc)
-    val probed = q
-      .crossJoin(broadcast(cent))
-      .withColumn("csim", dot(col("q_emb"), col("c")) / (col("q_norm") * col("cent_norm")))
-      .withColumn("prank", row_number().over(wp))
-      .filter(col("prank") <= 4)
-      .select(col("q_id"), col("q_emb"), col("q_norm"),
-        col("cluster").as("q_cell"), col("prank"))
-    val c = assigned.select(col("vec_id").as("n_id"), col("v").as("n_emb"),
-      col("cluster").as("n_cell"), sqrt(col("dxx")).as("n_norm"))
-    val scored = c
-      .join(broadcast(probed), col("q_cell") === col("n_cell") && col("q_id") =!= col("n_id"))
-      .withColumn("cos", dot(col("q_emb"), col("n_emb")) / (col("q_norm") * col("n_norm")))
+    val scored = learnedCandidates(cp.assigned, cp.centroids, queriesSide(s, d), nprobe = 4)
       .select(col("q_id"), col("n_id"), col("prank"), col("cos"))
     def wn(n: Int) = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id"))
@@ -226,7 +210,7 @@ object SimilarityQueries {
 
   /** Product-quantization codes: per (vector, subspace) the nearest
     * codebook entry and its squared error — the sub-byte ANN storage path
-    * (see [[graft.operators.Similarity.pqCodes]]). */
+    * (see [[graft.operators.Similarity.pqModel]]). */
   def e13PqCodes(s: SparkSession, d: String): DataFrame =
     Models.coarsePq(s, d).codes
       .select(col("vec_id"), col("sub"), col("code"),
@@ -235,7 +219,7 @@ object SimilarityQueries {
 
   /** PQ-ADC top-5 search: the query scores the whole corpus through its
     * codebook lookup table — the code-only scan that makes PQ an INDEX,
-    * not just compression (see [[graft.operators.Similarity.pqAdcSearch]]). */
+    * not just compression (see [[graft.operators.Similarity.pqAdcSearchFrom]]). */
   def e14AdcSearch(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     graft.operators.Similarity.pqAdcSearchFrom(
@@ -246,7 +230,7 @@ object SimilarityQueries {
   /** IVF-PQ (IVFADC) top-5 search: the coarse cells (e9's k-means), the PQ
     * codes (e13's codebooks), and the ADC scan (e14's LUT) composed so each
     * query scores ONLY its 2 probed cells — the scale-safe form of e14
-    * (see [[graft.operators.Similarity.ivfPqSearch]]). */
+    * (see [[graft.operators.Similarity.ivfPqSearchFrom]]). */
   def e15IvfPqSearch(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     graft.operators.Similarity.ivfPqSearchFrom(
@@ -257,7 +241,7 @@ object SimilarityQueries {
 
   /** Residual product quantization vs raw PQ — the IVFADC encoding choice
     * made measurable: PQ trained on coarse-quantizer residuals
-    * ([[graft.operators.Similarity.residuals]]) against PQ trained on the
+    * ([[graft.operators.Similarity.residualsFrom]]) against PQ trained on the
     * raw vectors, per-vector total squared reconstruction error side by
     * side (subspaces are an orthogonal decomposition, so the per-sub sq
     * errors sum exactly to the vector's reconstruction error). `improved`
@@ -311,7 +295,7 @@ object SimilarityQueries {
   /** Full IVFADC top-5 search: e15's probed-cells ADC over e16's residual
     * encoding — per probed cell the query builds its own residual LUT, so
     * the ADC sum approximates the true residual distance (see
-    * [[graft.operators.Similarity.ivfAdcResidualSearch]]). */
+    * [[graft.operators.Similarity.ivfAdcResidualSearchFrom]]). */
   def e17IvfadcSearch(s: SparkSession, d: String): DataFrame = {
     val cp = Models.coarsePq(s, d)
     val rp = Models.residualPq(s, d)
@@ -321,12 +305,6 @@ object SimilarityQueries {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** Recall@5 of the full IVFADC search (e17) against brute-force
-    * EUCLIDEAN truth — ADC approximates squared L2, so the truth ranking
-    * must be L2 too (grading an L2 search against cosine truth would
-    * conflate metric mismatch with quantization loss). Mirrors
-    * [[e12RecallAtK]] for the PQ path; both sides are tiny ranked lists,
-    * the compare join broadcasts. */
   /** Brute-force EUCLIDEAN top-k truth — the metric ADC approximates, so
     * it is what the PQ-family evaluations (e18, e19) grade against.
     * Same broadcast-queries / per-partition-top-k shape as
@@ -353,22 +331,19 @@ object SimilarityQueries {
       .select(col("tq_id").as("q_id"), col("n_id"))
   }
 
+  /** Recall@5 of the full IVFADC search (e17) against brute-force
+    * EUCLIDEAN truth — ADC approximates squared L2, so the truth ranking
+    * must be L2 too (grading an L2 search against cosine truth would
+    * conflate metric mismatch with quantization loss). Mirrors
+    * [[e12RecallAtK]] for the PQ path through the same
+    * [[recallAgainst]]. */
   def e18IvfadcRecall(s: SparkSession, d: String): DataFrame = {
-    val truth = Models.l2Truth5(s, d)
     val cp = Models.coarsePq(s, d)
     val rp = Models.residualPq(s, d)
-    val approx = graft.operators.Similarity.ivfAdcResidualSearchFrom(
-      cp.assigned, cp.centroids, rp.codes, rp.books, queriesSide(s, d),
-      PqM, KmeansDims / PqM, topK = 5, nprobe = 2)
-      .select(col("q_id").as("a_q"), col("n_id").as("a_n"))
-    truth
-      .join(broadcast(approx),
-        col("q_id") === col("a_q") && col("n_id") === col("a_n"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_truth"), count(col("a_n")).as("n_hit"))
-      .select(col("q_id"), col("n_truth"), col("n_hit"),
-        graft.operators.Relational.round4(
-          col("n_hit").cast("double") / col("n_truth")).as("recall"))
+    recallAgainst(Models.l2Truth5(s, d),
+      ivfAdcResidualSearchFrom(
+        cp.assigned, cp.centroids, rp.codes, rp.books, queriesSide(s, d),
+        PqM, KmeansDims / PqM, topK = 5, nprobe = 2))
       .orderBy(col("q_id"))
   }
 
@@ -540,7 +515,7 @@ object SimilarityQueries {
   }
 
   /** Top-PC projection by in-plan power iteration (e23,
-    * [[graft.operators.Similarity.pcaPower]]): 6 rounds of the
+    * [[graft.operators.Similarity.pcaTrainAxis]]): 6 rounds of the
     * covariance-action aggregate recover the corpus's dominant axis, and
     * every embedding is projected onto it — the dimensionality-reduction
     * step (PCA whitening, OPQ's rotation basis, 1-D embedding sketches)

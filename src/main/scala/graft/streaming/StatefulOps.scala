@@ -140,6 +140,23 @@ object StatefulOps {
       }
   }
 
+  /** The funnel transition both [[funnel]] and [[funnelAligned]] fold:
+    * first view wins; first click AT OR AFTER the first view wins (x8's
+    * batch `>=` comparison). Kept in ONE place so the two operators can
+    * never drift apart on the semantics. */
+  private def foldFunnelEvent(st: FunnelState, e: FunnelEvent): FunnelState =
+    if (e.eventType == "view" && st.firstView < 0)
+      st.copy(firstView = e.tsUs)
+    else if (e.eventType == "click" && st.firstView >= 0 &&
+      st.firstClick < 0 && e.tsUs >= st.firstView)
+      st.copy(firstClick = e.tsUs)
+    else st
+
+  /** The slice order both funnel operators use: event time, views before
+    * clicks on ties (so an equal-timestamp click still converts). */
+  private def funnelOrder(e: FunnelEvent): (Long, Int) =
+    (e.tsUs, if (e.eventType == "view") 0 else 1)
+
   /** Per-user funnel state — x8's streaming form: first 'view', then
     * first 'click' AT OR AFTER it, as running state under the per-key
     * ORDER contract the reference's stateful ops assume (each batch's
@@ -167,23 +184,6 @@ object StatefulOps {
     * −1 = step not reached. Decisions are FINAL under in-order delivery,
     * so state is two longs per user — the bounded-state property funnel
     * analysis loses the moment order is not guaranteed. */
-  /** The funnel transition both [[funnel]] and [[funnelAligned]] fold:
-    * first view wins; first click AT OR AFTER the first view wins (x8's
-    * batch `>=` comparison). Kept in ONE place so the two operators can
-    * never drift apart on the semantics. */
-  private def foldFunnelEvent(st: FunnelState, e: FunnelEvent): FunnelState =
-    if (e.eventType == "view" && st.firstView < 0)
-      st.copy(firstView = e.tsUs)
-    else if (e.eventType == "click" && st.firstView >= 0 &&
-      st.firstClick < 0 && e.tsUs >= st.firstView)
-      st.copy(firstClick = e.tsUs)
-    else st
-
-  /** The slice order both funnel operators use: event time, views before
-    * clicks on ties (so an equal-timestamp click still converts). */
-  private def funnelOrder(e: FunnelEvent): (Long, Int) =
-    (e.tsUs, if (e.eventType == "view") 0 else 1)
-
   def funnel(ds: Dataset[FunnelEvent]): Dataset[(Long, Long, Long)] = {
     implicit val outEnc: Encoder[(Long, Long, Long)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)

@@ -2,10 +2,11 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** pcaPower must recover a planted dominant axis: points drawn along a
-  * known direction u (spread ±10) plus a weaker orthogonal direction
-  * (±1.5) must yield an axis with |cos(axis, u)| ≈ 1, and the projection
-  * must carry the dominant coordinate. */
+/** Power iteration (pcaCentered → pcaTrainAxis → pcaProjectFrom) must
+  * recover a planted dominant axis: points drawn along a known direction
+  * u (spread ±10) plus a weaker orthogonal direction (±1.5) must yield an
+  * axis with |cos(axis, u)| ≈ 1, and the projection must carry the
+  * dominant coordinate. */
 class PcaPowerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,9 +30,10 @@ class PcaPowerSpec extends SparkSpec {
       (i.toLong, (0 until dims).map(j => (t * u(j) + s * w(j)).toFloat).toArray)
     }
     val df = rows.toDF("vec_id", "embedding")
-    val (projected, axis) = Similarity.pcaPower(df, rounds = 8, dims = dims)
-    val ax = axis.collect()(0).getSeq[Double](0)
-    val cos = ax.lazyZip(u).map(_ * _).sum
+    val centered = Similarity.pcaCentered(df, dims)
+    val ax = Similarity.pcaTrainAxis(centered, rounds = 8, dims = dims)
+    val projected = Similarity.pcaProjectFrom(centered, ax)
+    val cos = ax.toSeq.lazyZip(u).map(_ * _).sum
     assert(math.abs(cos) > 0.99, s"|cos(axis, u)| = ${math.abs(cos)}")
 
     // projections carry the dominant coordinate (up to the global sign)

@@ -39,6 +39,42 @@ class SimilaritySpec extends SparkSpec {
       s"multi-probe over all cells must match brute force: $multi vs $brute")
   }
 
+  test("every cosine kNN search ranks equal cosines by n_id and never returns the query") {
+    // exact duplicates: 0, 3, 5, 7 share one vector (cos 1 to each other),
+    // 4 and 9 another (cos 1/sqrt(1.25) to the first group); 1 and 2 sit
+    // orthogonal in a second cell. Queries 0 and 5 are corpus members, so
+    // each has an exact duplicate of itself that the self-exclusion must
+    // keep while dropping the query row.
+    val a = Array(1f, 0f, 0f, 0f)
+    val b = Array(1f, 0.5f, 0f, 0f)
+    val o = Array(0f, 1f, 0f, 0f)
+    val docs = Seq((0L, a, 0L), (1L, o, 1L), (2L, o, 1L), (3L, a, 0L), (4L, b, 0L),
+      (5L, a, 0L), (7L, a, 0L), (9L, b, 0L))
+      .toDF("vec_id", "embedding", "label")
+    val q = docs.filter($"vec_id".isin(0L, 5L))
+    // seeds are ids 0 and 1: one learned cell per planted direction
+    val (assigned, centroids) = Similarity.kmeans(docs, k = 2, rounds = 2, dims = 4)
+    val searches = Seq(
+      "knnBruteForce" -> Similarity.knnBruteForce(docs, q, 5),
+      "knnIVF" -> Similarity.knnIVF(docs, q, 5),
+      "knnIVFMultiProbe" -> Similarity.knnIVFMultiProbe(docs, q, 5, nprobe = 2),
+      "knnIVFMultiProbeLearned" ->
+        Similarity.knnIVFMultiProbeLearned(assigned, centroids, q, 5, nprobe = 2))
+    val expected = Map(0L -> Seq(3L, 5L, 7L, 4L, 9L), 5L -> Seq(0L, 3L, 7L, 4L, 9L))
+    for ((name, df) <- searches) {
+      val rows = df.as[(Long, Long, Int, Double)].collect().toSeq
+      assert(rows.forall(r => r._1 != r._2), s"$name returned a query as its own neighbor: $rows")
+      val byQuery = rows.groupBy(_._1).view.mapValues(_.sortBy(_._3)).toMap
+      assert(byQuery.keySet == expected.keySet, s"$name: queries ${byQuery.keySet}")
+      for ((qid, ranked) <- byQuery) {
+        assert(ranked.map(_._3) == (1 to 5), s"$name q=$qid: ranks ${ranked.map(_._3)}")
+        assert(ranked.map(_._2) == expected(qid), s"$name q=$qid: neighbors ${ranked.map(_._2)}")
+        assert(ranked.map(_._4) == Seq(1.0, 1.0, 1.0, 0.8944, 0.8944),
+          s"$name q=$qid: cosines ${ranked.map(_._4)}")
+      }
+    }
+  }
+
   test("kmeans learns the planted two-cluster structure and drives learned multi-probe") {
     // drop the label column entirely: the quantizer must be LEARNED.
     // init = first-2 vectors (ids 0, 1) — one seed per planted cluster.
@@ -117,7 +153,7 @@ class SimilaritySpec extends SparkSpec {
       (3L, vec(0.1f, 0.9f, 0.9f, 0.1f)), // front B, back A
       (4L, vec(0.8f, 0.2f, 0.8f, 0.2f))) // front A, back A
       .toDF("vec_id", "embedding")
-    val codes = Similarity.pqCodes(docs, m = 2, k = 2, rounds = 2, dims = 4)
+    val codes = Similarity.pqModel(docs, m = 2, k = 2, rounds = 2, dims = 4)._1
       .select($"vec_id", $"sub", $"code").as[(Long, Int, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
     assert(codes(0L) != codes(1L))
@@ -138,7 +174,8 @@ class SimilaritySpec extends SparkSpec {
       (4L, vec(0.8f, 0.2f, 0.8f, 0.2f))) // shares BOTH of 0's codes
       .toDF("vec_id", "embedding")
     val q = docs.filter($"vec_id" === 0L)
-    val r = Similarity.pqAdcSearch(docs, q, m = 2, k = 2, rounds = 2, dims = 4, topK = 4)
+    val (codes, books) = Similarity.pqModel(docs, m = 2, k = 2, rounds = 2, dims = 4)
+    val r = Similarity.pqAdcSearchFrom(codes, books, q, m = 2, subLen = 2, topK = 4)
       .orderBy($"rank").as[(Long, Long, Int, Double)].collect()
     // ADC distance is a pure function of the neighbor's CODES: the
     // both-codes-match vector must rank first, the no-match vector last
@@ -211,17 +248,19 @@ class SimilaritySpec extends SparkSpec {
     val q = docs.filter($"vec_id" === 0L)
     // coarse k=2 cells; nprobe=2 probes BOTH -> the cell restriction is
     // vacuous and IVF-PQ must reproduce the exhaustive ADC ranking exactly
-    val full = Similarity.pqAdcSearch(docs, q, m = 2, k = 2, rounds = 2, dims = 4, topK = 4)
+    val (pqCodes, pqBooks) = Similarity.pqModel(docs, m = 2, k = 2, rounds = 2, dims = 4)
+    val full = Similarity.pqAdcSearchFrom(pqCodes, pqBooks, q, m = 2, subLen = 2, topK = 4)
       .as[(Long, Long, Int, Double)].collect().sortBy(_._3).toSeq
-    val ivf = Similarity.ivfPqSearch(docs, q, coarseK = 2, coarseRounds = 2,
-      m = 2, k = 2, rounds = 2, dims = 4, topK = 4, nprobe = 2)
-      .as[(Long, Long, Int, Double)].collect().sortBy(_._3).toSeq
-    assert(ivf == full, s"all-cells IVF-PQ must equal exhaustive ADC: $ivf vs $full")
+    val (a, c, codes, books) = Similarity.coarsePqModels(docs, coarseK = 2, coarseRounds = 2,
+      m = 2, k = 2, rounds = 2, dims = 4)
+    def ivf(nprobe: Int) =
+      Similarity.ivfPqSearchFrom(a, c, codes, books, q, m = 2, subLen = 2, topK = 4, nprobe)
+    val all = ivf(nprobe = 2).as[(Long, Long, Int, Double)].collect().sortBy(_._3).toSeq
+    assert(all == full, s"all-cells IVF-PQ must equal exhaustive ADC: $all vs $full")
     // nprobe=1: every returned neighbor must live in ONE coarse cell
     val cells = Similarity.kmeans(docs, k = 2, rounds = 2, dims = 4)._1
       .select($"vec_id", $"cluster").as[(Long, Int)].collect().toMap
-    val one = Similarity.ivfPqSearch(docs, q, coarseK = 2, coarseRounds = 2,
-      m = 2, k = 2, rounds = 2, dims = 4, topK = 4, nprobe = 1)
+    val one = ivf(nprobe = 1)
       .select($"n_id").as[Long].collect().toSeq
     assert(one.nonEmpty && one.map(cells).distinct.size == 1,
       s"nprobe=1 must confine scoring to a single coarse cell, got cells ${one.map(cells)}")
@@ -244,7 +283,8 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, base.map(_ + rnd.nextFloat() * 0.3f))
     }.toDF("vec_id", "embedding")
     val raw = Similarity.pqModel(docs, m = 2, k = 2, rounds = 2, dims = 4)._1
-    val resVecs = Similarity.residuals(docs, coarseK = 4, coarseRounds = 3, dims = 4)
+    val (assigned, centroids) = Similarity.kmeans(docs, k = 4, rounds = 3, dims = 4)
+    val resVecs = Similarity.residualsFrom(assigned, centroids)
     // residuals are near-centered: magnitudes collapse vs the raw vectors
     val resNorm = resVecs.select(
       sqrt(graft.functions.VectorFunctions.vec_dot(
@@ -274,8 +314,13 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, base.map(_ + rnd.nextFloat() * 0.3f))
     }.toDF("vec_id", "embedding")
     val q = docs.filter($"vec_id" === 0L)
-    val res = Similarity.ivfAdcResidualSearch(docs, q, coarseK = 4, coarseRounds = 3,
-      m = 2, k = 2, rounds = 2, dims = 4, topK = 3, nprobe = 4)
+    // coarse quantizer first: the residual codebooks train on its residuals
+    val (assigned, centroids) = Similarity.kmeans(docs, k = 4, rounds = 3, dims = 4)
+    val resid = Similarity.residualsFrom(assigned, centroids)
+    val (codes, books) = Similarity.pqModelFrom(
+      Similarity.slicedVecs(resid, 2, 2, 0), k = 2, rounds = 2, subLen = 2, nSub = 2)
+    val res = Similarity.ivfAdcResidualSearchFrom(assigned, centroids, codes, books, q,
+      m = 2, subLen = 2, topK = 3, nprobe = 4)
       .orderBy($"rank").as[(Long, Long, Int, Double)].collect().toSeq
     assert(res.size == 3)
     assert(res.forall(_._2 % 4 == 0),
