@@ -16,13 +16,12 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val queries = Run.named(SparkEntry.queries,
+      if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted)
     val spark = Engine.session("graft-explain")
-    val names =
-      if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { n =>
+    queries.foreach { case (n, q) =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      q(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

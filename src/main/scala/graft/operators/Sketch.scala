@@ -37,34 +37,33 @@ object Sketch {
     pmod(pmod(h * a + b, lit(CmsPrime)), lit(width))
   }
 
+  /** `keyed` with one row per depth cell of its key: column `__c`, the
+    * (j, bucket) struct, exploded in the scan stage from one array, as
+    * `bloomBits` explodes its positions. */
+  private def cells(keyed: DataFrame, keyCol: String, width: Int): DataFrame =
+    keyed.withColumn("__h", baseHash(col(keyCol)))
+      .withColumn("__c", explode(array(CmsHashes.indices.map(j =>
+        struct(lit(j).as("j"), bucketOf(col("__h"), j, width).as("bucket"))): _*)))
+
   /** Build the sketch grid from per-key WEIGHTED counts: one row per
     * occupied (j, bucket) cell. Feed it pre-aggregated (key, n) rows — the
     * per-key aggregate is one shuffle the caller usually needs anyway, and
     * incrementing by weight is equivalent to (and far cheaper than)
     * hashing every raw occurrence. */
-  def cmsGrid(keyed: DataFrame, keyCol: String, nCol: String, width: Int): DataFrame = {
-    val withH = keyed.withColumn("__h", baseHash(col(keyCol)))
-    val rows = CmsHashes.indices.map { j =>
-      withH.select(lit(j).as("j"), bucketOf(col("__h"), j, width).as("bucket"),
-        col(nCol).as("__n"))
-    }.reduce(_ unionAll _)
-    rows.groupBy(col("j"), col("bucket")).agg(sum(col("__n")).as("cell"))
-  }
+  def cmsGrid(keyed: DataFrame, keyCol: String, nCol: String, width: Int): DataFrame =
+    cells(keyed, keyCol, width)
+      .groupBy(col("__c.j").as("j"), col("__c.bucket").as("bucket"))
+      .agg(sum(col(nCol)).as("cell"))
 
   /** Point-estimate each key against a (small, broadcastable) grid: the
     * min over the key's depth cells. Returns (key, est). */
   def cmsEstimate(
-      keys: DataFrame, keyCol: String, grid: DataFrame, width: Int): DataFrame = {
-    val withH = keys.withColumn("__h", baseHash(col(keyCol)))
-    val probes = CmsHashes.indices.map { j =>
-      withH.select(col(keyCol), lit(j).as("j"),
-        bucketOf(col("__h"), j, width).as("bucket"))
-    }.reduce(_ unionAll _)
-    probes
+      keys: DataFrame, keyCol: String, grid: DataFrame, width: Int): DataFrame =
+    cells(keys, keyCol, width)
+      .select(col(keyCol), col("__c.j").as("j"), col("__c.bucket").as("bucket"))
       .join(broadcast(grid), Seq("j", "bucket"))
       .groupBy(col(keyCol))
       .agg(min(col("cell")).as("est"))
-  }
 
   /** Bloom filter over a key set, materialized as the DataFrame of its SET
     * bit positions (≤ m rows of one long each). Same md5 → universal-hash

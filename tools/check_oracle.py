@@ -33,6 +33,9 @@ def main(sf_dir: str, out_dir: str) -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        print(f"FAIL {out_dir}/oracle_sql.json names no query")
+        return 1
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         res_dir = f"{out_dir}/{name}"
