@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
   * SPARK_GRAFT_SF_DIR through [[Run.each]] and prints, in order:
   *   - one line per query with its min wall over the passes and the Spark
   *     work of its last pass:
-  *     `{"q","wall_s","jobs","stages","tasks","shuf_read_mb","shuf_write_mb","input_mb"}`;
+  *     `{"q","wall_s","jobs","stages","tasks","shuf_read_mb","shuf_write_mb","input_rows"}`;
   *   - one line of the catalog's job, stage and task totals;
   *   - the full record line (also written to `BENCH_FULL.json`);
   *   - a compact record line, always the last stdout line.
@@ -63,7 +63,7 @@ object Bench {
     last.foreach { r =>
       val wall = best.get(r.name).fold("null")(w => f"$w%.3f")
       println(
-        f"""{"q":"${r.name}","wall_s":$wall,"jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},"shuf_read_mb":${r.shuffleRead / 1e6}%.1f,"shuf_write_mb":${r.shuffleWrite / 1e6}%.1f,"input_mb":${r.input / 1e6}%.1f}""")
+        f"""{"q":"${r.name}","wall_s":$wall,"jobs":${r.jobs},"stages":${r.stages},"tasks":${r.tasks},"shuf_read_mb":${r.shuffleRead / 1e6}%.1f,"shuf_write_mb":${r.shuffleWrite / 1e6}%.1f,"input_rows":${r.inputRows}}""")
     }
     println(s"""{"queries":${last.size},"jobs":${last.map(_.jobs).sum},"stages":${last.map(_.stages).sum},"tasks":${last.map(_.tasks).sum}}""")
 

@@ -8,7 +8,7 @@ import scala.util.chaining._
 
 /** The catalog run loop the Bench and Verify mains share: each query is
   * built and handed to a sink, timed, and charged with the Spark work it
-  * caused — jobs, stages, tasks, shuffle and input bytes. An empty job
+  * caused — jobs, stages, tasks, shuffle bytes and input rows. An empty job
   * costs ~60-100 ms on a 4-core VM (tools/host_probe.py measures it), so
   * `jobs × tiny_job_ms` bounds a query's latency floor; the shuffle byte
   * columns bound its exchange work.
@@ -17,9 +17,13 @@ object Run {
   type Query = (SparkSession, String) => DataFrame
 
   /** One query's run: its wall seconds (build plus sink), or the non-fatal
-    * failure it threw, and the Spark work it caused. */
+    * failure it threw, and the Spark work it caused. `inputRows` counts
+    * the records its tasks read from files and cached or checkpointed
+    * blocks: Parquet's vectored reads run off the task thread, so the
+    * task's input bytes miss most of a parquet scan, while its record
+    * count is exact. */
   final case class Record(name: String, seconds: Try[Double], jobs: Int, stages: Int,
-      tasks: Int, shuffleRead: Long, shuffleWrite: Long, input: Long)
+      tasks: Int, shuffleRead: Long, shuffleWrite: Long, inputRows: Long)
 
   /** The queries `SPARK_GRAFT_ONLY` names (comma-separated), or every query
     * sorted by name when it is unset. */
@@ -60,7 +64,7 @@ object Run {
   /** Global counters of the context's work since the last `take`. */
   private final class Counter(sc: SparkContext) extends SparkListener {
     private var jobs, stages, tasks = 0
-    private var shuffleRead, shuffleWrite, input = 0L
+    private var shuffleRead, shuffleWrite, inputRows = 0L
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -71,7 +75,7 @@ object Run {
       if (m != null) {
         shuffleRead += m.shuffleReadMetrics.totalBytesRead
         shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        input += m.inputMetrics.bytesRead
+        inputRows += m.inputMetrics.recordsRead
       }
     }
 
@@ -82,8 +86,8 @@ object Run {
     def take(name: String, seconds: Try[Double]): Record = {
       GraftListenerBus.drain(sc)
       synchronized {
-        val r = Record(name, seconds, jobs, stages, tasks, shuffleRead, shuffleWrite, input)
-        jobs = 0; stages = 0; tasks = 0; shuffleRead = 0L; shuffleWrite = 0L; input = 0L
+        val r = Record(name, seconds, jobs, stages, tasks, shuffleRead, shuffleWrite, inputRows)
+        jobs = 0; stages = 0; tasks = 0; shuffleRead = 0L; shuffleWrite = 0L; inputRows = 0L
         r
       }
     }

@@ -24,7 +24,7 @@ object Verify {
     val failed = Run.each(spark, sfDir, queries) { (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }.filter(_.seconds.isFailure).map(_.name)
-    writeOracleSql(outDir, queries.flatMap { case (n, _) => SparkEntry.oracleSql.get(n).map(n -> _) })
+    writeOracleSql(outDir, queries.map { case (n, _) => n -> SparkEntry.oracleSql(n) })
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")

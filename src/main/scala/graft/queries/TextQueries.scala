@@ -39,8 +39,13 @@ object TextQueries {
   /** Candidate banding + exact-Jaccard verification over a MATERIALIZED
     * shingle frame of canonical docs — the core of the session fixture
     * [[Dedup.verifiedPairs]]. `sh` must be materialized (checkpointed): it
-    * feeds three join sides below. */
-  private[queries] def verifiedPairsFromShingles(sh: DataFrame): DataFrame = {
+    * feeds three join sides. */
+  private[queries] def verifiedPairsFromShingles(sh: DataFrame): DataFrame =
+    verifyPairs(candidatesFromBands(bandsFromShingles(sh, 16, 4)), sh)
+
+  /** The candidate pairs `cands` (id1, id2) whose exact Jaccard `j` over
+    * their shingle lists in `sh` is at least 0.8. */
+  private def verifyPairs(cands: DataFrame, sh: DataFrame): DataFrame =
     // LSH prefilter keeps the candidate set tiny relative to the corpus —
     // broadcast it so the FIRST verification join is map-side against the
     // cached shingle frame. The hint is consumed by that join; its result
@@ -49,12 +54,10 @@ object TextQueries {
     // runtime-size conversion. If the candidate set ever outgrew broadcast
     // range, AQE would be the fallback; at a 0.5 LSH threshold it never
     // should.
-    val cands = broadcast(candidatesFromBands(bandsFromShingles(sh, 16, 4)))
-    broadcast(cands.join(sh.as("sa"), col("id1") === col("sa.doc_id")))
+    broadcast(broadcast(cands).join(sh.as("sa"), col("id1") === col("sa.doc_id")))
       .join(sh.as("sb"), col("id2") === col("sb.doc_id"))
       .withColumn("j", jaccard(col("sa.sh"), col("sb.sh")))
       .filter(col("j") >= 0.8)
-  }
 
   /** The whole corpus-cleaning pipeline composed end-to-end — what a user
     * actually runs: repetition/quality filter (t10's rules) → exact-dedup
@@ -181,11 +184,6 @@ object TextQueries {
     val sh = Dedup.shingles(s, d)
     def cands(rpb: Int): DataFrame =
       candidatesFromBands(bandsFromShingles(sh, 16, rpb)).localCheckpoint(true)
-    def verified(c: DataFrame): DataFrame =
-      broadcast(broadcast(c).join(sh.as("sa"), col("id1") === col("sa.doc_id")))
-        .join(sh.as("sb"), col("id2") === col("sb.doc_id"))
-        .withColumn("j", jaccard(col("sa.sh"), col("sb.sh")))
-        .filter(col("j") >= 0.8)
     // Each geometry's verified count feeds BOTH its stats row and the
     // recall-monotonicity check — checkpoint the 1-row count so the
     // candidate⋈shingle verify join runs once per geometry, not twice.
@@ -195,7 +193,7 @@ object TextQueries {
     // four checkpoint latencies end to end.
     def chain(rpb: Int): (DataFrame, DataFrame) = {
       val c = cands(rpb)
-      (c, verified(c).agg(count(lit(1)).as("n_verified")).localCheckpoint(true))
+      (c, verifyPairs(c, sh).agg(count(lit(1)).as("n_verified")).localCheckpoint(true))
     }
     val Seq((c4, v4), (c2, v2)) = {
       import scala.concurrent.{Await, Future, blocking}

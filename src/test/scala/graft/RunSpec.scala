@@ -55,6 +55,16 @@ class RunSpec extends SparkSpec {
     assert(r.shuffleRead > 0)
   }
 
+  test("a query that scans a parquet file is charged its row count") {
+    withTempDir("graft_run_scan") { dir =>
+      spark.range(0, 5000, 1, 2).toDF("id").write.parquet(s"$dir/t")
+      val scan: Run.Query = (s, _) => s.read.parquet(s"$dir/t").groupBy().sum("id")
+      val Seq(r) = Run.each(spark, noTables, Seq("scan" -> scan))(noop)
+      assert(r.seconds.isSuccess)
+      assert(r.inputRows == 5000)
+    }
+  }
+
   test("the same query run twice in a row is charged identical jobs, stages and tasks") {
     // a listener that holds up the bus, so a query's last events are still
     // queued when its action returns: only the drain at the query boundary
