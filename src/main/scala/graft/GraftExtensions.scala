@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, Limit, LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
 import org.apache.spark.sql.internal.SQLConf
 import graft.functions.{MinHashSig, MortonInterleave, Shingles, SimHash16, SimHashSig, TopKByCount, VecArgminCell, VecDot}
@@ -27,22 +28,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.vecArgminCell)
     ext.injectFunction(GraftExtensions.topKByCount)
     ext.injectFunction(GraftExtensions.mortonInterleave)
+    ext.injectOptimizerRule(_ => SmallSort)
     ext.injectRuntimeOptimizerRule(_ => SmallSort)
   }
 }
 
-/** Adaptive-execution rule: a global sort whose input has been measured to
-  * fit one advisory partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
-  * sorts in one task, `Sort(global = false, Repartition(1, shuffle = false, ..))`.
-  * That plans no range exchange, so the query skips the exchange's
-  * boundary-sampling job and its stage. The total order is the same at any
-  * size; the threshold only decides when one task is cheaper.
+/** Optimizer and adaptive-execution rule: a global sort whose input has
+  * been measured to fit one advisory partition
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) sorts in one task,
+  * `Sort(global = false, Repartition(1, shuffle = false, ..))`. That plans
+  * no range exchange, so the query skips the exchange's boundary-sampling
+  * job and its stage. The total order is the same at any size; the
+  * threshold only decides when one task is cheaper.
   *
   * AQE runs the rule each time a query stage materializes, before it plans
   * the stages above, so the range exchange is not yet created when it
-  * fires. The size is trusted only when every path below the sort ends in a
-  * materialized stage and passes no `Generate` and no join other than a
-  * semi or anti join:
+  * fires. The optimizer runs it once more before any stage exists, which
+  * decides a sort whose input has no exchange below it (a materialized
+  * frame sorted as it is), whose range exchange would otherwise be AQE's
+  * first stage. The size is trusted only when every path below the sort
+  * ends in a materialized stage or a materialized frame and passes no
+  * `Generate` and no join other than a semi or anti join:
+  *   - a materialized frame ([[org.apache.spark.sql.GraftMaterialize]])
+  *     reports its measured row count times its schema's row width, fixed
+  *     when the frame is created, so the decision cannot depend on which
+  *     stage finishes first;
   *   - a scan's size is its compressed file size;
   *   - Spark sizes an explode like its input;
   *   - Spark sizes a join as the product of its inputs' sizes, and a
@@ -68,6 +78,7 @@ object SmallSort extends Rule[LogicalPlan] {
 
   private def measured(p: LogicalPlan): Boolean = p match {
     case stage: LogicalQueryStage => stage.isMaterialized
+    case _: LogicalRDD => true
     case _: Generate => false
     case j: Join if j.joinType != LeftSemi && j.joinType != LeftAnti => false
     case _ => p.children.nonEmpty && p.children.forall(measured)

@@ -1,7 +1,7 @@
 package graft.music
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.operators.Relational.{capacityLedger, topKPerGroup}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's nine topologies (SURVEY.md §2, §7.1), re-expressed as
@@ -33,11 +33,7 @@ object Topologies {
     val counted = listens
       .groupBy(col("customerid"), col("artistid"))
       .agg(count(lit(1)).as("cnt"), min(arrivalCol).as("first_seen"))
-    val w = Window.partitionBy(col("customerid"))
-      .orderBy(col("cnt").desc, col("first_seen").asc)
-    counted
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerGroup(counted, Seq("customerid"), Seq(col("cnt").desc, col("first_seen").asc), k)
       .groupBy(col("customerid"))
       .agg(sort_array(collect_list(struct(col("rank"), col("artistid"), col("cnt"))))
         .as("ranked"))
@@ -55,19 +51,15 @@ object Topologies {
     *
     * `orderCol` pins arrival order (the Kafka partition gave the reference
     * this for free; in Spark it must be an explicit column — SURVEY §7.4.2).
-    * Batch form; the incremental form is
+    * Batch form of [[graft.operators.Relational.capacityLedger]] with each
+    * event's own capacity; the incremental form is
     * [[graft.streaming.StatefulOps.capacityLedger]].
     */
   def purchaseEventTicket(tickets: DataFrame, events: DataFrame, orderCol: Column): DataFrame = {
     val joined = tickets.join(events.select(col("id").as("eventid"), col("capacity")), "eventid")
-    val w = Window.partitionBy(col("eventid")).orderBy(orderCol)
-    joined
-      .withColumn("seq", row_number().over(w))
-      .withColumn("remaining", (col("capacity") - col("seq")).cast("double"))
-      .withColumn("confirmationStatus",
-        when(col("seq") <= col("capacity"), lit("CONFIRMED")).otherwise(lit("REJECTED")))
+    capacityLedger(joined, "eventid", Seq(orderCol), col("capacity"))
       .select(col("id").as("ticketId"), col("customerid"), col("eventid"),
-        col("confirmationStatus"), col("remaining"))
+        col("status").as("confirmationStatus"), col("remaining").cast("double").as("remaining"))
   }
 
   /** Routing of confirmations to sink topics (the 3-way branch,
@@ -96,13 +88,10 @@ object Topologies {
       .agg(first(col("artistName")).as("artistName"), count(lit(1)).as("cnt"))
 
   /** ...and the per-state winner (row_number over the counts). */
-  def topStreamingArtistByState(listens: DataFrame, artists: DataFrame, addresses: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("state")).orderBy(col("cnt").desc, col("artistid").asc)
-    artistStateCounts(listens, artists, addresses)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") === 1)
+  def topStreamingArtistByState(listens: DataFrame, artists: DataFrame, addresses: DataFrame): DataFrame =
+    topKPerGroup(artistStateCounts(listens, artists, addresses),
+      Seq("state"), Seq(col("cnt").desc, col("artistid").asc), 1)
       .drop("rank")
-  }
 
   /** Out-of-state ticket sales per venue (phase3/OutOfStateSales.java:75-161):
     * the 4-way pipeline tickets ⋈ customer-address ⋈ events ⋈ (venues ⋈
@@ -134,8 +123,7 @@ object Topologies {
       .join(eventArtist, "eventid")
       .groupBy(col("venueid"), col("genre"))
       .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("venueid")).orderBy(col("cnt").desc, col("genre").asc)
-    counted.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topKPerGroup(counted, Seq("venueid"), Seq(col("cnt").desc, col("genre").asc), k)
   }
 
   /** Listen count per customer (exercises/stateful/CustomerStreamCount.java). */

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.GraftMaterialize.{materialize, rowCount}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed connected components over an edge list — the cluster-collapse
   * step of a dedup pipeline: near-dup PAIRS (LSH+verify output) become
@@ -20,7 +22,7 @@ import org.apache.spark.sql.functions._
   * materialization barrier (the per-round fixed cost). Each fused round
   * is ONE job: the label projection carries a `chg` flag whose sum is
   * read through `observe()` (a CollectMetrics node evaluated as a side
-  * effect of the round's materializing localCheckpoint — no separate
+  * effect of the round's `materialize` job — no separate
   * convergence-count job).
   * Fully distributed; nothing driver-side except the observed metric —
   * and below a size threshold the whole iteration collapses to a
@@ -39,7 +41,7 @@ import org.apache.spark.sql.functions._
   * it: caching stores the physical data, but each round's logical plan
   * still nests every previous round's, so Catalyst analysis cost compounds
   * until planning dwarfs execution. Each round's labels are therefore
-  * eagerly `localCheckpoint`ed — a fresh leaf plan per round, O(1) planning
+  * `materialize`d — a fresh leaf plan per round, O(1) planning
   * forever (production with fault-tolerance needs: reliable `checkpoint`
   * to durable storage instead).
   *
@@ -48,26 +50,31 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Lossless id/weight widening: integral sub-long columns are cast to
-    * LongType so the single-task fast paths (whose row codecs are
-    * long-keyed) accept them. Entity keys aggregated out of fact tables
-    * routinely arrive as INT (e.g. nation keys) — before round 15 that
-    * silently failed the LongType gate and sent a 25-node graph through
-    * the distributed per-round checkpoint chain (~45 jobs for 5 rounds
-    * at ~60-100 ms/job on this host; measured x11 0.91 s / x17 0.97 s
-    * converged, dominated by scheduling). The cast is exact (int ⊂
+  /** The size route every operator here takes: `cols` of `df`, widened
+    * to long, materialized once (the caller's pipeline never re-runs;
+    * every consumer below reads the stored blocks), and whether the frame
+    * fits the single-task path — long-typed `cols` and at most
+    * `localMaxRows` rows. The row count comes with the materializing job.
+    *
+    * The widening is lossless: integral sub-long columns are cast to
+    * LongType so the single-task paths (whose row codecs are long-keyed)
+    * accept them. Entity keys aggregated out of fact tables routinely
+    * arrive as INT (e.g. nation keys); uncast, they would fail the
+    * LongType gate and send a 25-node graph through the distributed
+    * per-round checkpoint chain (~45 jobs for 5 rounds, dominated by
+    * scheduling). The cast is exact (int ⊂
     * long), applied in BOTH paths, so distributed results are unchanged
     * except the id column's nullable-free widening; non-integral ids
     * (strings) keep their type and keep routing distributed. */
-  private def widen(df: DataFrame, cols: String*): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-    cols.foldLeft(df) { (acc, c) =>
+  private def sized(df: DataFrame, localMaxRows: Long, cols: String*): (DataFrame, Boolean) = {
+    val wide = cols.foldLeft(df.select(cols.map(col): _*)) { (acc, c) =>
       acc.schema(c).dataType match {
-        case IntegerType | ShortType | ByteType =>
-          acc.withColumn(c, col(c).cast("long"))
+        case IntegerType | ShortType | ByteType => acc.withColumn(c, col(c).cast("long"))
         case _ => acc
       }
     }
+    val m = materialize(wide)
+    (m, cols.forall(m.schema(_).dataType == LongType) && rowCount(m) <= localMaxRows)
   }
 
   /** (id, comp) per node of the undirected edge list `edges` (columns
@@ -86,23 +93,19 @@ object Graph {
     * that fit one task — and when one doesn't (the 100 TB case this
     * operator is shaped for), the size check routes it to the
     * distributed iteration unchanged. The check itself is free: the
-    * edge list must be materialized anyway (every round reads it), so
-    * counting it costs one metadata pass over checkpointed blocks. */
+    * edge list must be materialized anyway (every round reads it), and
+    * the job that materializes it counts its rows. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
       localMaxEdges: Long = 4L << 20): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     // ONE materialization of the caller's pair pipeline (often expensive:
     // LSH verify joins, salted cosine self-joins); every consumer below —
     // fast path, iteration rounds, star fallback — reads these blocks.
-    val e0 = widen(edges.select(col("id1"), col("id2")), "id1", "id2")
-      .localCheckpoint(true)
-    val longIds = e0.schema("id1").dataType == LongType &&
-      e0.schema("id2").dataType == LongType
-    if (longIds && e0.count() <= localMaxEdges) return unionFindLocal(e0)
+    val (e0, local) = sized(edges, localMaxEdges, "id1", "id2")
+    if (local) return unionFindLocal(e0)
     val sym = e0
       .union(e0.select(col("id2").as("id1"), col("id1").as("id2")))
-    // per-round labels use eager localCheckpoint: materialize AND cut
-    // lineage (see scaladoc). Dataset.unpersist is a no-op for
+    // per-round labels are materialized: computed once AND lineage cut
+    // (see scaladoc). Dataset.unpersist is a no-op for
     // checkpointed frames (their blocks belong to an internal RDD, not the
     // CacheManager); dropping each round's reference lets ContextCleaner
     // reclaim its blocks after driver GC — bounded by GC cadence, not
@@ -115,10 +118,9 @@ object Graph {
     // near-clique graphs dedup produces (diameter 2-3) this is a third
     // to half of the steps, i.e. one fewer fused round + checkpoint
     // barrier — the dominant per-round cost.
-    var labels = sym.groupBy(col("id1").as("id"))
+    var labels = materialize(sym.groupBy(col("id1").as("id"))
       .agg(min(col("id2")).as("__nmin"))
-      .select(col("id"), least(col("id"), col("__nmin")).as("comp"))
-      .localCheckpoint(true)
+      .select(col("id"), least(col("id"), col("__nmin")).as("comp")))
     var converged = false
     var iter = 1 // the seed consumed one of maxIter's STEPS
     // one propagation step: every node takes the min label among itself
@@ -141,14 +143,13 @@ object Graph {
       // checkpoint). Convergence reads the fused round's net effect —
       // if two steps changed nothing, one step would not have either
       // (labels are monotone non-increasing). The round's ONLY job is
-      // the eager localCheckpoint, and the CollectMetrics node it
-      // executes through carries the signal out as an observed metric.
+      // its materialize, and the CollectMetrics node it executes
+      // through carries the signal out as an observed metric.
       val obs = Observation(s"cc_changed_$iter")
-      val next = step(step(labels.withColumn("prev", col("comp"))))
+      val next = materialize(step(step(labels.withColumn("prev", col("comp"))))
         .withColumn("chg", (col("comp") < col("prev")).cast("long"))
         .observe(obs, sum(col("chg")).as("changed"))
-        .select(col("id"), col("comp"))
-        .localCheckpoint(true)
+        .select(col("id"), col("comp")))
       labels = next // previous round's reference dropped → ContextCleaner
       converged = obs.get("changed").asInstanceOf[Long] == 0L
       iter += 2 // two propagation steps per fused round: maxIter budgets
@@ -216,10 +217,10 @@ object Graph {
     * are the unique fixpoint, so at convergence labels read straight off
     * the edges: (child → root) ∪ (root → root).
     *
-    * Per round: two groupBy-min + join passes over the edge set, eagerly
-    * localCheckpointed (same lineage reasoning as min-label). Convergence =
+    * Per round: two groupBy-min + join passes over the edge set, each
+    * materialized (same lineage reasoning as min-label). Convergence =
     * set equality with the previous round's canonical edge set — checked as
-    * count-equal + empty except, two cheap jobs over materialized blocks.
+    * equal measured row counts + an empty except over materialized blocks.
     */
   def starContractComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
     def canonical(e: DataFrame): DataFrame = e
@@ -227,9 +228,8 @@ object Graph {
       .filter(col("u") =!= col("v"))
       .distinct()
 
-    var e = canonical(
-      edges.select(col("id1").as("u"), col("id2").as("v"))).localCheckpoint(true)
-    var converged = e.isEmpty
+    var e = materialize(canonical(edges.select(col("id1").as("u"), col("id2").as("v"))))
+    var converged = rowCount(e) == 0
     var iter = 0
     while (!converged && iter < maxIter) {
       // large-star: m = min over each node's neighborhood incl. itself;
@@ -241,7 +241,7 @@ object Graph {
       val large = sym.join(mins, "u")
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-      val afterLarge = canonical(large).localCheckpoint(true)
+      val afterLarge = materialize(canonical(large))
       // small-star: orient (hi = u > lo = v); m = min neighbor; hi and all
       // its smaller neighbors link to m. afterLarge is canonical (u < v),
       // so (hi, lo) = (v, u).
@@ -250,10 +250,9 @@ object Graph {
       val small = hi.join(hiMin, "u")
         .select(col("v").as("u"), col("m").as("v")) // smaller neighbors → m
         .union(hiMin.select(col("u"), col("m").as("v"))) // hi itself → m
-      val next = canonical(small).localCheckpoint(true)
+      val next = materialize(canonical(small))
       // set equality on canonical distinct edge lists: |A| = |B| ∧ A∖B = ∅
-      converged = next.count() == e.count() &&
-        next.except(e).isEmpty
+      converged = rowCount(next) == rowCount(e) && next.except(e).isEmpty
       e = next
       iter += 1
     }
@@ -286,7 +285,7 @@ object Graph {
     * list is produced by a fact-scale aggregation (100 TB of facts →
     * |V|² max edge weights), and iterations run on the aggregated edge
     * list only. Each round is one (src-keyed join + dst-keyed aggregate)
-    * over edges — never over facts — with per-round `localCheckpoint`
+    * over edges — never over facts — with per-round `materialize`
     * keeping lineage O(1) exactly as the components loop does. Overflow
     * headroom: pr ≤ |V|·scale and pr·w must stay under 2^63 — callers
     * with fact-count weights beyond ~10^9 should pre-divide weights by a
@@ -296,7 +295,6 @@ object Graph {
       scale: Long = 1000000000L, dampNum: Long = 85L,
       localMaxEdges: Long = 4L << 20): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= 100)
-    import org.apache.spark.sql.types.LongType
     // the aggregated edge list is the iteration's whole input —
     // materialize it once (the fact-scale aggregation behind it must
     // never re-run per round), then size-route exactly like
@@ -304,27 +302,21 @@ object Graph {
     // its `iters` rounds as one imperative loop (integer arithmetic, so
     // the local loop is bit-identical to the join-per-round plan);
     // anything larger iterates distributed.
-    val e0 = widen(edges.select(col("src"), col("dst"), col("w")),
-      "src", "dst", "w").localCheckpoint(true)
-    val nodesW = widen(nodes.select(col("id")), "id")
-    val longT = Seq("src", "dst", "w").forall(e0.schema(_).dataType == LongType) &&
-      nodesW.schema("id").dataType == LongType
-    if (longT && e0.count() <= localMaxEdges && nodesW.count() <= localMaxEdges)
-      return pagerankLocal(e0, nodesW, iters, scale, dampNum)
+    val (e0, localE) = sized(edges, localMaxEdges, "src", "dst", "w")
+    val (nodesW, localN) = sized(nodes, localMaxEdges, "id")
+    if (localE && localN) return pagerankLocal(e0, nodesW, iters, scale, dampNum)
     val wout = e0.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val e = e0.join(wout, "src")
-      .select(col("src"), col("dst"), col("w"), col("wout"))
-      .localCheckpoint(true)
+    val e = materialize(e0.join(wout, "src")
+      .select(col("src"), col("dst"), col("w"), col("wout")))
     val base = (100L - dampNum) * scale / 100L
-    var ranks = nodesW.select(col("id"), lit(scale).as("pr")).localCheckpoint(true)
+    var ranks = materialize(nodesW.select(col("id"), lit(scale).as("pr")))
     for (_ <- 1 to iters) {
       val contrib = e.join(ranks, e("src") === ranks("id"))
         .select(col("dst"), expr("(pr * w) div wout").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      ranks = nodesW.join(contrib, nodesW("id") === contrib("dst"), "left")
+      ranks = materialize(nodesW.join(contrib, nodesW("id") === contrib("dst"), "left")
         .select(nodesW("id"),
-          expr(s"$base + ($dampNum * coalesce(sc, 0L)) div 100").as("pr"))
-        .localCheckpoint(true)
+          expr(s"$base + ($dampNum * coalesce(sc, 0L)) div 100").as("pr")))
     }
     ranks
   }
@@ -385,31 +377,24 @@ object Graph {
     * a frontier-delta refinement (send only newly-improved nodes) would
     * cut re-sends on high-diameter graphs but changes no answers —
     * entity graphs here are shallow, so the simpler relaxation is the
-    * right trade. O(1) lineage via per-round localCheckpoint. */
+    * right trade. O(1) lineage via per-round `materialize`. */
   def bfsLevels(edges: DataFrame, nodes: DataFrame, src: Long,
       iters: Int, localMaxEdges: Long = 4L << 20): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val e = widen(edges.select(col("src").as("eu"), col("dst").as("ev")),
-      "eu", "ev").localCheckpoint(true)
-    val nodesW = widen(nodes.select(col("id")), "id")
     // size-routed like pagerankInt: a one-task entity graph runs its
     // min-relaxation rounds as an in-memory loop with identical levels
-    val longT = e.schema("eu").dataType == LongType &&
-      e.schema("ev").dataType == LongType &&
-      nodesW.schema("id").dataType == LongType
-    if (longT && e.count() <= localMaxEdges && nodesW.count() <= localMaxEdges)
-      return bfsLocal(e, nodesW, src, iters)
-    var levels = nodesW
-      .select(col("id"), when(col("id") === src, 0L).as("lvl"))
-      .localCheckpoint(true)
+    val (e, localE) = sized(edges.select(col("src").as("eu"), col("dst").as("ev")),
+      localMaxEdges, "eu", "ev")
+    val (nodesW, localN) = sized(nodes, localMaxEdges, "id")
+    if (localE && localN) return bfsLocal(e, nodesW, src, iters)
+    var levels = materialize(nodesW
+      .select(col("id"), when(col("id") === src, 0L).as("lvl")))
     for (_ <- 1 to iters) {
       val cand = e.join(levels, e("eu") === levels("id"))
         .filter(col("lvl").isNotNull)
         .select(col("ev").as("id"), (col("lvl") + 1L).as("nl"))
         .groupBy(col("id")).agg(min(col("nl")).as("nl"))
-      levels = levels.join(cand, Seq("id"), "left")
-        .select(col("id"), least(col("lvl"), col("nl")).as("lvl"))
-        .localCheckpoint(true)
+      levels = materialize(levels.join(cand, Seq("id"), "left")
+        .select(col("id"), least(col("lvl"), col("nl")).as("lvl")))
     }
     levels
   }
@@ -504,7 +489,6 @@ object Graph {
     * Output: one row — n_nodes, n_edges, n_wedges, n_triangles,
     * gcc = round4(3·triangles / wedges) (null on a wedge-free graph). */
   def triangleStats(edges: DataFrame, localMaxEdges: Long = 4L << 20): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     // the edge list is read by FOUR plan branches (degree union ×2, the
     // orientation join, the edge-count stat) — materialize it once, or
     // every branch re-executes the caller's edge-building pipeline (for
@@ -512,13 +496,9 @@ object Graph {
     // and exchange reuse does not span all the branch shapes). The
     // materialized frame is |E| rows of two ids — the aggregated entity
     // graph, tiny next to the facts that produced it at any scale.
-    val ec = widen(edges.select(col("u"), col("v")), "u", "v")
-      .localCheckpoint(true)
-    val longIds = ec.schema("u").dataType == LongType &&
-      ec.schema("v").dataType == LongType
-    val nEdges = if (longIds) ec.count() else Long.MaxValue
+    val (ec, local) = sized(edges, localMaxEdges, "u", "v")
     val stats =
-      if (longIds && nEdges > 0 && nEdges <= localMaxEdges) triangleStatsLocal(ec)
+      if (local && rowCount(ec) > 0) triangleStatsLocal(ec)
       else {
         val deg = ec.select(col("u").as("n"))
           .union(ec.select(col("v").as("n")))
@@ -528,10 +508,9 @@ object Graph {
           .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
         val uFirst = col("du") < col("dv") ||
           (col("du") === col("dv") && col("u") < col("v"))
-        val o = e.select(
+        val o = materialize(e.select( // read by the adjacency build AND the edge side
           when(uFirst, col("u")).otherwise(col("v")).as("s"),
-          when(uFirst, col("v")).otherwise(col("u")).as("t"))
-          .localCheckpoint(true) // read by the adjacency build AND the edge side
+          when(uFirst, col("v")).otherwise(col("u")).as("t")))
         // sorted out-adjacency per source; arrays are √(2m)-bounded by the
         // orientation, so collect_list can never explode a partition
         val adj = o.groupBy(col("s"))

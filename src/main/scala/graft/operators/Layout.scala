@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,14 +133,13 @@ object Layout {
     * range, and ONE tiny count job (P rows to the driver — partition
     * COUNTS, never data) yields the prefix offsets that turn local row
     * numbers into exact global ranks. The materialized sort is read
-    * twice (count pass + assignment pass) from a `localCheckpoint`, so
+    * twice (count pass + assignment pass) from one `materialize`, so
     * the sort itself runs once. */
   def rangeNtile(df: DataFrame, nb: Int, sortCols: Seq[Column],
       parts: Int): DataFrame = {
     val spark = df.sparkSession
-    val ranged = df.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint(true)
+    val ranged = materialize(df.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*))
     val counts = ranged.groupBy(spark_partition_id().as("__pid"))
       .agg(count(lit(1)).as("__c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

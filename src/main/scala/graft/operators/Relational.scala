@@ -86,14 +86,16 @@ object Relational {
     * Batch form: a rank over (key, arrival order) — fully declarative, no
     * per-key sequential state, scales as a single shuffle. The streaming
     * form that needs true running state lives in
-    * [[graft.streaming.StatefulOps.capacityLedger]].
+    * [[graft.streaming.StatefulOps.capacityLedger]]. `capacity` is a
+    * column, so it may be a constant (`lit(5)`) or a per-row capacity
+    * joined onto each request.
     */
-  def capacityLedger(df: DataFrame, key: String, order: Seq[Column], capacity: Int): DataFrame = {
+  def capacityLedger(df: DataFrame, key: String, order: Seq[Column], capacity: Column): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(order: _*)
     df.withColumn("seq", row_number().over(w))
       .withColumn("status",
         when(col("seq") <= capacity, lit("CONFIRMED")).otherwise(lit("REJECTED")))
-      .withColumn("remaining", lit(capacity) - col("seq"))
+      .withColumn("remaining", capacity - col("seq"))
   }
 
   /** Content-based routing (SURVEY §2.3 P6, reference `split()/branch()` at

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -151,8 +152,8 @@ object Similarity {
     *     float sums in shuffled order are not bit-reproducible across
     *     engines, rounded means are.
     *
-    * Each round's centroid table (k × dims doubles — tiny) is eagerly
-    * localCheckpointed: the next round's plan references a materialized
+    * Each round's centroid table (k × dims doubles — tiny) is
+    * materialized: the next round's plan references a materialized
     * leaf, so lineage stays O(1) in `rounds` and the final assignment plan
     * contains exactly one corpus scan. Per-round cost at scale is one pass
     * over the corpus (broadcast k·dims centroids, argmin in the scan
@@ -193,19 +194,17 @@ object Similarity {
     // seed = k smallest ids (TakeOrdered — no full sort), labeled by rank:
     // the k-row window is a single tiny partition, not a scale concern
     val w0 = Window.orderBy(col("vec_id"))
-    var centArr = packed(
+    var centArr = materialize(packed(
       vecs.orderBy(col("vec_id")).limit(k)
         .withColumn("cluster", (row_number().over(w0) - 1).cast("int"))
         .select(col("cluster"),
-          transform(col("v"), x => Relational.round4(x)).as("c")))
-      .localCheckpoint(true)
+          transform(col("v"), x => Relational.round4(x)).as("c"))))
     for (_ <- 1 to rounds) {
-      centArr = packed(
+      centArr = materialize(packed(
         assign(centArr)
           .groupBy(col("cluster"))
           .agg(array((1 to dims).map(i =>
-            Relational.round4(avg(element_at(col("v"), i)))): _*).as("c")))
-        .localCheckpoint(true)
+            Relational.round4(avg(element_at(col("v"), i)))): _*).as("c"))))
     }
     val centroids = centArr
       .select(explode(col("cents")).as("ct"))
@@ -214,16 +213,15 @@ object Similarity {
   }
 
   /** [[pcaTrainAxis]]'s centering stage: (vec_id, x) with x the
-    * round4'd-mean-centered embedding, localCheckpoint'd — the frame the
+    * round4'd-mean-centered embedding, materialized — the frame the
     * training rounds and the projection both scan. */
   def pcaCentered(corpus: DataFrame, dims: Int): DataFrame = {
     val vecs = corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val mu = vecs.agg(array((1 to dims).map(i =>
       Relational.round4(avg(element_at(col("v"), i)))): _*).as("mu"))
-    vecs.crossJoin(broadcast(mu))
+    materialize(vecs.crossJoin(broadcast(mu))
       .select(col("vec_id"),
-        zip_with(col("v"), col("mu"), (a, b) => a - b).as("x"))
-      .localCheckpoint(true)
+        zip_with(col("v"), col("mu"), (a, b) => a - b).as("x")))
   }
 
   /** Top principal component by POWER ITERATION, fully in-plan — the
@@ -238,7 +236,7 @@ object Similarity {
     * literal array: no per-round checkpoint or broadcast exchange, just
     * one aggregate job per round. At 100 TB each round still shuffles d
     * doubles per task; the corpus is scanned once per round from the
-    * centered localCheckpoint. Round-to-round state (the axis) is
+    * materialized centered frame. Round-to-round state (the axis) is
     * round4-quantized exactly like [[kmeans]]'s centroids, so
     * partial-aggregation order cannot perturb the chain and the oracle
     * replays it verbatim. Start axis = uniform 1/8 (exact), non-orthogonal
@@ -424,11 +422,10 @@ object Similarity {
       .select(col("vec_id"))
       .orderBy(col("vec_id")).limit(maxK)
       .withColumn("cluster", (row_number().over(w0) - 1).cast("int"))
-    var cent = vecs.join(broadcast(seedIds), Seq("vec_id"))
+    var cent = materialize(vecs.join(broadcast(seedIds), Seq("vec_id"))
       .filter(col("cluster") < kOfSub)
       .select(col("sub"), col("cluster"),
-        transform(col("v"), x => Relational.round4(x)).as("c"))
-      .localCheckpoint(true)
+        transform(col("v"), x => Relational.round4(x)).as("c")))
     for (r <- 1 to subRounds.max) {
       val active = subRounds.indices.filter(i => subRounds(i) >= r)
       val inVecs =
@@ -442,7 +439,7 @@ object Similarity {
       val next =
         if (active.size == nSub) updated
         else updated.unionAll(cent.filter(!col("sub").isInCollection(active)))
-      cent = next.localCheckpoint(true)
+      cent = materialize(next)
     }
     (assign(cent, vecs), cent)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + deduplication operators for LLM training-data pipelines.
@@ -108,13 +109,13 @@ object TextOps {
 
   /** Self-join of a band frame into candidate pairs (id1 < id2). */
   def candidatesFromBands(bandFrame: DataFrame): DataFrame = {
-    // eager localCheckpoint: the band frame feeds BOTH sides of the
+    // materialized: the band frame feeds BOTH sides of the
     // self-join; without materialization Spark recomputes the whole
     // signature pipeline twice. The materialized frame is numBands rows ×
     // ~40 B per doc — the standard LSH trade at any scale (blocks spill to
     // executor disk if they outgrow memory, and are reclaimed when the
     // frame's reference dies — nothing stays pinned in the CacheManager).
-    val withBands = bandFrame.localCheckpoint(true)
+    val withBands = materialize(bandFrame)
     val a = withBands.as("a")
     val b = withBands.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
@@ -186,8 +187,8 @@ object TextOps {
       train: DataFrame, eval: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5,
       numHashes: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val tsh = shingleFrame(train, idCol, textCol).localCheckpoint(true)
-    val esh = shingleFrame(eval, idCol, textCol).localCheckpoint(true)
+    val tsh = materialize(shingleFrame(train, idCol, textCol))
+    val esh = materialize(shingleFrame(eval, idCol, textCol))
     val tb = bandsFromShingles(tsh, numHashes, rowsPerBand)
       .select(col("doc_id").as("train_id"), col("band"), col("bk"))
     val eb = bandsFromShingles(esh, numHashes, rowsPerBand)
@@ -269,13 +270,12 @@ object TextOps {
       struct(lit(b).as("band"),
         shiftright(col("sig"), 8 * b).bitwiseAND(lit(255L)).as("bits"))
     }
-    // eager localCheckpoint: the band frame feeds both sides of the
+    // materialized: the band frame feeds both sides of the
     // self-join (same materialize-don't-pin reasoning as
     // candidatesFromBands); 4 rows × ~24 B per canonical doc
-    val bands = sigs
+    val bands = materialize(sigs
       .select(col("doc_id"), col("sig"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("doc_id"), col("sig"), col("b.band").as("band"), col("b.bits").as("bits"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("sig"), col("b.band").as("band"), col("b.bits").as("bits")))
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -451,13 +451,12 @@ object TextOps {
     // the unigram/vocab statistics (coalescing to '' would inject an ''
     // token and shift every doc's smoothed log-prob); its output row is
     // restored by the final left join instead
-    val toks = docs.repartition(col(idCol))
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__t"))
-      .localCheckpoint(true)
+    val toks = materialize(docs.repartition(col(idCol))
+      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__t")))
     // size-0 guard: sequence(0, -1) DESCENDS and would fabricate rows;
     // null __t flows to the otherwise-branch, transform(null) -> null,
     // explode(null) drops the row — null-text docs contribute nothing
-    val g = toks
+    val g = materialize(toks
       .select(col("doc_id"),
         explode(when(size(col("__t")) < 1,
           array().cast("array<struct<w1:string,w2:string>>"))
@@ -466,11 +465,9 @@ object TextOps {
           .as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n")))
     val dbf = g.filter(col("w2").isNotNull)
-    val uf = g.groupBy(col("w1")).agg(sum(col("n")).as("uc"))
-      .localCheckpoint(true)
+    val uf = materialize(g.groupBy(col("w1")).agg(sum(col("n")).as("uc")))
     val vocab = uf.agg(count(lit(1)).as("vocab"))
     val bc = dbf.groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("bc"))
     // Measured NON-WIN (round 9, interleaved A/B, bit-identical output):
@@ -653,7 +650,7 @@ object TextOps {
     * rounds' replaces fused into the scan stage) + one pair-keyed count
     * whose exchange is bounded by the live alphabet squared + a 1-row
     * argmax that broadcasts back into the next round's scan. The argmax is
-    * localCheckpointed — 1 row — so round i's plan does not re-derive
+    * materialized — 1 row — so round i's plan does not re-derive
     * rounds 1..i-1's counts. At 100 TB a real ~30k-merge training runs
     * this loop on a hash-sample of the corpus ([[hashSample]]'s idiom) and
     * ships the merge table as a broadcast artifact; the loop body is this
@@ -662,9 +659,8 @@ object TextOps {
     require(iters >= 1 && iters <= 32, s"sentinel range supports 32 rounds, got $iters")
     var toks = docs.select(explode(tokens(col(textCol))).as("__w"))
     val steps = (0 until iters).map { i =>
-      val top1 = adjacentPairCounts(toks)
-        .orderBy(col("cnt").desc, col("pair")).limit(1)
-        .localCheckpoint(true) // 1 row: the chosen merge
+      val top1 = materialize(adjacentPairCounts(toks) // 1 row: the chosen merge
+        .orderBy(col("cnt").desc, col("pair")).limit(1))
       val sentinel = new String(Character.toChars(0xE000 + i))
       toks = toks
         .crossJoin(broadcast(top1.select(col("pair").as("__m"))))

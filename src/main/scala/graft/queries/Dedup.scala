@@ -3,12 +3,13 @@ package graft.queries
 import graft.{SessionMemo, Tables}
 import graft.operators.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.functions.col
 
 /** Session-scoped memoized fixtures for the document-dedup chain — the
   * text-side twin of [[Models]] (same [[SessionMemo]] contract: train/build
   * ONCE per (SparkContext, dataset dir), hand every consumer the
-  * localCheckpoint'd frame, nothing pinned in the CacheManager).
+  * materialized frame, nothing pinned in the CacheManager).
   *
   * The chain canonical docs → shingles → verified pairs → components is
   * fully deterministic (md5 fingerprints, min-id canonical choice, exact
@@ -33,29 +34,27 @@ object Dedup {
     * — the frame every near-dup stage starts from (identical docs would
     * otherwise share all LSH bands and quadratically flood one bucket). */
   def canonDocs(s: SparkSession, d: String): DataFrame = memo(s, d, "dd:canon") {
-    TextOps.canonicalDocs(Tables.documents(s, d), "doc_id", "text")
-      .localCheckpoint(true)
+    materialize(TextOps.canonicalDocs(Tables.documents(s, d), "doc_id", "text"))
   }
 
   /** One shingle pass over the canonical docs — feeds LSH banding (d2,
     * d11, the pair pipeline) and the exact-Jaccard verification joins. */
   def shingles(s: SparkSession, d: String): DataFrame = memo(s, d, "dd:shingles") {
-    TextOps.shingleFrame(canonDocs(s, d), "doc_id", "text").localCheckpoint(true)
+    materialize(TextOps.shingleFrame(canonDocs(s, d), "doc_id", "text"))
   }
 
   /** LSH-candidate pairs verified at exact shingle Jaccard ≥ 0.8 —
     * `(id1, id2, j)` unsorted, the production geometry (16 hashes,
     * 4 rows/band). d3 presents it; d6/d10/c1 collapse it. */
   def verifiedPairs(s: SparkSession, d: String): DataFrame = memo(s, d, "dd:pairs") {
-    TextQueries.verifiedPairsFromShingles(shingles(s, d)).localCheckpoint(true)
+    materialize(TextQueries.verifiedPairsFromShingles(shingles(s, d)))
   }
 
   /** Connected-component labels `(id, comp)` over the verified pairs —
     * the cluster collapse d6/d10/c1 share. */
   def components(s: SparkSession, d: String): DataFrame = memo(s, d, "dd:comps") {
-    graft.operators.Graph
-      .connectedComponents(verifiedPairs(s, d).select(col("id1"), col("id2")))
-      .localCheckpoint(true)
+    materialize(graft.operators.Graph
+      .connectedComponents(verifiedPairs(s, d).select(col("id1"), col("id2"))))
   }
 
   /** The trained 3-round BPE merge table ([[TextOps.bpeTrainMerges]]) over
@@ -64,7 +63,6 @@ object Dedup {
     * argmax), and train-once/apply-many is the tokenizer deployment
     * contract the operators already document. 3 rows. */
   def bpeMerges(s: SparkSession, d: String): DataFrame = memo(s, d, "dd:bpe") {
-    TextOps.bpeTrainMerges(Tables.documents(s, d), "text", 3)
-      .localCheckpoint(true)
+    materialize(TextOps.bpeTrainMerges(Tables.documents(s, d), "text", 3))
   }
 }

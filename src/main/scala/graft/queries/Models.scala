@@ -1,8 +1,10 @@
 package graft.queries
 
-import graft.{SessionMemo, Tables}
+import graft.Tables
+import graft.SessionMemo.memo
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 
 /** Session-scoped memoized model fixtures for the embedding-family gates.
   *
@@ -14,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * coarse quantizer and the raw PQ codebooks in one fused multi-chain run
   * ([[Similarity.coarsePqAll]]: one barrier set per Lloyd round for all
   * chains), the residual PQ chain after it (it depends on the finished
-  * coarse centroids) — and hands every consumer the localCheckpoint'd
+  * coarse centroids) — and hands every consumer the materialized
   * frames. Search/dedup/evaluation gates then measure their own work, the
   * same contract a production deployment gets from a persisted model store
   * (`ModelPersistenceSpec` proves the parquet round-trip).
@@ -42,9 +44,6 @@ object Models {
     * the [[CoarsePq]] fixture's coarse model (same geometry). */
   final case class ResidualPq(codes: DataFrame, books: DataFrame)
 
-  private def memo[T <: AnyRef](s: SparkSession, d: String, tag: String)(build: => T): T =
-    SessionMemo.memo(s, d, tag)(build)
-
   import SimilarityQueries.{KmeansDims, KmeansK, KmeansRounds, PqK, PqM, PqRounds}
 
   def coarsePq(s: SparkSession, d: String): CoarsePq = memo(s, d, "coarsePq") {
@@ -52,7 +51,7 @@ object Models {
       Tables.embeddings(s, d), KmeansK, KmeansRounds, PqM, PqK, PqRounds, KmeansDims)
     // ONE final-assignment scan serves every consumer; the books are tiny
     val (assigned, centroids, codes, pqBooks) =
-      Similarity.splitCoarsePq(all.localCheckpoint(true), books.localCheckpoint(true), PqM)
+      Similarity.splitCoarsePq(materialize(all), materialize(books), PqM)
     CoarsePq(assigned, centroids, codes, pqBooks)
   }
 
@@ -61,7 +60,7 @@ object Models {
     * distances, (d2, n_id) ranking), so one checkpointed copy serves every
     * evaluation gate; each oracle still replays its own. */
   def l2Truth5(s: SparkSession, d: String): DataFrame = memo(s, d, "l2Truth5") {
-    SimilarityQueries.l2Truth(s, d, 5).localCheckpoint(true)
+    materialize(SimilarityQueries.l2Truth(s, d, 5))
   }
 
   /** m=4 PQ fixture — e19's finer-geometry comparison arm (the session's
@@ -72,7 +71,7 @@ object Models {
   def pqM4(s: SparkSession, d: String): PqM4 = memo(s, d, "pqM4") {
     val (codes, books) = Similarity.pqModel(
       Tables.embeddings(s, d), 4, PqK, PqRounds, KmeansDims)
-    PqM4(codes.localCheckpoint(true), books.localCheckpoint(true))
+    PqM4(materialize(codes), materialize(books))
   }
 
   /** Fused permutation-PQ fixture for e20: PQ codes trained under the
@@ -92,8 +91,7 @@ object Models {
         array(perm.map(i => element_at(col("embedding"), i)): _*).as("embedding"))
       Similarity.slicedVecs(permuted, PqM, subLen, pi * PqM)
     }.reduce(_ unionAll _)
-    Similarity.pqModelFrom(vecs, PqK, PqRounds, subLen, others.size * PqM)
-      ._1.localCheckpoint(true)
+    materialize(Similarity.pqModelFrom(vecs, PqK, PqRounds, subLen, others.size * PqM)._1)
   }
 
   /** PCA fixture for e23: the centered corpus (checkpointed) plus the
@@ -117,9 +115,9 @@ object Models {
     val cp = coarsePq(s, d)
     val subLen = KmeansDims / PqM
     // the residual corpus IS the encoded data — materialized once
-    val resid = Similarity.residualsFrom(cp.assigned, cp.centroids).localCheckpoint(true)
+    val resid = materialize(Similarity.residualsFrom(cp.assigned, cp.centroids))
     val (codes, books) = Similarity.pqModelFrom(
       Similarity.slicedVecs(resid, PqM, subLen, 0), PqK, PqRounds, subLen, PqM)
-    ResidualPq(codes.localCheckpoint(true), books.localCheckpoint(true))
+    ResidualPq(materialize(codes), materialize(books))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{SessionMemo, Tables}
 import graft.operators.Relational._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -277,7 +278,7 @@ object RelationalQueries {
     * negative — batch window form; streaming form in graft.streaming. */
   def a2CapacityLedger(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).withColumn("ts_us", col("ts"))
-    capacityLedger(ev, "user_id", Seq(col("ts_us").asc, col("event_id").asc), 5)
+    capacityLedger(ev, "user_id", Seq(col("ts_us").asc, col("event_id").asc), lit(5))
       .select(col("user_id"), col("event_id"), col("seq"), col("status"), col("remaining"))
       .orderBy(col("user_id"), col("seq"))
   }
@@ -662,7 +663,7 @@ object RelationalQueries {
     * Oracles are unaffected — DuckDB replays the 4-way join per gate. */
   private def tradeFlowEdges(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "rel:tradeflow") {
-      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
+      materialize(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
@@ -670,8 +671,7 @@ object RelationalQueries {
         .join(Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey")),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true)
+        .agg(count(lit(1)).as("w")))
     }
 
   /** Single-source BFS levels over the trade graph (x17,
@@ -740,7 +740,7 @@ object RelationalQueries {
     * replays its full chain from parquet). */
   private[queries] def mortonHist(s: SparkSession, d: String): DataFrame =
     SessionMemo.memo(s, d, "mortonHist") {
-      mortonHistBuild(s, d).localCheckpoint(true)
+      materialize(mortonHistBuild(s, d))
     }
 
   /** The histogram build EXPRESSION the fixture checkpoints — the only
@@ -1183,8 +1183,7 @@ object RelationalQueries {
     val ev = Tables.events(s, d)
     // one distinct (type, user) collapse feeds the exact twin AND both
     // sketch paths: three consumers, one events scan
-    val tu = ev.select(col("event_type"), col("user_id")).distinct()
-      .localCheckpoint(true)
+    val tu = materialize(ev.select(col("event_type"), col("user_id")).distinct())
     val exact = tu.select(col("event_type").as("type_a"), col("user_id"))
       .join(tu.select(col("event_type").as("type_b"), col("user_id")), "user_id")
       .filter(col("type_a") < col("type_b"))
@@ -1242,13 +1241,12 @@ object RelationalQueries {
     * [[graft.operators.Sketch]] for why construction is one mergeable
     * groupBy and the grid broadcasts at any input size. The per-user
     * aggregate feeds the grid, the probes, and the exact column, so it is
-    * eagerly localCheckpointed — three consumers, one events scan, nothing
+    * materialized — three consumers, one events scan, nothing
     * left pinned in the cache. */
   def a9CmsTopk(s: SparkSession, d: String): DataFrame = {
     val width = 64
-    val perUser = Tables.events(s, d)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val perUser = materialize(Tables.events(s, d)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n")))
     val grid = graft.operators.Sketch.cmsGrid(perUser, "user_id", "n", width)
     val est = graft.operators.Sketch.cmsEstimate(
       perUser.select(col("user_id")), "user_id", grid, width)

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Similarity._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.functions._
 
 /** Similarity-search operators over the `embeddings` table. */
@@ -369,13 +370,12 @@ object SimilarityQueries {
     val cp = Models.coarsePq(s, d)
     val rp = Models.residualPq(s, d)
     // compressed-domain shortlist: IVFADC (e17's search, same model) at
-    // topK = 20; checkpointed — two consumers (adc@5 arm + re-rank arm)
+    // topK = 20; materialized — two consumers (adc@5 arm + re-rank arm)
     // must not re-run the ADC join
-    val shortlist = graft.operators.Similarity.ivfAdcResidualSearchFrom(
+    val shortlist = materialize(graft.operators.Similarity.ivfAdcResidualSearchFrom(
       cp.assigned, cp.centroids, rp.codes, rp.books, queriesSide(s, d),
       PqM, KmeansDims / PqM, topK = 20, nprobe = 2)
-      .select(col("q_id"), col("n_id"), col("rank"))
-      .localCheckpoint(true)
+      .select(col("q_id"), col("n_id"), col("rank")))
     val q = queriesSide(s, d)
       .select(col("vec_id").as("q_id"),
         col("embedding").cast("array<double>").as("qe"))
@@ -499,11 +499,11 @@ object SimilarityQueries {
         .cast("decimal(18,4)").as("sqr"))
         .agg(sum(col("sqr")).cast("double").as("total_err"))
         .select(lit(permName).as("perm"), col("total_err"))
-    val all = (total(idCodes, "identity") +: others.zipWithIndex.map {
+    // 4 rows; read three times below
+    val all = materialize((total(idCodes, "identity") +: others.zipWithIndex.map {
       case ((name, _), pi) =>
         total(codes.filter(col("sub") >= pi * PqM && col("sub") < (pi + 1) * PqM), name)
-    }).reduce(_ unionAll _)
-      .localCheckpoint(true) // 4 rows; read three times below
+    }).reduce(_ unionAll _))
     all
       .crossJoin(broadcast(all.filter(col("perm") === "identity")
         .select(col("total_err").as("__id"))))
@@ -530,8 +530,7 @@ object SimilarityQueries {
     * variance-ratio — the serving work. */
   def e23PcaProject(s: SparkSession, d: String): DataFrame = {
     val m = Models.pcaAxis(s, d, rounds = 6, dims = KmeansDims)
-    val p = graft.operators.Similarity.pcaProjectFrom(m.centered, m.ax)
-      .localCheckpoint(true)
+    val p = materialize(graft.operators.Similarity.pcaProjectFrom(m.centered, m.ax))
     val ratio = p.agg(
       (sum(graft.operators.Relational.round4(col("proj") * col("proj"))
           .cast("decimal(18,4)")).cast("double")

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.TextOps._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.functions._
 
 /** LLM training-data pipeline operators over the `documents` table
@@ -183,9 +184,9 @@ object TextQueries {
   def d11LshDial(s: SparkSession, d: String): DataFrame = {
     val sh = Dedup.shingles(s, d)
     def cands(rpb: Int): DataFrame =
-      candidatesFromBands(bandsFromShingles(sh, 16, rpb)).localCheckpoint(true)
+      materialize(candidatesFromBands(bandsFromShingles(sh, 16, rpb)))
     // Each geometry's verified count feeds BOTH its stats row and the
-    // recall-monotonicity check — checkpoint the 1-row count so the
+    // recall-monotonicity check — materialize the 1-row count so the
     // candidate⋈shingle verify join runs once per geometry, not twice.
     // The two geometries are independent band→candidate→verify chains
     // over the same checkpointed shingle fixture, so their materializing
@@ -193,7 +194,7 @@ object TextQueries {
     // four checkpoint latencies end to end.
     def chain(rpb: Int): (DataFrame, DataFrame) = {
       val c = cands(rpb)
-      (c, verifyPairs(c, sh).agg(count(lit(1)).as("n_verified")).localCheckpoint(true))
+      (c, materialize(verifyPairs(c, sh).agg(count(lit(1)).as("n_verified"))))
     }
     val Seq((c4, v4), (c2, v2)) = {
       import scala.concurrent.{Await, Future, blocking}
@@ -447,11 +448,10 @@ object TextQueries {
     * (no smoothing needed — the gate's KL is exact, not estimated). */
   def t25SourceKl(s: SparkSession, d: String): DataFrame = {
     val grid = 1048576.0 // 2^20
-    val st = Tables.documents(s, d)
+    val st = materialize(Tables.documents(s, d) // three re-sums below share the one count
       .select(col("source"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token"))
-      .agg(count(lit(1)).as("cs"))
-      .localCheckpoint(true) // three re-sums below share the one count
+      .agg(count(lit(1)).as("cs")))
     val stot = st.groupBy(col("source")).agg(sum(col("cs")).as("ts"))
     val ct = st.groupBy(col("token")).agg(sum(col("cs")).as("cc"))
     val ctot = st.agg(sum(col("cs")).as("tc"))
@@ -766,15 +766,13 @@ object TextQueries {
     // (doc_id+lang — survivor-count-sized, never text) and the heavy
     // filter runs exactly one time. temperatureMix reads only (doc_id,
     // lang), so the projection is semantics-preserving.
-    val kept = docs.join(
+    val kept = materialize(docs.join(
       gopherRules(docs, "doc_id", "text").filter(col("keep"))
         .select(col("doc_id")),
       "doc_id")
-      .select(col("doc_id"), col("lang"))
-      .localCheckpoint(true)
-    val sampled = temperatureMix(kept, "doc_id", "lang")
-      .select(col("doc_id"), col("lang"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("lang")))
+    val sampled = materialize(temperatureMix(kept, "doc_id", "lang")
+      .select(col("doc_id"), col("lang")))
     val chunks = chunkTokens(
       docs.join(sampled.select(col("doc_id")), "doc_id"), "doc_id", "text",
       chunkSize = 32, overlap = 8)

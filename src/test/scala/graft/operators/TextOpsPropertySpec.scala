@@ -212,7 +212,7 @@ class TextOpsPropertySpec extends SparkSpec {
     val rows = for (k <- 0 until 8; i <- 0 until (k * 3 % 11) + 1)
       yield (s"k$k", i.toLong)
     val df = rows.toDF("key", "seq")
-    val out = Relational.capacityLedger(df, "key", Seq(col("seq").asc), 5)
+    val out = Relational.capacityLedger(df, "key", Seq(col("seq").asc), lit(5))
       .select("key", "status").as[(String, String)].collect()
     out.groupBy(_._1).foreach { case (k, vs) =>
       val n = vs.length

@@ -3,7 +3,7 @@ package graft.queries
 import graft.SparkSpec
 
 /** The catalog's session contract: a query may MATERIALIZE intermediates
-  * (eager localCheckpoint — blocks reclaimed by ContextCleaner when the
+  * (`materialize`, a local checkpoint — blocks reclaimed by ContextCleaner when the
   * frame's reference dies), but must never leave anything PINNED in the
   * CacheManager, where only an explicit unpersist/clearCache would free it.
   * A long-lived interactive session running catalog queries therefore

@@ -247,7 +247,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("NO catalog query plans a CartesianProduct (broadcast NLJ of tiny frames is the only cross-join form)") {
     // "explainString" itself only plans, but CONSTRUCTING some frames
-    // (kmeans/PQ/LSH families) runs their eager localCheckpoint training
+    // (kmeans/PQ/LSH families) runs their materializing training
     // jobs first — on sf0.001 that keeps the sweep under a minute, and
     // the asserted plans are the post-checkpoint tails of each query.
     // Every deliberate crossJoin in this repo is crossJoin(broadcast(tiny))
@@ -303,6 +303,25 @@ class PlanShapeSpec extends SparkSpec {
       assert(p.contains("rangepartitioning"), s"$name's sort above a $node went to one task:\n$p")
       // once the range stage has run, a one-task sort would only repeat its work
       assert(!p.contains("Coalesce"), s"$name sorts its range-partitioned output again in one task:\n$p")
+    }
+  }
+
+  test("a sort of a materialized frame runs as one task: its size is fixed when the frame is made") {
+    // t21 sorts the 3-row BPE merge table as it is, so no stage below the
+    // sort exists for AQE to measure; the optimizer decides it from the
+    // frame's measured statistics
+    val (rows, p) = runFinal("t21_bpe_train")
+    assert(rows.size == 3, s"t21's merge table changed size: $rows")
+    assert(!p.contains("rangepartitioning"), s"t21's sort still range-partitions:\n$p")
+  }
+
+  test("no runtime bloom filter is planned against the IVFADC fixtures' small probe sides") {
+    // the residual-PQ codes and books are materialized with measured
+    // sizes; sized by their origin plans' estimates, Spark injected a
+    // 1,000,000-item bloom_filter_agg subquery checked against 20 rows
+    for (name <- Seq("e17_ivfadc_search", "e18_ivfadc_recall")) {
+      val p = plan(name)
+      assert(!p.contains("bloom_filter_agg"), s"$name plans a runtime bloom filter:\n$p")
     }
   }
 
